@@ -5,8 +5,8 @@ Why a cuckoo option at all: a crawl that *retires* URLs (robots change,
 host blocklisted, TTL re-crawl) needs deletions, which Bloom filters
 cannot do. The per-bucket layout is identical to the Bloom path — one
 blob per hash bucket, built bucket-locally, OR-incompatible so merging
-uses insert-replay — and membership testing plugs into the same
-broadcast / cogroup strategies in operators/seen_set.py.
+uses insert-replay — and membership testing has the same per-bucket
+shape as ``bloom_test_blob`` in operators/seen_set.py.
 
 Standard 4-way, partial-key cuckoo filter (Fan et al., CoNEXT'14 —
 public algorithm): f-bit fingerprints, bucket pair (i1, i2 = i1 XOR

@@ -1,24 +1,26 @@
 """Fused bucket-local frontier step: dedup + seen-filter + politeness
 schedule in ONE exchange.
 
-The composed path (plans/crawl.py) expresses the frontier step as four
-Catalyst operators — dedup ``groupBy(url_hash)``, Bloom UDF, exact
-``left_anti`` join, two ranking windows — which costs four shuffles of the
-candidate set. But every one of those operators keys on something that is
-constant within a ``host_bucket``: spellings of the same URL share a host
-(canonicalization fixes the spelling, not the site), the seen-set shard
-is per-bucket, and the politeness top-k partitions by host. So the whole
-step runs bucket-locally:
+This is the crawl engine's only frontier step (plans/crawl.py runs it
+once per generation, streaming/micro_batch.py once per micro-batch).
+Expressed as Catalyst operators it would be a dedup
+``groupBy(url_hash)``, a seen-set ``left_anti`` join and ranking
+windows — one shuffle of the candidate set each. But every one of those
+operators keys on something that is constant within a ``host_bucket``:
+spellings of the same URL share a host (canonicalization fixes the
+spelling, not the site), the seen-set shard is per-bucket, and the
+politeness top-k partitions by host. So the whole step runs
+bucket-locally:
 
     candidates ──exchange(host_bucket)──┐
-                                        ├─ cogroup.applyInPandas ──> rows
-    state (seen ∪ robots ∪ quota rows,  ┘       (numpy kernels)
+                                        ├─ cogroup.applyInArrow ──> rows
+    state (seen ∪ robots ∪ quota rows,  ┘   (numpy + Arrow kernels)
            pre-bucketed / bucketed table)
 
-with per-bucket work all vectorized numpy/pandas: sort-dedup keeping min
-priority, exact-seen membership via ``searchsorted`` on the cogrouped
-shard (an optional broadcast Bloom blob pre-filters the probe set),
-robots disallow prefixes, per-host priority rank -> budget cut +
+with per-bucket work all vectorized numpy/pyarrow.compute: sort-dedup
+keeping min priority, exact-seen membership via ``searchsorted`` on the
+cogrouped shard (an optional broadcast Bloom blob pre-filters the probe
+set), robots disallow prefixes, per-host priority rank -> budget cut +
 crawl-delay offsets.
 
 The state side is ONE tagged table: ``tag='s'`` rows are the exact
@@ -36,9 +38,9 @@ rows (deferred from earlier generations) that bypass dedup + seen-filter
 but compete in the politeness ranking. Their minted priorities are always
 smaller than any future priority, so ranking by ``(is_new, priority,
 url_hash)`` — where new rows carry the packed ``(parent_priority, slot)``
-discovery key as ``priority`` — produces exactly the per-host order the
-composed path gets after global priority minting (rank minting is
-monotone in that key; see plans/crawl.py).
+discovery key as ``priority`` — produces exactly the per-host order of
+the priorities minted afterwards (rank minting is monotone in that key;
+see plans/crawl.py).
 
 Skew: a mega-host (the reference's world is literally one-site-per-
 crawler, SURVEY.md §4.2) concentrates its candidates in ONE bucket, and
@@ -64,17 +66,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import fnv64, pmod_bucket
-from ..functions.urls import url_host
+from ..functions.urls import _HOST_RE_PA
 from .scheduler import SchedulerConfig
 from .seen_set import BloomParams, bloom_build_blob, bloom_test_blob
 
-try:
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    _HAS_PA = True
-except ImportError:  # pragma: no cover
-    _HAS_PA = False
+import pyarrow as pa
+import pyarrow.compute as pc
 
 OUT_COLS = ["url_hash", "url_canon", "host", "host_bucket", "priority",
             "is_new", "retry_count", "status", "host_rank", "fetch_offset_ms"]
@@ -188,10 +185,6 @@ def build_host_bucket_blobs(
     return {r["host_bucket"]: bytes(r["filter"]) for r in rows}
 
 
-def _empty_out(cols=None) -> pd.DataFrame:
-    return pd.DataFrame(columns=cols or OUT_COLS)
-
-
 def fused_filter_schedule(
     spark: SparkSession,
     candidates: DataFrame,
@@ -206,7 +199,6 @@ def fused_filter_schedule(
     n_host_buckets: int | None = None,
     n_salts: int = 1,
     state: DataFrame | None = None,
-    use_arrow: bool | None = None,
     emit_strings: str = "all",
 ) -> DataFrame:
     """candidates (url_hash,url_canon,host,host_bucket,priority[,is_new]) ×
@@ -239,10 +231,10 @@ def fused_filter_schedule(
     bucketed checkpoint snapshot) to skip the union assembly and keep the
     state side's bucketed partitioning for exchange elision.
 
-    ``use_arrow`` selects the kernel: ``applyInArrow`` (default when
-    pyarrow is importable — URL strings never materialize as Python
-    objects) or the pandas twin (fallback + differential-test oracle;
-    same values, equivalence-tested in tests/test_fused_schedule.py).
+    The kernel runs under ``applyInArrow``: URL strings stay in Arrow
+    buffers end-to-end and never materialize as Python objects (a pandas
+    rendering of the same kernel is the differential oracle in
+    tests/fused_oracles.py).
 
     ``emit_strings`` trims the output Arrow hop (hash/flag columns are
     always emitted for every row, bit-identical across modes):
@@ -294,176 +286,9 @@ def fused_filter_schedule(
     default_delay, default_budget = cfg.default_delay_ms, cfg.default_budget
     total_budget = total_budget_per_host
 
-    def run(cand: pd.DataFrame, st: pd.DataFrame) -> pd.DataFrame:
-        out_cols = OUT_COLS + (["crawl_delay_ms", "budget_eff"] if salted else [])
-        if len(cand) == 0:
-            return _empty_out(out_cols)
-        if not has_host:
-            cand = cand.assign(host=url_host(cand["url_canon"]))
-        elif cand["host"].isna().any():
-            # a caller-supplied host column may carry nulls (their own
-            # extraction failing on a malformed URL); np.unique raises on
-            # None-vs-str comparisons, so normalize to "" — which hits no
-            # robots entry and takes scheduler defaults, same as before
-            cand = cand.assign(host=cand["host"].fillna(""))
-        tags = st["tag"].to_numpy() if len(st) else np.zeros(0, "U1")
-        seen_hashes = (
-            st["url_hash"].to_numpy(np.int64)[tags == "s"] if len(st) else None
-        )
-        rb = st.loc[tags == "r"]
-        delays = dict(zip(rb["host"], rb["crawl_delay_ms"]))
-        budgets = dict(zip(rb["host"], rb["max_per_generation"]))
-        disallow = {
-            h: list(v) for h, v in zip(rb["host"], rb["disallow_prefixes"])
-            if v is not None and len(v)
-        }
-        qt = st.loc[tags == "q"]
-        spent = dict(zip(qt["host"], qt["spent"])) if len(qt) else {}
-        dropped: list[pd.DataFrame] = []
-
-        new = cand.loc[cand["is_new"]]
-        byp = cand.loc[~cand["is_new"]]
-
-        # 1. spelling-dedup on new rows: keep min (packed) priority per url
-        if len(new):
-            order = np.lexsort(
-                (new["priority"].to_numpy(), new["url_hash"].to_numpy())
-            )
-            new = new.iloc[order]
-            dup_mask = new["url_hash"].duplicated(keep="first").to_numpy()
-            if emit_dropped and dup_mask.any():
-                dropped.append(new.loc[dup_mask].assign(status="dup"))
-            new = new.loc[~dup_mask]
-
-        # 2. exact membership on new rows: searchsorted on the shard
-        #    (optional Bloom blob shrinks the probe set; never the verdict)
-        if len(new):
-            h = new["url_hash"].to_numpy(np.int64)
-            ex = (
-                np.sort(seen_hashes)
-                if seen_hashes is not None and len(seen_hashes)
-                else None
-            )
-            seen_mask = np.zeros(len(new), bool)
-            if ex is not None and len(ex):
-                if blobs_bc is not None and params is not None:
-                    b = int(cand["host_bucket"].iloc[0])
-                    probe = np.flatnonzero(
-                        bloom_test_blob(h, blobs_bc.value.get(b), params)
-                    )
-                else:
-                    probe = np.arange(len(h))
-                if len(probe):
-                    idx = np.clip(np.searchsorted(ex, h[probe]), 0, len(ex) - 1)
-                    seen_mask[probe[ex[idx] == h[probe]]] = True
-            if emit_dropped and seen_mask.any():
-                dropped.append(new.loc[seen_mask].assign(status="seen"))
-            new = new.loc[~seen_mask]
-
-        pool = pd.concat([byp, new], ignore_index=True) if len(byp) else new
-        if len(pool) == 0 and not dropped:
-            return _empty_out(out_cols)
-
-        # 3. robots disallow prefixes (per-host loop: few hosts per bucket)
-        blocked = np.zeros(len(pool), bool)
-        hosts = pool["host"].to_numpy()
-        for hst in np.unique(hosts):
-            prefixes = disallow.get(hst)
-            if not prefixes:
-                continue
-            mask = hosts == hst
-            path = (
-                pool.loc[mask, "url_canon"]
-                .str.replace(r"^[A-Za-z][A-Za-z0-9+.-]*://[^/]*", "", regex=True)
-            )
-            hit = np.zeros(mask.sum(), bool)
-            for pfx in prefixes:
-                hit |= path.str.startswith(pfx).to_numpy()
-            blocked[mask] = hit
-
-        # 4. per-host rank over allowed rows -> budget + offsets. Sorting
-        #    by (host, is_new, priority, url_hash) reproduces the final-
-        #    priority order: deferred rows' minted priorities precede any
-        #    future mint, and new rows' packed keys are mint-monotone.
-        #    np.lexsort over factorized host codes (np.unique is sorted,
-        #    so codes order == lexicographic host order) avoids the
-        #    object-string pandas sort; per-host robots values are looked
-        #    up once per DISTINCT host, never per row.
-        ap = pool.loc[~blocked]
-        uhosts, hcodes = np.unique(ap["host"].to_numpy(), return_inverse=True)
-        order = np.lexsort((
-            ap["url_hash"].to_numpy(), ap["priority"].to_numpy(),
-            ap["is_new"].to_numpy(), hcodes,
-        ))
-        allowed = ap.iloc[order]
-        hc = hcodes[order]
-        # per-host rank: positions since the last host-code change
-        idx = np.arange(len(hc))
-        change = np.empty(len(hc), bool)
-        if len(hc):
-            change[0] = True
-            change[1:] = hc[1:] != hc[:-1]
-        starts = np.maximum.accumulate(np.where(change, idx, 0))
-        rank = (idx - starts + 1).astype(np.int64)
-        u_budget = np.fromiter(
-            (budgets.get(h, default_budget) for h in uhosts), np.int64, len(uhosts)
-        )
-        if total_budget is not None:
-            u_left = np.fromiter(
-                (max(0, total_budget - spent.get(h, 0)) for h in uhosts),
-                np.int64, len(uhosts),
-            )
-            u_budget = np.minimum(u_budget, u_left)
-        budget = u_budget[hc]
-        u_delay = np.fromiter(
-            (delays.get(h, default_delay) for h in uhosts), np.int64, len(uhosts)
-        )
-        delay = u_delay[hc]
-        within = rank <= budget
-        if salted:
-            # phase 1 of the two-phase exact top-k: a slice's top-budget
-            # is a superset of the host's global top-budget rows in this
-            # slice (pigeonhole) — everything else is already deferred
-            parts = [
-                allowed.assign(
-                    status=np.where(within, "pending", "deferred"),
-                    host_rank=np.int32(0),
-                    fetch_offset_ms=np.int64(0),
-                    crawl_delay_ms=delay,
-                    budget_eff=budget,
-                ),
-                pool.loc[blocked].assign(
-                    status="disallowed", host_rank=0, fetch_offset_ms=0,
-                    crawl_delay_ms=np.int64(0), budget_eff=np.int64(0),
-                ),
-            ]
-            for d in dropped:
-                parts.append(d.assign(
-                    host_rank=0, fetch_offset_ms=0,
-                    crawl_delay_ms=np.int64(0), budget_eff=np.int64(0),
-                ))
-        else:
-            parts = [
-                allowed.assign(
-                    status=np.where(within, "scheduled", "deferred"),
-                    host_rank=rank.astype(np.int32),
-                    fetch_offset_ms=np.where(within, (rank - 1) * delay, 0).astype(np.int64),
-                ),
-                pool.loc[blocked].assign(
-                    status="disallowed", host_rank=0, fetch_offset_ms=0
-                ),
-            ]
-            for d in dropped:
-                parts.append(d.assign(host_rank=0, fetch_offset_ms=0))
-        out = pd.concat(parts, ignore_index=True)
-        if keep_statuses is not None:
-            keep = out["status"].isin(keep_statuses)
-            out.loc[~keep, ["url_canon", "host"]] = None
-        return out[out_cols]
-
     _STATUSES = ["scheduled", "deferred", "disallowed", "dup", "seen", "pending"]
 
-    def _empty_pa(salted_cols: bool) -> "pa.Table":
+    def _empty_pa(salted_cols: bool) -> pa.Table:
         cols = {
             "url_hash": pa.array([], pa.int64()),
             "url_canon": pa.array([], pa.string()),
@@ -481,14 +306,12 @@ def fused_filter_schedule(
             cols["budget_eff"] = pa.array([], pa.int64())
         return pa.table(cols)
 
-    def run_arrow(cand: "pa.Table", st: "pa.Table") -> "pa.Table":
-        """Arrow-native twin of ``run``: same kernels, same values, but URL
-        strings stay in Arrow buffers end-to-end — no Python str objects
-        are minted per row on either the input or output side. At high
-        parallelism the per-worker CPU this saves is the difference
-        between scaling with cores and burning them on object churn."""
-        from ..functions.urls import _HOST_RE_PA
-
+    def run_arrow(cand: pa.Table, st: pa.Table) -> pa.Table:
+        """One cogroup (bucket[, salt]) of candidates × state -> rows.
+        No Python str objects are minted per row on either the input or
+        output side: at high parallelism the per-worker CPU this saves is
+        the difference between scaling with cores and burning them on
+        object churn."""
         n = cand.num_rows
         if n == 0:
             return _empty_pa(salted)
@@ -530,8 +353,8 @@ def fused_filter_schedule(
         byp_idx = np.flatnonzero(~is_new_np)
         dup_idx = seen_idx = np.zeros(0, np.int64)
 
-        # 1. spelling-dedup on new rows (adjacent after hash-primary sort
-        #    == pandas .duplicated on the same stable permutation)
+        # 1. spelling-dedup on new rows: keep min (packed) priority per
+        #    url (adjacent after the hash-primary, priority-minor sort)
         if len(new_idx):
             order = np.lexsort((priority_np[new_idx], url_hash_np[new_idx]))
             s = new_idx[order]
@@ -593,9 +416,13 @@ def fused_filter_schedule(
                 )
             blocked[rows] = hit
 
-        # 4. per-host rank over allowed rows -> budget + offsets (same
-        #    lexsort as the pandas kernel; dictionary codes group hosts
-        #    contiguously, and rank depends only on within-host order)
+        # 4. per-host rank over allowed rows -> budget + offsets. Sorting
+        #    by (host, is_new, priority, url_hash) reproduces the final-
+        #    priority order: deferred rows' minted priorities precede any
+        #    future mint, and new rows' packed keys are mint-monotone.
+        #    Dictionary codes group hosts contiguously (rank depends only
+        #    on within-host order), and per-host robots values are looked
+        #    up once per DISTINCT host, never per row.
         ap = np.flatnonzero(~blocked)
         apc = pool_idx[ap]
         order = np.lexsort(
@@ -686,12 +513,11 @@ def fused_filter_schedule(
     if has_host:
         in_cols.insert(2, "host")
     cand_sel = candidates.select(*in_cols)
-    arrow = _HAS_PA if use_arrow is None else use_arrow
     if not salted:
-        grouped = cand_sel.groupBy("host_bucket").cogroup(state.groupBy("host_bucket"))
-        if arrow:
-            return grouped.applyInArrow(run_arrow, schema=OUT_SCHEMA)
-        return grouped.applyInPandas(run, schema=OUT_SCHEMA)
+        return (
+            cand_sel.groupBy("host_bucket").cogroup(state.groupBy("host_bucket"))
+            .applyInArrow(run_arrow, schema=OUT_SCHEMA)
+        )
 
     # salted phase 1: candidates and exact rows slice by pmod(url_hash),
     # per-host dimension rows replicate into every slice of their bucket
@@ -703,13 +529,9 @@ def fused_filter_schedule(
     sal = state.filter(F.col("tag") == "s").withColumn("salt", salt_of)
     state_salted = sal.unionByName(dim)
 
-    p1_grouped = cand_salted.groupBy("host_bucket", "salt").cogroup(
+    p1 = cand_salted.groupBy("host_bucket", "salt").cogroup(
         state_salted.groupBy("host_bucket", "salt")
-    )
-    if arrow:
-        p1 = p1_grouped.applyInArrow(run_arrow, schema=P1_SCHEMA)
-    else:
-        p1 = p1_grouped.applyInPandas(run, schema=P1_SCHEMA)
+    ).applyInArrow(run_arrow, schema=P1_SCHEMA)
 
     def rank_host(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.lexsort((

@@ -1,98 +1,29 @@
-"""Politeness-aware per-host priority scheduler.
+"""Politeness-aware per-host priority scheduler: configuration.
 
 Reproduces the reference's pacing semantics — per-site page caps
 (/root/reference/nft/opensea/opensea_api.py:9-14), 1–6 s sleeps
 (/root/reference/looksrare/get_look_srare.py:133,
 /root/reference/nft/get_opensea_v1.1.py:277-293) and robots-like gates
 (token/key budget checks, /root/reference/youtube/get_youtube_v1.2.py:53-63)
-— as a *computed schedule* instead of wall-clock serialization:
+— as a *computed schedule* instead of wall-clock serialization. The
+schedule itself runs inside the fused frontier step
+(operators/fused_schedule.py), per host:
 
-1. broadcast-join the per-host robots cache (crawl_delay_ms, budget,
-   disallow prefixes) onto the frontier;
-2. drop disallowed paths (``exists(disallow, p -> startswith(path, p))``);
-3. per-host top-``budget`` by priority. Hot hosts are the classic skew
-   cell, so the top-k is two-phase: a salted pre-top-k per
-   ``(host, salt)`` slice bounds any single task at ``budget`` rows, then
-   the per-host window runs on ≤ salt·budget survivors;
+1. look up the host's robots row (crawl_delay_ms, budget, disallow
+   prefixes), falling back to the defaults below;
+2. drop disallowed paths (any disallow prefix starts the URL path);
+3. keep the top-``budget`` rows by priority (two-phase exact top-k under
+   salting, for mega-hosts);
 4. stamp ``fetch_offset_ms = (rank-1) · crawl_delay_ms`` — the politeness
    delay as data, enforceable by any executor without coordination.
-
-Everything is built-in expressions (whole-stage codegen); no Python in
-the path.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
 
 @dataclass(frozen=True)
 class SchedulerConfig:
     default_budget: int = 20
     default_delay_ms: int = 1000
-    salt_slices: int = 8  # phase-1 slices for hot hosts
-
-
-def schedule_generation(
-    frontier: DataFrame,
-    robots: DataFrame,
-    cfg: SchedulerConfig = SchedulerConfig(),
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Split one generation's frontier into (scheduled, deferred, disallowed).
-
-    ``frontier``: url_canon, url_hash, host, host_bucket, priority [, ...].
-    ``robots``:   host, crawl_delay_ms, max_per_generation, disallow_prefixes.
-    ``scheduled`` gains host_rank (1-based politeness rank) and
-    fetch_offset_ms; ``deferred`` keeps the frontier schema for the next
-    generation; ``disallowed`` feeds metrics.
-    """
-    joined = frontier.join(F.broadcast(robots), on="host", how="left").withColumns(
-        {
-            "crawl_delay_ms": F.coalesce("crawl_delay_ms", F.lit(cfg.default_delay_ms)),
-            "max_per_generation": F.coalesce("max_per_generation", F.lit(cfg.default_budget)),
-            "__path": F.coalesce(F.expr("parse_url(url_canon, 'PATH')"), F.lit("/")),
-        }
-    )
-    is_disallowed = F.when(
-        F.col("disallow_prefixes").isNotNull(),
-        F.exists("disallow_prefixes", lambda p: F.col("__path").startswith(p)),
-    ).otherwise(F.lit(False))
-    joined = joined.withColumn("__blocked", is_disallowed)
-    disallowed = joined.filter("__blocked").select(*frontier.columns)
-    allowed = joined.filter(~F.col("__blocked")).drop("__blocked", "__path", "disallow_prefixes")
-
-    # phase 1: salted pre-top-k bounds task size on mega-hosts
-    if cfg.salt_slices > 1:
-        salted = allowed.withColumn(
-            "__salt", F.pmod(F.col("url_hash"), F.lit(cfg.salt_slices)).cast("int")
-        )
-        w1 = Window.partitionBy("host", "__salt").orderBy("priority", "url_hash")
-        survivors = (
-            salted.withColumn("__rn1", F.row_number().over(w1))
-            .filter(F.col("__rn1") <= F.col("max_per_generation"))
-            .drop("__salt", "__rn1")
-        )
-        # deferred phase-1 rows rejoin the frontier unchanged
-        p1_deferred = salted.withColumn("__rn1", F.row_number().over(w1)).filter(
-            F.col("__rn1") > F.col("max_per_generation")
-        )
-    else:
-        survivors = allowed
-        p1_deferred = None
-
-    # phase 2: exact per-host top-budget on the bounded survivor set
-    w2 = Window.partitionBy("host").orderBy("priority", "url_hash")
-    ranked = survivors.withColumn("host_rank", F.row_number().over(w2))
-    scheduled = ranked.filter(F.col("host_rank") <= F.col("max_per_generation")).withColumn(
-        "fetch_offset_ms",
-        ((F.col("host_rank") - 1) * F.col("crawl_delay_ms")).cast("long"),
-    )
-    deferred = ranked.filter(F.col("host_rank") > F.col("max_per_generation")).select(
-        *frontier.columns
-    )
-    if p1_deferred is not None:
-        deferred = deferred.unionByName(p1_deferred.select(*frontier.columns))
-    return scheduled, deferred, disallowed

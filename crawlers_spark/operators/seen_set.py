@@ -1,26 +1,19 @@
-"""Partitioned Bloom-filter URL-seen set with exact rescue join.
+"""Partitioned Bloom-filter kernels for the URL-seen set.
 
 Scale design (north_star): at 10^10 URLs a single driver-side Bloom
 filter (``DataFrame.stat.bloomFilter``) needs ~12.5 GB in one blob — a
 non-starter. Instead the hash space is split into ``n_buckets`` buckets
 (``pmod(url_hash, B)``); each bucket owns an independent filter blob
-sized for its share, built bucket-locally with ``applyInPandas`` and
-merged across generations/partitions with ``RDD.treeAggregate`` (depth
-log4) so no single node ever holds more than one round of blobs.
+sized for its share, built bucket-locally with ``applyInPandas``.
 
-Membership has two physical strategies:
-
-* ``broadcast`` — merge blobs to the driver, broadcast the bucket->blob
-  dict, test with a scalar pandas UDF. Right when total filter bytes are
-  small (tests, small epochs).
-* ``cogroup``  — co-partition candidates and blobs on ``bloom_bucket``
-  and test inside ``cogroup().applyInPandas``; each task touches only its
-  bucket's blob. Right at 10^10 scale (blobs never converge on one node).
-
-Bloom positives are *maybe seen*; they are rescued by an exact
-``left_anti`` join against the (bucket-partitioned) exact-seen table, so
-the engine's dedup is exact — the filter only shrinks the join's left
-side by ~99%. Reference analog: in-memory ``repeat_list`` dedup
+Membership is decided exactly by the fused frontier step
+(operators/fused_schedule.py), which probes each host bucket's exact
+seen shard with ``searchsorted`` inside its cogroup; a per-bucket blob
+(``build_host_bucket_blobs`` there) only shrinks that probe set. This
+module holds the numpy kernels (``bloom_build_blob`` /
+``bloom_test_blob``) and the per-hash-bucket filter table
+(``build_bucket_filters``). Reference analog: in-memory
+``repeat_list`` dedup
 (/root/reference/youtube/get_youtube_v1.2.py:126-136) and
 query-before-insert (/root/reference/worldcup/db/deal_mysql_info.py:38-57).
 """
@@ -32,7 +25,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import fnv64_i64
@@ -87,10 +80,6 @@ def bloom_test_blob(hashes: np.ndarray, blob: bytes | None, params: BloomParams)
     return bits.all(axis=1)
 
 
-def bloom_merge_blobs(a: bytes, b: bytes) -> bytes:
-    return (np.frombuffer(a, np.uint8) | np.frombuffer(b, np.uint8)).tobytes()
-
-
 def with_bloom_bucket(df: DataFrame, params: BloomParams, hash_col: str = "url_hash") -> DataFrame:
     return df.withColumn("bloom_bucket", F.pmod(F.col(hash_col), F.lit(params.n_buckets)).cast("int"))
 
@@ -119,197 +108,3 @@ def build_bucket_filters(
     return bucketed.groupBy("bloom_bucket").applyInPandas(
         build, schema="bloom_bucket int, epoch int, filter binary, n_items long"
     )
-
-
-def tree_merge_filters(filters_df: DataFrame, params: BloomParams) -> dict[int, bytes]:
-    """treeAggregate OR-merge of per-bucket blobs → driver dict.
-
-    Used for the broadcast membership path and for epoch compaction;
-    depth ⌈log₄ P⌉ keeps driver fan-in bounded (north_star requirement).
-    """
-    n_parts = max(2, filters_df.rdd.getNumPartitions())
-    depth = max(2, math.ceil(math.log(n_parts, 4)))
-
-    def seq(acc: dict[int, bytes], row) -> dict[int, bytes]:
-        b = row["bloom_bucket"]
-        blob = bytes(row["filter"])
-        acc[b] = bloom_merge_blobs(acc[b], blob) if b in acc else blob
-        return acc
-
-    def comb(a: dict[int, bytes], b: dict[int, bytes]) -> dict[int, bytes]:
-        for k, v in b.items():
-            a[k] = bloom_merge_blobs(a[k], v) if k in a else v
-        return a
-
-    return filters_df.select("bloom_bucket", "filter").rdd.treeAggregate({}, seq, comb, depth=depth)
-
-
-def bloom_maybe_seen_broadcast(
-    spark: SparkSession, df: DataFrame, blobs: dict[int, bytes], params: BloomParams,
-    hash_col: str = "url_hash", out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Broadcast path: scalar pandas UDF tests each row against its bucket blob."""
-    bc = spark.sparkContext.broadcast(blobs)
-
-    @F.pandas_udf("boolean")
-    def test(hashes: pd.Series, buckets: pd.Series) -> pd.Series:
-        h = hashes.to_numpy(np.int64)
-        b = buckets.to_numpy(np.int64)
-        out = np.zeros(len(h), bool)
-        for bucket in np.unique(b):
-            mask = b == bucket
-            out[mask] = bloom_test_blob(h[mask], bc.value.get(int(bucket)), params)
-        return pd.Series(out)
-
-    df = with_bloom_bucket(df, params, hash_col)
-    return df.withColumn(out_col, test(F.col(hash_col), F.col("bloom_bucket")))
-
-
-def bloom_maybe_seen_cogroup(
-    df: DataFrame, filters_df: DataFrame, params: BloomParams,
-    hash_col: str = "url_hash", out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Scale path: co-partition candidates with blobs; no driver collect."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    df = with_bloom_bucket(df, params, hash_col)
-    schema = StructType(list(df.schema.fields) + [StructField(out_col, BooleanType())])
-    cols = [f.name for f in df.schema.fields]
-
-    def test(cand: pd.DataFrame, filt: pd.DataFrame) -> pd.DataFrame:
-        if len(cand) == 0:
-            return pd.DataFrame(columns=cols + [out_col])
-        blob = None
-        if len(filt):
-            merged = np.zeros(params.bits_per_bucket >> 3, np.uint8)
-            for b in filt["filter"]:
-                merged |= np.frombuffer(b, np.uint8)
-            blob = merged.tobytes()
-        cand = cand.copy()
-        cand[out_col] = bloom_test_blob(cand[hash_col].to_numpy(np.int64), blob, params)
-        return cand
-
-    return (
-        df.groupBy("bloom_bucket")
-        .cogroup(filters_df.groupBy("bloom_bucket"))
-        .applyInPandas(test, schema=schema)
-    )
-
-
-class SeenSet:
-    """Exact seen-set (bucket-partitioned) + per-bucket Bloom acceleration.
-
-    ``filter_new(candidates)`` returns only truly-unseen rows:
-    bloom-negatives pass straight through; bloom-positives are rescued via
-    ``left_anti`` against the exact table (which only ever sees the ~1%
-    positives). ``add`` unions new hashes into both structures;
-    ``filter_epoch`` counts compactions (lineage column).
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        params: BloomParams,
-        exact: DataFrame | None = None,
-        filters: DataFrame | None = None,
-        filter_epoch: int = 0,
-        use_broadcast: bool = True,
-    ) -> None:
-        self.spark = spark
-        self.params = params
-        self.exact = exact  # columns: url_hash long, bloom_bucket int
-        self.filters = filters  # columns: bloom_bucket, epoch, filter, n_items
-        self.filter_epoch = filter_epoch
-        self.use_broadcast = use_broadcast
-        # driver-side merged-blob cache for the broadcast path: updated
-        # incrementally per add() (64 small rows collected + OR-merged),
-        # so the per-generation treeAggregate disappears from the loop;
-        # treeAggregate remains the compaction / cache-rebuild path.
-        self._blob_cache: dict[int, bytes] | None = None
-        self._prev_flagged: DataFrame | None = None
-
-    def _merged_blobs(self) -> dict[int, bytes]:
-        if self._blob_cache is None:
-            self._blob_cache = tree_merge_filters(self.filters, self.params)
-        return self._blob_cache
-
-    def filter_new(self, candidates: DataFrame, hash_col: str = "url_hash") -> DataFrame:
-        if self.exact is None:
-            return candidates
-        if self.use_broadcast:
-            flagged = bloom_maybe_seen_broadcast(
-                self.spark, candidates, self._merged_blobs(), self.params, hash_col
-            )
-        else:
-            flagged = bloom_maybe_seen_cogroup(candidates, self.filters, self.params, hash_col)
-        # Both output branches read `flagged`. A lazy persist is not
-        # enough: AQE submits the two downstream exchanges concurrently,
-        # and before the cache is materialized each re-computes the whole
-        # upstream (canonize + dedup agg) — the event log shows the map
-        # stage twice. Persist + eager count() materializes once.
-        if self._prev_flagged is not None:
-            self._prev_flagged.unpersist()
-        flagged = flagged.persist()
-        flagged.count()
-        self._prev_flagged = flagged
-        negatives = flagged.filter(~F.col("maybe_seen"))
-        positives = flagged.filter(F.col("maybe_seen"))
-        rescued = positives.join(self.exact, on=hash_col, how="left_anti")
-        return negatives.unionByName(rescued).drop("maybe_seen", "bloom_bucket")
-
-    def add(self, new_rows: DataFrame, hash_col: str = "url_hash") -> None:
-        # host_bucket rides along when present so the exact table stays
-        # resumable by the fused bucket-local path (plans/crawl.py), which
-        # cogroups the shard on host_bucket (not derivable from url_hash).
-        keep = [F.col(hash_col).alias("url_hash")]
-        keep.append(
-            F.col("host_bucket").cast("int")
-            if "host_bucket" in new_rows.columns
-            else F.lit(None).cast("int").alias("host_bucket")
-        )
-        delta_exact = with_bloom_bucket(new_rows.select(*keep), self.params)
-        delta_filters = build_bucket_filters(
-            new_rows, self.params, hash_col, epoch=self.filter_epoch
-        )
-        if self.use_broadcast:
-            cache = self._merged_blobs() if self.filters is not None else {}
-            for row in delta_filters.select("bloom_bucket", "filter").collect():
-                b, blob = row["bloom_bucket"], bytes(row["filter"])
-                cache[b] = bloom_merge_blobs(cache[b], blob) if b in cache else blob
-            self._blob_cache = cache
-        self.exact = delta_exact if self.exact is None else self.exact.unionByName(delta_exact)
-        self.filters = (
-            delta_filters if self.filters is None else self.filters.unionByName(delta_filters)
-        )
-
-    def close(self) -> None:
-        """Release the last filter_new cache (end-of-run teardown)."""
-        if self._prev_flagged is not None:
-            self._prev_flagged.unpersist()
-            self._prev_flagged = None
-
-    def compact(self) -> None:
-        """Merge filter deltas into one blob per bucket; bump epoch.
-
-        Uses the driver cache when warm, else the treeAggregate merge
-        (the cogroup/scale path never builds a driver cache)."""
-        if self.filters is None:
-            return
-        merged = (
-            self._merged_blobs()
-            if self.use_broadcast
-            else tree_merge_filters(self.filters, self.params)
-        )
-        self.filter_epoch += 1
-        pdf = pd.DataFrame(
-            {
-                "bloom_bucket": list(merged.keys()),
-                "epoch": self.filter_epoch,
-                "filter": list(merged.values()),
-                "n_items": -1,
-            }
-        )
-        self.filters = self.spark.createDataFrame(
-            pdf, schema="bloom_bucket int, epoch int, filter binary, n_items long"
-        )
-        self.exact = self.exact.localCheckpoint(eager=True)

@@ -13,12 +13,16 @@ minted by a deterministic global rank over
 ``(parent_priority, slot, url_hash)`` — crawl order is the total order
 ``(generation, priority)``, never partition order.
 
-Checkpoint/resume: per generation the frontier, exact seen-set, Bloom
-blobs, pages and metrics land under ``checkpoint_dir`` with an
-atomically-renamed JSON manifest carrying per-partition lineage
-``(generation, host_bucket, filter_epoch)`` — the Parquet+manifest stand-
-in for Iceberg snapshots (no Iceberg jars in this sandbox; the layout is
-swap-compatible, see sources/tables.py).
+Checkpoint/resume: each generation ``g`` writes ``gen=<g>/`` under
+``checkpoint_dir`` with exactly ``pages``, ``crawl_log``,
+``frontier_sched`` (the next generation's scheduled + deferred rows),
+``seen_exact`` (the tagged state table: exact seen-set + robots rows,
+bucketed on ``host_bucket``) and, when a lifetime quota is set,
+``host_spent``; then an atomically-renamed JSON manifest
+``manifest_gen=<g>.json`` (generation, next_priority, totals,
+frontier_count) commits the generation — the Parquet+manifest stand-in
+for Iceberg snapshots (the layout is swap-compatible, see
+sources/tables.py). Resume reads exactly this set.
 """
 
 from __future__ import annotations
@@ -33,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import fnv64
-from ..functions.urls import canon_urls, url_host
+from ..functions.urls import canon_urls
 from ..operators.fused_schedule import (
     STATE_COLS,
     fused_filter_schedule,
@@ -42,8 +46,8 @@ from ..operators.fused_schedule import (
     seen_state,
 )
 from ..operators.ranking import global_rank, rank_bucket_expr
-from ..operators.scheduler import SchedulerConfig, schedule_generation
-from ..operators.seen_set import BloomParams, SeenSet, build_bucket_filters
+from ..operators.scheduler import SchedulerConfig
+from ..operators.seen_set import BloomParams
 from ..sources.fetcher import fetch_scheduled
 from ..sources.synthweb import SynthWebConfig, robots_pdf
 
@@ -66,25 +70,17 @@ class CrawlConfig:
     n_host_buckets: int = 32
     max_generations: int = 50
     checkpoint_dir: str | None = None
-    bloom_broadcast: bool = True
-    compact_every: int = 4  # bloom epoch compaction cadence
     # lifetime per-host quota (key-retirement semantics, reference:
     # daily API budgets /root/reference/youtube/get_youtube_v1.2.py:53-63):
     # each generation's per-host budget is capped at the remaining quota;
-    # None disables (fused path only)
+    # None disables
     total_budget_per_host: int | None = None
     # bounded requeue of failed fetches: a not-ok row re-enters the next
     # generation (same priority, retry_count+1) until max_retries is
-    # exhausted (fused path only; reference analog: reconnect-and-retry,
+    # exhausted (reference analog: reconnect-and-retry,
     # /root/reference/worldcup/db/connect_mysql.py:21,50)
     max_retries: int = 0
-    # fused=True runs the bucket-local cogroup frontier step (one exchange
-    # per generation: dedup + seen-filter + robots + politeness fused,
-    # operators/fused_schedule.py); False runs the composed Catalyst chain.
-    # Both produce identical crawl order / seen-set / metrics (golden +
-    # equivalence tested).
-    fused: bool = True
-    # mega-host skew escape hatch for the fused path: >1 salts the
+    # mega-host skew escape hatch for the frontier step: >1 salts the
     # cogroup key with pmod(url_hash, n_salts), bounding any single
     # Python task at ~1/n_salts of a host's candidates (two-phase exact
     # politeness; see operators/fused_schedule.py docstring). 1 = off.
@@ -128,11 +124,6 @@ def canon_udf(urls: pd.Series) -> pd.Series:
 @F.pandas_udf(LongType())
 def hash_udf(strings: pd.Series) -> pd.Series:
     return pd.Series(fnv64(strings))
-
-
-@F.pandas_udf(StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return url_host(urls)
 
 
 def canonize(
@@ -222,8 +213,15 @@ def auto_salts(by_bucket: dict[int, int], n_buckets: int, base: int = 1,
     return int(min(max_salts, max(base, round(mx / mean / 2))))
 
 
-def _counts_by_bucket(df: DataFrame, name: str) -> DataFrame:
-    return df.groupBy("host_bucket").agg(F.count("*").alias(name))
+def _split_next(nxt: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Fused-step output -> (scheduled rows, deferred frontier rows).
+
+    Deferred rows keep ``retry_count``: dropping it would hand every
+    deferred requeued failure a fresh retry budget."""
+    return (
+        nxt.filter("status = 'scheduled'"),
+        nxt.filter("status = 'deferred'").select(*FRONTIER_COLS, "retry_count"),
+    )
 
 
 def _atomic_write_json(path: str, payload: dict) -> None:
@@ -278,43 +276,6 @@ class CrawlPlan:
         assert self.cfg.checkpoint_dir
         return os.path.join(self.cfg.checkpoint_dir, *parts)
 
-    def _snapshot(self, gen: int, frontier: DataFrame, seen: SeenSet,
-                  next_priority: int, totals: dict, frontier_count: int) -> DataFrame:
-        d = self._ckpt(f"gen={gen:05d}")
-        frontier.write.mode("overwrite").parquet(os.path.join(d, "frontier"))
-        seen.exact.write.mode("overwrite").parquet(os.path.join(d, "seen_exact"))
-        seen.filters.write.mode("overwrite").parquet(os.path.join(d, "filters"))
-        _atomic_write_json(
-            self._ckpt(f"manifest_gen={gen:05d}.json"),
-            {
-                "generation": gen,
-                "next_priority": next_priority,
-                "filter_epoch": seen.filter_epoch,
-                "totals": totals,
-                "frontier_count": frontier_count,
-                "lineage": {"host_buckets": self.cfg.n_host_buckets,
-                            "bloom_buckets": self.cfg.bloom.n_buckets},
-            },
-        )
-        return self.spark.read.parquet(os.path.join(d, "frontier"))
-
-    def _read_host_spent(self, gen_dir: str, manifest: dict) -> DataFrame | None:
-        """Quota ledger for resume: parquet if present, else the legacy
-        manifest dict (older checkpoints), else None."""
-        p = os.path.join(gen_dir, "host_spent")
-        if os.path.isdir(p):
-            return self.spark.read.parquet(p)
-        legacy = manifest.get("host_spent")
-        if legacy:
-            pdf = pd.DataFrame(
-                {"host": list(legacy.keys()), "spent": list(legacy.values())}
-            )
-            from ..functions.hashing import fnv64 as _f, pmod_bucket as _p
-
-            pdf["host_bucket"] = _p(_f(pdf["host"]), self.cfg.n_host_buckets)
-            return self.spark.createDataFrame(pdf)
-        return None
-
     def latest_manifest(self) -> dict | None:
         if not self.cfg.checkpoint_dir or not os.path.isdir(self.cfg.checkpoint_dir):
             return None
@@ -334,7 +295,7 @@ class CrawlPlan:
             "(parent_priority, slot) into one long lexicographically"
         )
         if not self.cfg.scope_session_conf:
-            return self._run_dispatch(seeds, resume)
+            return self._run_fused(seeds, resume)
         # Every exchange in the loop is hand-sized to n_host_buckets (the
         # cogroup, the rank, the checkpoint layout), so (a) the session's
         # generic shuffle width only adds empty reduce tasks, and (b)
@@ -352,221 +313,24 @@ class CrawlPlan:
             conf.set("spark.sql.shuffle.partitions",
                      str(self.cfg.n_host_buckets))
             conf.set("spark.sql.adaptive.enabled", "false")
-            return self._run_dispatch(seeds, resume)
+            return self._run_fused(seeds, resume)
         finally:
             for k, v in saved.items():
                 conf.set(k, v)
 
-    def _run_dispatch(self, seeds: DataFrame, resume: bool = False) -> CrawlResult:
-        if self.cfg.fused:
-            return self._run_fused(seeds, resume)
-        assert self.cfg.max_retries == 0, (
-            "failed-fetch requeue is implemented in the fused loop only"
-        )
-        assert self.cfg.total_budget_per_host is None, (
-            "lifetime host quotas are implemented in the fused loop only"
-        )
-        return self._run_composed(seeds, resume)
-
-    def _run_composed(self, seeds: DataFrame, resume: bool = False) -> CrawlResult:
-        spark, cfg = self.spark, self.cfg
-        t0 = time.monotonic()
-        pages_parts: list[DataFrame] = []
-        log_parts: list[DataFrame] = []
-        metrics_rows: list[tuple] = []
-        totals = {"fetched": 0, "scheduled": 0}
-
-        manifest = self.latest_manifest() if resume else None
-        if manifest is not None:
-            g0 = manifest["generation"] + 1
-            next_priority = manifest["next_priority"]
-            d = self._ckpt(f"gen={manifest['generation']:05d}")
-            frontier = spark.read.parquet(os.path.join(d, "frontier"))
-            seen_tbl = spark.read.parquet(os.path.join(d, "seen_exact"))
-            if "tag" in seen_tbl.columns:  # written by the fused loop
-                seen_tbl = seen_tbl.filter("tag = 's'").select(
-                    "url_hash", "host_bucket", "bloom_bucket"
-                )
-            seen = SeenSet(
-                spark, cfg.bloom,
-                exact=seen_tbl,
-                filters=spark.read.parquet(os.path.join(d, "filters")),
-                filter_epoch=manifest["filter_epoch"],
-                use_broadcast=cfg.bloom_broadcast,
-            )
-            totals = dict(manifest["totals"])
-            n_frontier = manifest.get("frontier_count")
-            if n_frontier is None:
-                n_frontier = frontier.count()
-        else:
-            g0 = 0
-            frontier = prepare_frontier(seeds, cfg.n_host_buckets).persist()
-            first = frontier.agg(
-                F.max("priority").alias("p"), F.count("*").alias("n")
-            ).first()
-            next_priority = (first["p"] or 0) + 1
-            n_frontier = first["n"]
-            seen = SeenSet(spark, cfg.bloom, use_broadcast=cfg.bloom_broadcast)
-            if n_frontier:
-                seen.add(frontier)
-
-        generations = g0
-        for g in range(g0, g0 + cfg.max_generations):
-            gen_t0 = time.monotonic()
-            if n_frontier == 0:
-                break
-            gen_frontier = frontier.withColumn("generation", F.lit(g))
-            scheduled, deferred, disallowed = schedule_generation(
-                gen_frontier, self.robots, cfg.scheduler
-            )
-            scheduled = scheduled.persist()
-            fetched = fetch_scheduled(scheduled, cfg.web).persist()
-
-            pages_g = fetched.filter("ok").select(
-                *PAGES_COLS, "generation", "host_bucket", "priority", "url_canon"
-            )
-            log_g = fetched.select(
-                "generation", "priority", "url_canon", "host", "host_bucket", "ok",
-                "fetch_offset_ms",
-            )
-
-            links = canonize(
-                fetched.select(
-                    F.col("priority").alias("parent_priority"),
-                    F.posexplode_outer("links").alias("slot", "url"),
-                ).filter(F.col("url").isNotNull()),
-                cfg.n_host_buckets,
-            )
-            # Lexicographic min over (parent_priority, slot) packed into
-            # one long (slot < 16 = MAX_LINK_SLOTS) so the agg buffer is
-            # fixed-width → HashAggregate; string cols are functions of
-            # url_hash and ride in the grouping key.
-            packed = F.col("parent_priority") * MAX_LINK_SLOTS + F.col("slot")
-            candidates = (
-                links.groupBy("url_hash", "url_canon", "host", "host_bucket")
-                .agg(F.min(packed).alias("__pk"))
-                .select(
-                    "url_hash", "url_canon", "host", "host_bucket",
-                    F.expr(f"__pk div {MAX_LINK_SLOTS}").alias("parent_priority"),
-                    F.pmod("__pk", F.lit(MAX_LINK_SLOTS)).cast("int").alias("slot"),
-                )
-            )
-            new_rows = seen.filter_new(candidates).persist()
-            # global_rank's internal per-partition count collect doubles as
-            # the n_new counter — no separate count job.
-            # bounds are known by construction (parents were minted below
-            # next_priority), so ranking takes the sample-free JVM path
-            new_ranked, n_new = global_rank(
-                new_rows, ["parent_priority", "slot", "url_hash"], "priority",
-                start=next_priority, with_count=True,
-                bounds=(0, next_priority),
-            )
-            new_ranked = new_ranked.persist()
-            next_priority += n_new
-            if n_new:
-                seen.add(new_ranked)
-
-            # ---- one aggregation job yields metrics AND all loop counters
-            # (lineage: generation, bucket, epoch)
-            m = (
-                _counts_by_bucket(scheduled, "scheduled")
-                .join(_counts_by_bucket(links, "discovered"), "host_bucket", "full")
-                .join(_counts_by_bucket(new_ranked, "new"), "host_bucket", "full")
-                .join(_counts_by_bucket(fetched.filter("ok"), "fetched"), "host_bucket", "full")
-                .join(_counts_by_bucket(fetched.filter("not ok"), "failed"), "host_bucket", "full")
-                .join(_counts_by_bucket(deferred, "deferred"), "host_bucket", "full")
-                .fillna(0)
-            )
-            wall_ms = int((time.monotonic() - gen_t0) * 1000)
-            n_sched = n_fetched = n_deferred = 0
-            for r in m.collect():
-                metrics_rows.append(
-                    (g, r["host_bucket"], seen.filter_epoch, r["scheduled"],
-                     r["discovered"] - r["new"], r["fetched"], r["failed"], wall_ms)
-                )
-                n_sched += r["scheduled"]
-                n_fetched += r["fetched"]
-                n_deferred += r["deferred"]
-            totals["scheduled"] += n_sched
-            totals["fetched"] += n_fetched
-            n_frontier = n_deferred + n_new
-
-            frontier = deferred.select(*FRONTIER_COLS).unionByName(
-                new_ranked.select(*FRONTIER_COLS)
-            )
-
-            if cfg.checkpoint_dir:
-                pages_g.write.mode("overwrite").parquet(self._ckpt(f"gen={g:05d}", "pages"))
-                pages_parts.append(spark.read.parquet(self._ckpt(f"gen={g:05d}", "pages")))
-                log_g.write.mode("overwrite").parquet(self._ckpt(f"gen={g:05d}", "crawl_log"))
-                log_parts.append(spark.read.parquet(self._ckpt(f"gen={g:05d}", "crawl_log")))
-                frontier = self._snapshot(g, frontier, seen, next_priority, totals, n_frontier)
-                seen.exact = spark.read.parquet(self._ckpt(f"gen={g:05d}", "seen_exact"))
-                # (composed snapshots write plain exact rows — no tag col)
-                seen.filters = spark.read.parquet(self._ckpt(f"gen={g:05d}", "filters"))
-            else:
-                pages_parts.append(pages_g.localCheckpoint(eager=True))
-                log_parts.append(log_g.localCheckpoint(eager=True))
-                frontier = frontier.localCheckpoint(eager=True)
-                seen.exact = seen.exact.localCheckpoint(eager=True)
-                seen.filters = seen.filters.localCheckpoint(eager=True)
-
-            if (g + 1) % cfg.compact_every == 0:
-                seen.compact()
-
-            scheduled.unpersist()
-            fetched.unpersist()
-            new_rows.unpersist()
-            generations = g + 1
-
-        empty_pages = spark.createDataFrame(
-            [], schema="image_id string, bytes binary, w int, h int, fmt string, "
-            "caption string, phash long, generation int, host_bucket int, "
-            "priority long, url_canon string",
-        )
-        pages = empty_pages
-        for p in pages_parts:
-            pages = pages.unionByName(p)
-        empty_log = spark.createDataFrame(
-            [], schema="generation int, priority long, url_canon string, host string, "
-            "host_bucket int, ok boolean, fetch_offset_ms long",
-        )
-        crawl_log = empty_log
-        for p in log_parts:
-            crawl_log = crawl_log.unionByName(p)
-        metrics = spark.createDataFrame(metrics_rows, schema=METRICS_SCHEMA)
-        seen.close()
-        return CrawlResult(
-            pages=pages,
-            metrics=metrics,
-            crawl_log=crawl_log,
-            seen_exact=seen.exact,
-            frontier_final=frontier,
-            generations=generations,
-            total_fetched=totals["fetched"],
-            total_scheduled=totals["scheduled"],
-            wall_s=time.monotonic() - t0,
-        )
-
-    def _bootstrap_schedule(self, frontier, g0, host_spent):
-        """Schedule the first generation through the fused op (bypass-only
-        input, equivalence-tested against the composed scheduler): one
-        exchange instead of the two-window salted top-k chain, and the
-        lifetime-quota cap (when configured) applies from generation 0
-        exactly like later generations. ``host_spent`` is a small
-        (host, host_bucket, spent) DataFrame or None."""
-        cfg, spark = self.cfg, self.spark
-        boot = fused_filter_schedule(
-            spark, frontier.withColumn("is_new", F.lit(False)), None,
+    def _bootstrap_schedule(self, frontier: DataFrame) -> DataFrame:
+        """Schedule the seed frontier through the same fused step as every
+        later generation, with all rows flagged ``is_new = false`` (already
+        deduped and in the seen-set): only robots and politeness apply, and
+        the lifetime-quota cap (when configured) binds from generation 0."""
+        cfg = self.cfg
+        return fused_filter_schedule(
+            self.spark, frontier.withColumn("is_new", F.lit(False)), None,
             self.robots, cfg.scheduler,
             total_budget_per_host=cfg.total_budget_per_host,
             n_salts=cfg.n_salts,
-            state=self._state_for(None, host_spent),
+            state=self._robots_state_df(),
             emit_strings="frontier",
-        )
-        return (
-            boot.filter("status = 'scheduled'").withColumn("generation", F.lit(g0)),
-            boot.filter("status = 'deferred'").select(*FRONTIER_COLS),
         )
 
     # ---------- fused loop ----------
@@ -579,8 +343,7 @@ class CrawlPlan:
         ``(is_new, priority, url_hash)`` where new rows carry the packed
         ``(parent_priority, slot)`` key — exactly the order their minted
         priorities will have — so crawl order, seen membership, and
-        metrics are bit-identical to ``_run_composed`` (golden +
-        equivalence tests).
+        metrics match the serial oracle (tests/test_crawl_engine.py).
 
         Seen-set state is the exact table hash-partitioned by
         ``host_bucket``, re-read (co-located, never re-shuffled when the
@@ -608,31 +371,17 @@ class CrawlPlan:
             g0 = manifest["generation"] + 1
             next_priority = manifest["next_priority"]
             d = self._ckpt(f"gen={manifest['generation']:05d}")
-            seen_tbl = spark.read.parquet(os.path.join(d, "seen_exact"))
-            if "tag" in seen_tbl.columns:  # tagged state snapshot
-                exact = seen_tbl.filter("tag = 's'").select("url_hash", "host_bucket")
-            else:  # legacy layout: exact rows only
-                exact = seen_tbl.select("url_hash", "host_bucket")
+            exact = (
+                spark.read.parquet(os.path.join(d, "seen_exact"))
+                .filter("tag = 's'").select("url_hash", "host_bucket")
+            )
             totals = dict(manifest["totals"])
-            n_frontier = manifest.get("frontier_count")
-            host_spent = self._read_host_spent(d, manifest)
-            fs_path = os.path.join(d, "frontier_sched")
-            if os.path.isdir(fs_path):
-                nxt = spark.read.parquet(fs_path)
-                scheduled = nxt.filter("status = 'scheduled'")
-                # keep retry_count across resume: dropping it would hand
-                # every deferred requeued failure a fresh retry budget
-                deferred = nxt.filter("status = 'deferred'").select(
-                    *FRONTIER_COLS, "retry_count"
-                )
-            else:  # checkpoint written by the composed loop: re-schedule
-                frontier = spark.read.parquet(os.path.join(d, "frontier"))
-                if n_frontier is None:
-                    n_frontier = frontier.count()
-                if n_frontier:
-                    scheduled, deferred = self._bootstrap_schedule(
-                        frontier, g0, host_spent=host_spent
-                    )
+            n_frontier = manifest["frontier_count"]
+            if os.path.isdir(os.path.join(d, "host_spent")):
+                host_spent = spark.read.parquet(os.path.join(d, "host_spent"))
+            scheduled, deferred = _split_next(
+                spark.read.parquet(os.path.join(d, "frontier_sched"))
+            )
         else:
             g0 = 0
             frontier = prepare_frontier(seeds, cfg.n_host_buckets).persist()
@@ -643,9 +392,7 @@ class CrawlPlan:
             n_frontier = first["n"]
             exact = frontier.select("url_hash", "host_bucket")
             if n_frontier:
-                scheduled, deferred = self._bootstrap_schedule(
-                    frontier, g0, host_spent=None
-                )
+                scheduled, deferred = _split_next(self._bootstrap_schedule(frontier))
         exact = exact.localCheckpoint(eager=True)
 
         gen_stats: dict[int, tuple[dict, int]] = {}
@@ -656,7 +403,7 @@ class CrawlPlan:
             gen_t0 = time.monotonic()
             if not n_frontier or scheduled is None:
                 break
-            sched_g = scheduled.drop("generation").withColumn("generation", F.lit(g))
+            sched_g = scheduled.withColumn("generation", F.lit(g))
             fetched = fetch_scheduled(sched_g, cfg.web).persist()
             pages_g = fetched.filter("ok").select(
                 *PAGES_COLS, "generation", "host_bucket", "priority", "url_canon"
@@ -682,12 +429,9 @@ class CrawlPlan:
                 F.lit(0).alias("retry_count"),
             )
             if deferred is not None:
-                dcols = ["url_canon", "url_hash", "host_bucket", "priority"]
-                if "retry_count" in deferred.columns:
-                    d = deferred.select(*dcols, "retry_count")
-                else:  # pre-retry checkpoint resume
-                    d = deferred.select(*dcols).withColumn("retry_count", F.lit(0))
-                cand = cand.unionByName(d.withColumn("is_new", F.lit(False)))
+                cand = cand.unionByName(
+                    deferred.drop("host").withColumn("is_new", F.lit(False))
+                )
             if cfg.max_retries > 0:
                 # bounded requeue: failed fetches re-enter the next
                 # generation as bypass rows (already in the seen-set),
@@ -823,9 +567,6 @@ class CrawlPlan:
                 log_parts.append(spark.read.parquet(os.path.join(dgen, "crawl_log")))
                 nxt.write.mode("overwrite").parquet(os.path.join(dgen, "frontier_sched"))
                 nxt = spark.read.parquet(os.path.join(dgen, "frontier_sched"))
-                nxt.select(*FRONTIER_COLS).write.mode("overwrite").parquet(
-                    os.path.join(dgen, "frontier")
-                )
                 # snapshot the TAGGED STATE (seen rows + robots dimension
                 # + quota spend) as ONE bucketed external table on
                 # host_bucket: the next generation's cogroup then reads
@@ -870,9 +611,6 @@ class CrawlPlan:
                 if prev_tbl is not None:
                     spark.sql(f"DROP TABLE IF EXISTS {prev_tbl}")
                 prev_tbl = tbl
-                build_bucket_filters(exact, cfg.bloom).write.mode("overwrite").parquet(
-                    os.path.join(dgen, "filters")
-                )
                 if host_spent is not None:
                     host_spent.write.mode("overwrite").parquet(
                         os.path.join(dgen, "host_spent")
@@ -887,8 +625,7 @@ class CrawlPlan:
                         "totals": totals,
                         "frontier_count": n_frontier,
                         "lineage": {"host_buckets": cfg.n_host_buckets,
-                                    "bloom_buckets": cfg.bloom.n_buckets,
-                                    "fused": True},
+                                    "bloom_buckets": cfg.bloom.n_buckets},
                     },
                 )
             else:
@@ -916,10 +653,7 @@ class CrawlPlan:
                     )
                 )
             fetched.unpersist()
-            scheduled = nxt.filter("status = 'scheduled'")
-            deferred = nxt.filter("status = 'deferred'").select(
-                *FRONTIER_COLS, "retry_count"
-            )
+            scheduled, deferred = _split_next(nxt)
             generations = g + 1
 
         empty_pages = spark.createDataFrame(

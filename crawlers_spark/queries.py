@@ -1808,17 +1808,23 @@ def q_crawl_pages_by_host(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_crawl_schedule(spark: SparkSession, sf: str) -> DataFrame:
     """Politeness scheduler output for generation 0: per-host priority rank
-    and computed crawl-delay offsets (no fetch)."""
-    from .operators.scheduler import SchedulerConfig, schedule_generation
+    and computed crawl-delay offsets (no fetch). The seed frontier runs
+    through the fused frontier step as already-seen rows (``is_new =
+    false``), exactly as the crawl loop schedules its first generation."""
+    from .operators.fused_schedule import fused_filter_schedule
+    from .operators.scheduler import SchedulerConfig
     from .plans.crawl import prepare_frontier
     from .sources.synthweb import SynthWebConfig, make_seed_urls, robots_pdf
 
     web = SynthWebConfig(n_hosts=8, base_pages=60)
     seeds = spark.createDataFrame(make_seed_urls(web, 64))
-    frontier = prepare_frontier(seeds, 8).withColumn("generation", F.lit(0))
-    robots = spark.createDataFrame(robots_pdf(web))
-    scheduled, _, _ = schedule_generation(frontier, robots, SchedulerConfig())
-    return scheduled.select("host", "url_canon", "host_rank", "fetch_offset_ms")
+    frontier = prepare_frontier(seeds, 8).withColumn("is_new", F.lit(False))
+    out = fused_filter_schedule(
+        spark, frontier, None, robots_pdf(web), SchedulerConfig(), n_host_buckets=8
+    )
+    return out.filter("status = 'scheduled'").select(
+        "host", "url_canon", "host_rank", "fetch_offset_ms"
+    )
 
 
 def q_phash_near_dups(spark: SparkSession, sf: str) -> DataFrame:
@@ -4944,8 +4950,8 @@ FROM kept GROUP BY 1
 def q_bloom_seen_sql(spark: SparkSession, sf: str) -> DataFrame:
     """The URL-seen Bloom-filter law itself, cross-engine checkable —
     the declarative twin of the engine's partitioned seen-set
-    (operators/seen_set.py builds one filter per host bucket and
-    merges via treeAggregate; reference analog: the visited-set checks
+    (operators/seen_set.py builds one filter per host bucket; the
+    fused frontier step probes it; reference analog: the visited-set checks
     in /root/reference crawl loops). Per host bucket a 1008-bit filter
     (16 words x 63 bits — 63 keeps every mask positive in both
     engines' signed int64), k=2 md5 lanes per URL. Seen set = even

@@ -14,9 +14,10 @@ that is Structured Streaming:
   late-data tolerance: re-crawl keeps updating until "end",
   /root/reference/worldcup/applications.py:39-40).
 * ``stream_crawl`` — ``foreachBatch`` crawl: each arriving seed-batch
-  file becomes one frontier generation driven through the same
-  canonize → seen-filter → schedule → fetch step as the batch engine,
-  with the SeenSet carried across micro-batches (the idempotent-upsert
+  file becomes one frontier generation driven through the same fused
+  frontier step as the batch engine (operators/fused_schedule.py), with
+  the exact seen-set and the budget-deferred frontier carried across
+  micro-batches (the idempotent-upsert
   analog of /root/reference/worldcup/db/deal_mysql_info.py:44-57).
 
 At cluster scale the same code runs with ``trigger(processingTime=...)``
@@ -25,14 +26,14 @@ against a landing bucket; tests use ``availableNow`` for determinism.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.scheduler import SchedulerConfig, schedule_generation
-from ..operators.seen_set import BloomParams, SeenSet
-from ..plans.crawl import canonize
+from ..operators.fused_schedule import fused_filter_schedule, robots_state, seen_state
+from ..operators.scheduler import SchedulerConfig
+from ..plans.crawl import _split_next, canonize
 from ..sources.fetcher import fetch_scheduled
 from ..sources.synthweb import SynthWebConfig, robots_pdf
 
@@ -143,11 +144,12 @@ def stream_view_purchase_join(
 
 @dataclass
 class StreamCrawlState:
-    """Cross-batch crawl state: the seen-set and generation counter."""
+    """Cross-batch crawl state: the exact seen-set (url_hash,
+    host_bucket), the budget-deferred frontier and the generation counter."""
 
-    seen: SeenSet
+    seen: DataFrame | None = None
+    deferred: DataFrame | None = None
     generation: int = 0
-    pages_batches: list = field(default_factory=list)
     scheduled_total: int = 0
 
 
@@ -158,16 +160,19 @@ def stream_crawl(
     checkpoint_dir: str,
     web: SynthWebConfig | None = None,
     n_host_buckets: int = 8,
-    bloom: BloomParams | None = None,
     trigger: dict | None = None,
 ):
     """Micro-batch crawl: each seed parquet file that lands in
-    ``seeds_dir`` is one generation. Returns (query, state).
+    ``seeds_dir`` is one generation (``maxFilesPerTrigger`` = 1). Returns
+    (query, state).
 
-    Seed schema: (url string, seed_rank long). Pages land under
-    ``out_dir`` partitioned by generation; the exact seen-set and Bloom
-    blobs persist across batches in driver+executor state exactly like
-    the batch loop.
+    Seed schema: (url string, seed_rank long). Each batch's seeds are new
+    candidates (priority = seed_rank) for the fused frontier step, next to
+    the rows the previous batch deferred for politeness budget, which
+    compete first (``is_new = false``, exactly as in the batch loop) —
+    a URL marked seen is never dropped unfetched. Pages land under
+    ``out_dir`` partitioned by generation; the seen-set and deferred
+    frontier live in driver+executor state across batches.
 
     ``trigger`` passes through to ``writeStream.trigger`` — default
     ``{"availableNow": True}`` (drain-and-stop, deterministic tests);
@@ -175,34 +180,34 @@ def stream_crawl(
     query keeps polling ``seeds_dir`` for newly landed seed files.
     """
     web = web or SynthWebConfig()
-    bloom = bloom or BloomParams.size_for(100_000)
-    robots = spark.createDataFrame(robots_pdf(web))
-    state = StreamCrawlState(seen=SeenSet(spark, bloom))
+    robots = robots_state(spark, robots_pdf(web), n_host_buckets)
+    state = StreamCrawlState()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         g = state.generation
-        frontier = (
-            canonize(batch_df, n_host_buckets)
-            .withColumn("priority", F.col("seed_rank").cast("long"))
-            .groupBy("url_hash")
-            .agg(
-                F.min("priority").alias("priority"),
-                F.any_value("url_canon").alias("url_canon"),
-                F.any_value("host").alias("host"),
-                F.any_value("host_bucket").alias("host_bucket"),
-            )
+        cand = canonize(batch_df, n_host_buckets).select(
+            "url_hash", "url_canon", "host", "host_bucket",
+            F.col("seed_rank").cast("long").alias("priority"),
+            F.lit(True).alias("is_new"), F.lit(0).alias("retry_count"),
         )
-        new = state.seen.filter_new(frontier).persist()
-        if new.isEmpty():
-            new.unpersist()
-            return
-        state.seen.add(new)
-        scheduled, _deferred, _dis = schedule_generation(
-            new.withColumn("generation", F.lit(g)), robots, SchedulerConfig()
-        )
-        fetched = fetch_scheduled(scheduled, web)
+        st = robots
+        if state.seen is not None:
+            st = seen_state(state.seen).unionByName(robots)
+        if state.deferred is not None:
+            cand = cand.unionByName(state.deferred.withColumn("is_new", F.lit(False)))
+        out = fused_filter_schedule(
+            spark, cand, None, None, SchedulerConfig(), state=st,
+        ).localCheckpoint(eager=True)
+        # every surviving new row (scheduled, deferred or disallowed) joins
+        # the seen-set; deferred rows ride into the next batch
+        delta = out.filter("is_new").select("url_hash", "host_bucket")
+        if state.seen is not None:
+            delta = state.seen.unionByName(delta)
+        state.seen = delta.localCheckpoint(eager=True)
+        scheduled, state.deferred = _split_next(out)
+        fetched = fetch_scheduled(scheduled.withColumn("generation", F.lit(g)), web)
         pages = fetched.filter("ok").select(
             "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
             "generation", "url_canon",
@@ -210,10 +215,10 @@ def stream_crawl(
         pages.write.mode("append").parquet(f"{out_dir}/generation={g}")
         state.scheduled_total += scheduled.count()
         state.generation += 1
-        new.unpersist()
 
     query = (
         spark.readStream.schema("url string, seed_rank long")
+        .option("maxFilesPerTrigger", 1)
         .parquet(seeds_dir)
         .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)

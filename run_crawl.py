@@ -41,8 +41,6 @@ def main() -> None:
     ap.add_argument("--max-retries", type=int, default=0)
     ap.add_argument("--host-quota", type=int, default=None)
     ap.add_argument("--transient-fail-mod", type=int, default=0)
-    ap.add_argument("--composed", action="store_true",
-                    help="use the composed Catalyst chain instead of the fused loop")
     args = ap.parse_args()
 
     from crawlers_spark.operators.seen_set import BloomParams
@@ -63,7 +61,6 @@ def main() -> None:
         checkpoint_dir=args.checkpoint,
         max_retries=args.max_retries,
         total_budget_per_host=args.host_quota,
-        fused=not args.composed,
     )
     seeds = spark.createDataFrame(make_seed_urls(web, args.seeds))
     res = CrawlPlan(spark, cfg).run(seeds, resume=args.resume)

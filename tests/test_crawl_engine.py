@@ -24,18 +24,12 @@ def oracle_result():
     return crawl_serial(WEB, make_seed_urls(WEB, N_SEEDS), max_generations=MAX_GENS)
 
 
-@pytest.fixture(scope="module", params=[True, False], ids=["fused", "composed"])
-def crawl_mode(request):
-    return request.param
-
-
 @pytest.fixture(scope="module")
-def engine_result(spark, crawl_mode):
+def engine_result(spark):
     cfg = CrawlConfig(
         web=WEB,
         bloom=BloomParams.size_for(20_000, n_buckets=16),
         max_generations=MAX_GENS,
-        fused=crawl_mode,
     )
     seeds = spark.createDataFrame(make_seed_urls(WEB, N_SEEDS))
     return CrawlPlan(spark, cfg).run(seeds)
@@ -98,13 +92,12 @@ def test_politeness_offsets(engine_result):
     assert (multi["max"] > 0).all()
 
 
-def test_resume_equals_uninterrupted(spark, tmp_path, engine_result, crawl_mode):
+def test_resume_equals_uninterrupted(spark, tmp_path, engine_result):
     cfg = CrawlConfig(
         web=WEB,
         bloom=BloomParams.size_for(20_000, n_buckets=16),
         max_generations=2,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        fused=crawl_mode,
     )
     seeds = spark.createDataFrame(make_seed_urls(WEB, N_SEEDS))
     CrawlPlan(spark, cfg).run(seeds)  # killed after generation 1
@@ -114,7 +107,6 @@ def test_resume_equals_uninterrupted(spark, tmp_path, engine_result, crawl_mode)
         bloom=BloomParams.size_for(20_000, n_buckets=16),
         max_generations=MAX_GENS - 2,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        fused=crawl_mode,
     )
     resumed = CrawlPlan(spark, cfg2).run(seeds, resume=True)
 
@@ -132,6 +124,31 @@ def test_resume_equals_uninterrupted(spark, tmp_path, engine_result, crawl_mode)
     assert res_seen == full_seen
 
 
+@pytest.mark.parametrize("quota", [None, 9])
+def test_checkpoint_layout(spark, tmp_path, quota):
+    """A checkpointed generation holds exactly what resume (and the
+    benchmark's resume probe) reads: pages, crawl_log, frontier_sched,
+    seen_exact, plus host_spent when a lifetime quota is set."""
+    import os
+
+    web = SynthWebConfig(n_hosts=4, base_pages=20)
+    ckpt = tmp_path / "ckpt"
+    cfg = CrawlConfig(
+        web=web, bloom=BloomParams.size_for(1_000, n_buckets=4), n_host_buckets=4,
+        max_generations=2, checkpoint_dir=str(ckpt), total_budget_per_host=quota,
+    )
+    res = CrawlPlan(spark, cfg).run(spark.createDataFrame(make_seed_urls(web, 10)))
+    assert res.generations == 2
+    want = {"pages", "crawl_log", "frontier_sched", "seen_exact"}
+    if quota is not None:
+        want.add("host_spent")
+    assert sorted(os.listdir(ckpt)) == [
+        "gen=00000", "gen=00001", "manifest_gen=00000.json", "manifest_gen=00001.json",
+    ]
+    for g in ("gen=00000", "gen=00001"):
+        assert set(os.listdir(ckpt / g)) == want, g
+
+
 def test_retry_requeue_matches_oracle(spark):
     """Bounded requeue of transient failures: engine (fused loop) must
     reproduce the serial oracle exactly — retried rows re-enter later
@@ -144,7 +161,6 @@ def test_retry_requeue_matches_oracle(spark):
         bloom=BloomParams.size_for(20_000, n_buckets=16),
         max_generations=5,
         max_retries=2,
-        fused=True,
     )
     res = CrawlPlan(spark, cfg).run(spark.createDataFrame(seeds_pdf))
 
@@ -186,7 +202,6 @@ def test_lifetime_host_quota_matches_oracle(spark):
         bloom=BloomParams.size_for(20_000, n_buckets=16),
         max_generations=5,
         total_budget_per_host=9,
-        fused=True,
     )
     res = CrawlPlan(spark, cfg).run(spark.createDataFrame(seeds_pdf))
 
@@ -206,7 +221,7 @@ def test_lifetime_host_quota_matches_oracle(spark):
 
 
 def test_fused_inmemory_storage_flat(spark):
-    """Non-checkpoint fused mode must not pin one fetch cache per
+    """Non-checkpoint mode must not pin one fetch cache per
     generation: after N generations the persisted-RDD count stays
     bounded by the per-generation working set (fetched is unpersisted
     and pages/log parts are eager localCheckpoints of output columns
@@ -216,7 +231,6 @@ def test_fused_inmemory_storage_flat(spark):
         web=WEB,
         bloom=BloomParams.size_for(20_000, n_buckets=16),
         max_generations=MAX_GENS,
-        fused=True,
     )
     res = CrawlPlan(spark, cfg).run(spark.createDataFrame(make_seed_urls(WEB, N_SEEDS)))
     assert res.generations >= 4

@@ -1,9 +1,11 @@
-"""Fused bucket-local frontier step ≡ composed Catalyst operator chain.
+"""Fused bucket-local frontier step ≡ independent oracles.
 
-The fused cogroup.applyInPandas path (operators/fused_schedule.py) must
-produce exactly the same scheduled set, ranks, and offsets as the
-composed path (dedup groupBy → SeenSet.filter_new → schedule_generation)
-on the same candidates + seen-set + robots."""
+The fused cogroup.applyInArrow step (operators/fused_schedule.py) must
+produce exactly the same scheduled set, ranks, and offsets as a plain
+Catalyst chain (groupBy dedup → left_anti seen-filter → per-host
+row_number window), and row-for-row the same output as the pandas
+rendering of its kernel (tests/fused_oracles.py), on the same
+candidates + seen-set + robots."""
 
 from __future__ import annotations
 
@@ -16,10 +18,11 @@ from crawlers_spark.operators.fused_schedule import (
     build_host_bucket_blobs,
     fused_filter_schedule,
 )
-from crawlers_spark.operators.scheduler import SchedulerConfig, schedule_generation
-from crawlers_spark.operators.seen_set import BloomParams, SeenSet
-from crawlers_spark.plans.crawl import prepare_frontier
+from crawlers_spark.operators.scheduler import SchedulerConfig
+from crawlers_spark.operators.seen_set import BloomParams
+from crawlers_spark.plans.crawl import canonize, prepare_frontier
 from crawlers_spark.sources.synthweb import SynthWebConfig, make_seed_urls, robots_pdf
+from fused_oracles import catalyst_schedule, pandas_fused_schedule
 
 N_BUCKETS = 16
 
@@ -33,30 +36,14 @@ def setup(spark):
         make_seed_urls(web, 400).assign(seed_rank=lambda d: d.seed_rank + 3000)
     )
     preseen = prepare_frontier(preseen_urls, N_BUCKETS).persist()
-    candidates = prepare_frontier(seeds, N_BUCKETS).persist()
-    # raw (un-deduped) candidate spellings for the fused path, which does
-    # its own dedup: canonize without the groupBy
-    from crawlers_spark.plans.crawl import canonize
-
+    # raw (un-deduped) candidate spellings: the step does its own dedup
     raw = (
-        canonize(spark.createDataFrame(make_seed_urls(web, 900)), N_BUCKETS)
+        canonize(seeds, N_BUCKETS)
         .withColumn("priority", F.col("seed_rank").cast("long"))
         .persist()
     )
     robots = robots_pdf(web)
-    return spark, web, params, preseen, candidates, raw, robots
-
-
-def _composed(spark, params, preseen, candidates, robots):
-    seen = SeenSet(spark, params)
-    seen.add(preseen)
-    new = seen.filter_new(candidates)
-    sched, deferred, disallowed = schedule_generation(
-        new.withColumn("generation", F.lit(0)),
-        spark.createDataFrame(robots),
-        SchedulerConfig(),
-    )
-    return sched, deferred, disallowed
+    return spark, web, params, preseen, raw, robots
 
 
 def _fused(spark, params, preseen, raw, robots, n_salts=1):
@@ -69,39 +56,21 @@ def _fused(spark, params, preseen, raw, robots, n_salts=1):
 
 
 def test_fused_matches_composed(setup):
-    spark, web, params, preseen, candidates, raw, robots = setup
-    sched_c, def_c, dis_c = _composed(spark, params, preseen, candidates, robots)
-    out_f = _fused(spark, params, preseen, raw, robots).persist()
-
-    comp = {
-        (r["url_hash"], r["host_rank"], r["fetch_offset_ms"])
-        for r in sched_c.select("url_hash", "host_rank", "fetch_offset_ms").collect()
+    """The fused step ≡ the composed Catalyst chain of tests/fused_oracles.py."""
+    spark, web, params, preseen, raw, robots = setup
+    want = {tuple(r) for r in catalyst_schedule(spark, raw, preseen, robots).collect()}
+    got = {
+        (r["url_hash"], r["status"], r["host_rank"], r["fetch_offset_ms"])
+        for r in _fused(spark, params, preseen, raw, robots).collect()
     }
-    fus = {
-        (r["url_hash"], r["host_rank"], r["fetch_offset_ms"])
-        for r in out_f.filter("status = 'scheduled'").collect()
-    }
-    assert comp == fus
-
-    # new set (scheduled + deferred) matches the composed new set
-    comp_new = {r["url_hash"] for r in sched_c.select("url_hash").collect()} | {
-        r["url_hash"] for r in def_c.select("url_hash").collect()
-    }
-    fus_new = {
-        r["url_hash"] for r in out_f.filter("status != 'disallowed'").collect()
-    }
-    assert comp_new == fus_new
-
-    # disallowed sets match
-    dis_comp = {r["url_hash"] for r in dis_c.select("url_hash").collect()}
-    dis_fus = {r["url_hash"] for r in out_f.filter("status = 'disallowed'").collect()}
-    # composed path drops disallowed AFTER seen-filter too; both sides
-    # apply seen-filter first, so the sets are comparable directly
-    assert dis_comp == dis_fus
+    # unsalted, deferred rows carry their over-budget host rank in both
+    assert got == want
+    statuses = {t[1] for t in got}
+    assert statuses == {"scheduled", "deferred", "disallowed"}, statuses
 
 
 def test_fused_empty_candidates(setup):
-    spark, web, params, preseen, _c, _raw, robots = setup
+    spark, web, params, preseen, _raw, robots = setup
     empty = spark.createDataFrame(
         [], "url_hash long, url_canon string, host string, host_bucket int, priority long"
     )
@@ -113,7 +82,7 @@ def test_salted_matches_unsalted(setup):
     """n_salts > 1 (the mega-host skew escape hatch) must leave the
     scheduled set, ranks, and offsets bit-identical — the salted path is
     a two-phase EXACT top-k, not an approximation."""
-    spark, web, params, preseen, _c, raw, robots = setup
+    spark, web, params, preseen, raw, robots = setup
     base = _fused(spark, params, preseen, raw, robots).persist()
     salted = _fused(spark, params, preseen, raw, robots, n_salts=4).persist()
 
@@ -202,7 +171,7 @@ def test_null_host_candidate_does_not_crash(spark, setup):
     """A caller-supplied host column may carry nulls (their extraction
     failing on a malformed URL); the fused kernel must process the row
     with scheduler defaults instead of crashing np.unique."""
-    _spark, _web, _params, _preseen, _cands, _raw, robots = setup
+    _spark, _web, _params, _preseen, _raw, robots = setup
     cand = spark.createDataFrame(
         pd.DataFrame({
             "url_hash": [11, 12],
@@ -223,51 +192,48 @@ def test_null_host_candidate_does_not_crash(spark, setup):
 
 @pytest.mark.parametrize("n_salts", [1, 4])
 def test_arrow_kernel_matches_pandas_kernel(spark, setup, n_salts):
-    """applyInArrow kernel ≡ applyInPandas kernel, row-for-row, including
-    the emit_dropped dup/seen segments and lifetime-quota budgets."""
-    _spark, _web, params, preseen, _cands, raw, robots = setup
+    """applyInArrow kernel (salted or not) ≡ the unsalted pandas kernel of
+    tests/fused_oracles.py, row-for-row, including the emit_dropped
+    dup/seen segments and lifetime-quota budgets."""
+    _spark, _web, params, preseen, raw, robots = setup
     blobs = build_host_bucket_blobs(preseen, params)
     exact = preseen.select("url_hash", "host_bucket")
     host_spent = spark.createDataFrame(
         pd.DataFrame({"host": ["host0000.test", "host0001.test"], "spent": [995, 2]})
     )
+    kw = dict(blobs=blobs, params=params, emit_dropped=True, host_spent=host_spent,
+              total_budget_per_host=1000, n_host_buckets=N_BUCKETS)
 
-    def go(use_arrow):
-        rows = fused_filter_schedule(
-            spark, raw, exact, robots, SchedulerConfig(), blobs=blobs,
-            params=params, emit_dropped=True, host_spent=host_spent,
-            total_budget_per_host=1000, n_host_buckets=N_BUCKETS,
-            n_salts=n_salts, use_arrow=use_arrow,
-        ).collect()
-        return sorted(tuple(r) for r in rows)
+    def rows(df):
+        # host_rank of deferred rows is not globally meaningful under
+        # salting (phase-1-deferred rows report 0; module docstring)
+        blank = n_salts > 1
+        return sorted(
+            t[:8] + ((None if blank and t[7] == "deferred" else t[8]),) + t[9:]
+            for t in map(tuple, df.collect())
+        )
 
-    a, p = go(True), go(False)
-    assert len(a) == len(p)
-    if n_salts > 1:
-        # host_rank of phase-1-deferred rows is not globally meaningful
-        # under salting (module docstring) — compare without it
-        def strip(rows):
-            return sorted(t[:8] + t[9:] for t in rows)
-        assert strip(a) == strip(p)
-    else:
-        assert a == p
+    a = rows(fused_filter_schedule(
+        spark, raw, exact, robots, SchedulerConfig(), n_salts=n_salts, **kw
+    ))
+    p = rows(pandas_fused_schedule(spark, raw, exact, robots, SchedulerConfig(), **kw))
+    assert a == p
     statuses = {t[7] for t in a}
-    assert {"scheduled", "dup", "seen"} <= statuses
+    assert {"scheduled", "deferred", "dup", "seen"} <= statuses
 
 
 @pytest.mark.parametrize("n_salts", [1, 4])
-@pytest.mark.parametrize("use_arrow", [True, False])
 @pytest.mark.parametrize("mode,kept", [
     ("frontier", {"scheduled", "deferred"}),
     ("scheduled", {"scheduled"}),
 ])
-def test_emit_strings_modes(spark, setup, mode, kept, use_arrow, n_salts):
+def test_emit_strings_modes(spark, setup, mode, kept, n_salts):
     """emit_strings trims url_canon/host to the keep set and changes
     NOTHING else: every hash/flag column is bit-identical to mode="all",
     kept rows carry the identical strings, all other rows carry null —
-    in both kernels and under salting (where the loop's auto_salt can
-    engage it with "frontier" strings)."""
-    _spark, _web, params, preseen, _cands, raw, robots = setup
+    also under salting (where the loop's auto_salt can engage it with
+    "frontier" strings)."""
+    _spark, _web, params, preseen, raw, robots = setup
     blobs = build_host_bucket_blobs(preseen, params)
     exact = preseen.select("url_hash", "host_bucket")
 
@@ -275,7 +241,7 @@ def test_emit_strings_modes(spark, setup, mode, kept, use_arrow, n_salts):
         rows = fused_filter_schedule(
             spark, raw, exact, robots, SchedulerConfig(), blobs=blobs,
             params=params, emit_dropped=True, n_host_buckets=N_BUCKETS,
-            use_arrow=use_arrow, emit_strings=emit_strings, n_salts=n_salts,
+            emit_strings=emit_strings, n_salts=n_salts,
         ).collect()
         return {r["url_hash"]: r for r in rows}
 

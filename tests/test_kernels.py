@@ -10,7 +10,7 @@ from crawlers_spark.functions.images import (
 )
 from crawlers_spark.functions.urls import canon_urls, url_host
 from crawlers_spark.operators.seen_set import (
-    BloomParams, bloom_build_blob, bloom_merge_blobs, bloom_test_blob,
+    BloomParams, bloom_build_blob, bloom_test_blob,
 )
 from crawlers_spark.sources.synthweb import (
     SynthWebConfig, fetch_pages_pdf, make_seed_urls, page_specs, parse_page_urls,
@@ -114,13 +114,6 @@ class TestBloom:
         probe = fnv64(pd.Series([f"v{i}" for i in range(20000)]))
         fpr = bloom_test_blob(probe, blob, params).mean()
         assert fpr < 0.03, fpr
-
-    def test_merge_is_union(self):
-        params = BloomParams(n_buckets=1, bits_per_bucket=1 << 14, n_hashes=5)
-        a = fnv64(pd.Series([f"a{i}" for i in range(100)]))
-        b = fnv64(pd.Series([f"b{i}" for i in range(100)]))
-        merged = bloom_merge_blobs(bloom_build_blob(a, params), bloom_build_blob(b, params))
-        assert bloom_test_blob(np.concatenate([a, b]), merged, params).all()
 
     def test_empty_blob(self):
         params = BloomParams()

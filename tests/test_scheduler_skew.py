@@ -1,9 +1,9 @@
 """Skew behavior of the politeness scheduler: a mega-host frontier.
 
 The reference's world is perfectly skewed (one site per crawler file);
-the engine's salted two-phase top-k must (a) produce exactly the same
-schedule as a naive single window, (b) bound phase-1 survivor counts so
-no task ever sorts more than salt_slices x budget rows of one host.
+the fused frontier step's salted two-phase top-k (n_salts > 1) must
+produce exactly the same schedule as a naive single window, with
+offsets stepping by the host's crawl delay.
 """
 
 from __future__ import annotations
@@ -14,7 +14,10 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from crawlers_spark.operators.scheduler import SchedulerConfig, schedule_generation
+from crawlers_spark.operators.fused_schedule import fused_filter_schedule
+from crawlers_spark.operators.scheduler import SchedulerConfig
+
+N_SALTS = 8
 
 
 @pytest.fixture(scope="module")
@@ -29,36 +32,40 @@ def skewed(spark):
             "url_canon": [f"http://{h}/p/{i}" for i, h in enumerate(hosts)],
             "url_hash": rng.randint(-(2**62), 2**62, n),
             "host": hosts,
+            # one host bucket: every host, the mega-host included, shares it
             "host_bucket": np.zeros(n, np.int32),
             "priority": np.arange(n, dtype=np.int64),
-            "generation": np.zeros(n, np.int32),
         }
     )
     frontier = spark.createDataFrame(pdf)
-    robots = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "host": ["mega.test"],
-                "crawl_delay_ms": [500],
-                "max_per_generation": [40],
-                "disallow_prefixes": [[]],
-            }
-        )
+    robots = pd.DataFrame(
+        {
+            "host": ["mega.test"],
+            "crawl_delay_ms": [500],
+            "max_per_generation": [40],
+            "disallow_prefixes": [[]],
+        }
     )
-    return frontier, robots
+    out = fused_filter_schedule(
+        spark, frontier, None, robots, SchedulerConfig(), n_host_buckets=1,
+        n_salts=N_SALTS,
+    ).persist()
+    yield frontier, robots, out
+    out.unpersist()
 
 
 def test_salted_matches_naive_schedule(spark, skewed):
-    frontier, robots = skewed
-    cfg = SchedulerConfig(salt_slices=8)
-    sched, deferred, dis = schedule_generation(frontier, robots, cfg)
+    frontier, robots, out = skewed
+    cfg = SchedulerConfig()
     got = {
         (r["url_hash"], r["host_rank"])
-        for r in sched.select("url_hash", "host_rank").collect()
+        for r in out.filter("status = 'scheduled'").select("url_hash", "host_rank").collect()
     }
     # naive single-window reference
     w = Window.partitionBy("host").orderBy("priority", "url_hash")
-    joined = frontier.join(F.broadcast(robots), "host", "left").withColumn(
+    joined = frontier.join(
+        F.broadcast(spark.createDataFrame(robots)), "host", "left"
+    ).withColumn(
         "max_per_generation", F.coalesce("max_per_generation", F.lit(cfg.default_budget))
     )
     naive = (
@@ -70,15 +77,17 @@ def test_salted_matches_naive_schedule(spark, skewed):
         for r in naive.select("url_hash", "host_rank").collect()
     }
     assert got == want
-    # nothing lost: scheduled + deferred + disallowed == frontier
-    assert sched.count() + deferred.count() + dis.count() == frontier.count()
+    # nothing lost: every frontier row comes back scheduled or deferred
+    assert out.count() == frontier.count()
+    assert {r["status"] for r in out.select("status").distinct().collect()} == {
+        "scheduled", "deferred",
+    }
 
 
 def test_offsets_follow_crawl_delay(spark, skewed):
-    frontier, robots = skewed
-    sched, _, _ = schedule_generation(frontier, robots, SchedulerConfig(salt_slices=8))
+    _frontier, _robots, out = skewed
     mega = (
-        sched.filter(F.col("host") == "mega.test")
+        out.filter((F.col("status") == "scheduled") & (F.col("host") == "mega.test"))
         .orderBy("host_rank")
         .select("host_rank", "fetch_offset_ms")
         .collect()
