@@ -354,15 +354,16 @@ def _kernel_chunk(args) -> int:
     """The ACTUAL frontier kernels (gen -> canon -> hash -> bucket), bare."""
     start, n = args
     import numpy as np
+    import pyarrow as pa
 
     from crawlers_spark.functions.hashing import fnv64, pmod_bucket
-    from crawlers_spark.functions.urls import canon_with_host
+    from crawlers_spark.functions.urls import canon_arr
     from crawlers_spark.sources.synthweb import SynthWebConfig, seed_urls_pdf
 
     cfg = SynthWebConfig(n_hosts=CRAWL_BENCH["n_hosts"],
                          base_pages=CRAWL_BENCH["base_pages"])
     raw = seed_urls_pdf(cfg, np.arange(start, start + n, dtype=np.int64))
-    canon, host = canon_with_host(raw["url"])
+    canon, host = canon_arr(pa.array(raw["url"], type=pa.large_string()))
     h = fnv64(canon)
     b = pmod_bucket(fnv64(host), CRAWL_BENCH["n_host_buckets"])
     return int(h[0]) ^ int(b[-1])
@@ -384,7 +385,7 @@ def _kernel_ipc_chunk(args) -> int:
     import pyarrow as pa
 
     from crawlers_spark.functions.hashing import fnv64, pmod_bucket
-    from crawlers_spark.functions.urls import canon_with_host
+    from crawlers_spark.functions.urls import canon_arr
     from crawlers_spark.sources.synthweb import SynthWebConfig, seed_urls_pdf
 
     cfg = SynthWebConfig(n_hosts=CRAWL_BENCH["n_hosts"],
@@ -401,11 +402,11 @@ def _kernel_ipc_chunk(args) -> int:
     for off in range(start, start + n, 10_000):
         ids = np.arange(off, min(off + 10_000, start + n), dtype=np.int64)
         raw = seed_urls_pdf(cfg, ids)
-        canon, host = canon_with_host(raw["url"])
+        canon, host = canon_arr(pa.array(raw["url"], type=pa.large_string()))
         h = fnv64(canon)
         b = pmod_bucket(fnv64(host), CRAWL_BENCH["n_host_buckets"])
         tbl = pa.table({
-            "url_canon": pa.array(canon), "url_hash": pa.array(h),
+            "url_canon": canon, "url_hash": pa.array(h),
             "host_bucket": pa.array(b), "priority": pa.array(ids),
         })
         if writer is None:

@@ -9,14 +9,17 @@ DataFrame + vectorized pandas/Arrow-UDF pipeline:
   text-analysis functions (lang-id, quality, tokens, fingerprints).
 * ``sources``    — table IO facade (Parquet now, Iceberg-compatible
   layout), the deterministic synthetic web + ``mapInPandas`` fetch stage.
-* ``operators``  — partitioned Bloom seen-set (treeAggregate merge),
-  politeness-aware priority scheduler, dedup family (exact / MinHash-LSH /
-  SimHash / n-gram Jaccard / embedding cosine), similarity search,
-  near-dup cluster closure (connected components), deterministic
-  mixture sampling + benchmark decontamination.
+* ``operators``  — the fused frontier step (dedup + exact seen-set +
+  robots + per-host politeness schedule in one bucket-local cogroup),
+  per-bucket Bloom blobs that pre-filter its seen probe, dedup family
+  (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding cosine),
+  similarity search, near-dup cluster closure (connected components),
+  deterministic mixture sampling + benchmark decontamination.
 * ``plans``      — the generation crawl loop with checkpoint/resume,
   per-partition lineage and metrics.
 * ``streaming``  — Structured-Streaming generation driver.
+* ``queries``    — the driver-contract registry: 272 Spark queries, 255
+  of them with a DuckDB oracle.
 
 Everything data-parallel is DataFrame-first; Python appears only inside
 Arrow-batched pandas UDFs (no per-row Python in any hot path).

@@ -1,4 +1,4 @@
-"""Vectorized URL canonicalization + parsing (pyarrow/pandas kernels).
+"""Vectorized URL canonicalization + parsing (pyarrow.compute kernels).
 
 Composes the reference's scattered URL scalar ops — component split
 (/root/reference/nft/get_opensea_v1.1.py:249-250,
@@ -13,17 +13,16 @@ canonical form:
   | percent-escapes normalized (RFC 3986 §6.2.2.1-2: hex uppercased,
   unreserved characters decoded, reserved left intact)
 
-Two implementations with identical output (differential-tested in
-tests/test_canon_properties.py):
-
-* ``_canon_urls_pa`` — pyarrow.compute kernels (RE2 extract, vectorized
-  case/trim/join over contiguous Arrow buffers). This is the hot path:
-  ~5x less CPU and far less allocator/memory-bandwidth traffic than
-  object-dtype pandas, which is what lets the kernel keep scaling when
-  all cores are busy (object strings saturate DRAM bandwidth long before
-  Arrow buffers do).
-* ``_canon_urls_pd`` — the original pandas ``.str`` implementation, kept
-  as the no-pyarrow fallback and as the differential-test oracle.
+One implementation, ``canon_arr``: pyarrow.compute kernels (RE2
+extract, vectorized case/trim/join over contiguous Arrow buffers). The
+mapInArrow/applyInArrow kernels call it on Arrow columns; ``canon_urls``
+and ``url_host`` are its pandas-Series entry points. Arrow needs ~5x
+less CPU and far less allocator/memory-bandwidth traffic than
+object-dtype pandas, which is what lets the kernel keep scaling when all
+cores are busy (object strings saturate DRAM bandwidth long before Arrow
+buffers do). tests/canon_oracle.py keeps a pandas ``.str``
+implementation that tests/test_canon_properties.py checks this one
+against.
 
 The only non-columnar steps (query-param sort, percent-escape rewrite)
 run on exploded fragment tables via ``sort_values``/``map``/``groupby``
@@ -34,16 +33,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-
-from .hashing import fnv64
-
-try:  # pyarrow is a hard dep of pyspark's Arrow path, but stay importable
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    _HAS_PA = True
-except ImportError:  # pragma: no cover
-    _HAS_PA = False
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # RFC 3986 unreserved: ALPHA / DIGIT / "-" / "." / "_" / "~" — decoding
 # these never introduces a delimiter, so the rewrite is safe on the whole
@@ -56,9 +47,9 @@ _HEX2CODE = {f"{i:02X}": i for i in range(256)}
 _CODE2CHR = {i: chr(i) for i in range(256)}
 
 # exact set of code points Python's str.strip() removes (c.isspace()),
-# so the Arrow utf8_trim matches the pandas .str.strip() fallback bit
-# for bit (Arrow's utf8_trim_whitespace uses Unicode White_Space, which
-# differs at \x1c-\x1f)
+# so the Arrow utf8_trim matches pandas .str.strip() bit for bit
+# (Arrow's utf8_trim_whitespace uses Unicode White_Space, which differs
+# at \x1c-\x1f)
 _PY_WHITESPACE = "".join(chr(c) for c in range(0x3001) if chr(c).isspace())
 
 
@@ -98,7 +89,6 @@ def pct_normalize(s: pd.Series) -> pd.Series:
 # (the unanchored tail); replaces six full-string regex passes.
 # [0-9] (not \d) keeps Python-re and RE2 behavior identical (Python \d
 # matches Unicode digits; RE2 \d is ASCII).
-_SPLIT_RE = r"^(?:([A-Za-z][A-Za-z0-9+.-]*)://)?([^/?#]*)([^?#]*)(?:\?([^#]*))?"
 _SPLIT_RE_PA = (
     r"^(?:(?P<scheme>[A-Za-z][A-Za-z0-9+.-]*)://)?"
     r"(?P<hostport>[^/?#]*)(?P<path>[^?#]*)(?:\?(?P<query>[^#]*))?"
@@ -119,42 +109,14 @@ _DOT_PASSES = (
 
 def canon_urls(urls: pd.Series) -> pd.Series:
     """Canonicalize a Series of URL strings (see module docstring)."""
-    if _HAS_PA:
-        try:
-            out, _ = _canon_urls_pa_arr(urls, want_host=False)
-        except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError):
-            return _canon_urls_pd(urls)  # non-string objects in the column
-        # .to_numpy, NOT .to_pandas: Series data with an explicit index
-        # label-ALIGNS (reindexing the RangeIndexed result -> NaN/garbage
-        # for any caller passing a filtered/reordered Series)
-        return pd.Series(
-            out.to_numpy(zero_copy_only=False), index=urls.index,
-            name=urls.name, dtype=object,
-        )
-    return _canon_urls_pd(urls)
-
-
-def canon_with_host(urls: pd.Series) -> tuple[pd.Series, pd.Series]:
-    """(canonical URL, host of the canonical URL) in one pass.
-
-    ``url_host(canon_urls(u))`` re-parses every canonical string; the
-    Arrow pipeline already has the host component in hand, so fused
-    callers (candidate generation, the frontier bench) get it for free.
-    """
-    if _HAS_PA:
-        try:
-            out, host = _canon_urls_pa_arr(urls)
-        except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError):
-            canon = _canon_urls_pd(urls)
-            return canon, url_host(canon)
-        return (  # .to_numpy, not .to_pandas: see canon_urls
-            pd.Series(out.to_numpy(zero_copy_only=False), index=urls.index,
-                      dtype=object),
-            pd.Series(host.to_numpy(zero_copy_only=False), index=urls.index,
-                      dtype=object),
-        )
-    canon = _canon_urls_pd(urls)
-    return canon, url_host(canon)
+    out, _ = canon_arr(_to_arrow(urls), want_host=False)
+    # .to_numpy, NOT .to_pandas: Series data with an explicit index
+    # label-ALIGNS (reindexing the RangeIndexed result -> NaN/garbage
+    # for any caller passing a filtered/reordered Series)
+    return pd.Series(
+        out.to_numpy(zero_copy_only=False), index=urls.index,
+        name=urls.name, dtype=object,
+    )
 
 
 def _ls(x: str) -> "pa.Scalar":
@@ -169,14 +131,21 @@ def _scatter(arr: "pa.Array", idxs: np.ndarray, values: np.ndarray) -> "pa.Array
     return pa.array(objs, type=pa.large_string())
 
 
-def _canon_urls_pa_arr(
-    urls: pd.Series, want_host: bool = True
-) -> tuple["pa.Array", "pa.Array | None"]:
-    """Arrow fast path; returns (canon, host) as Arrow arrays."""
+def _to_arrow(urls: pd.Series) -> "pa.Array":
+    """large_string Arrow array of a Series (nulls and NaN become nulls).
+
+    A column holding non-string objects (ints, floats, bytes beside
+    them) is rendered with pandas ``astype(str)`` first, nulls as "":
+    42 -> "42", b"x" -> "x".
+    """
     s = urls if urls.dtype == object else urls.astype(object)
-    arr = pa.array(s.to_numpy(dtype=object, copy=False), type=pa.large_string(),
-                   from_pandas=True)
-    return canon_arr(arr, want_host=want_host)
+    try:
+        return pa.array(s.to_numpy(dtype=object, copy=False),
+                        type=pa.large_string(), from_pandas=True)
+    except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError):
+        s = urls.fillna("").astype(str)
+        return pa.array(s.to_numpy(dtype=object, copy=False),
+                        type=pa.large_string())
 
 
 def canon_arr(
@@ -185,8 +154,8 @@ def canon_arr(
     """Arrow-native canonicalization: pa string array in, pa arrays out.
 
     The applyInArrow/mapInArrow kernels call this directly so URL strings
-    never materialize as Python objects; same kernels (and bits) as the
-    pandas-facing :func:`canon_urls` / :func:`canon_with_host`.
+    never materialize as Python objects; :func:`canon_urls` is the
+    pandas-facing entry point to the same kernels.
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
@@ -266,52 +235,6 @@ def canon_arr(
     return out, pc.fill_null(host_out, _ls(""))
 
 
-def _canon_urls_pd(urls: pd.Series) -> pd.Series:
-    """Pandas fallback (differential-test oracle for the Arrow path)."""
-    s = urls.fillna("").astype(str).str.strip()
-    s = pct_normalize(s)
-
-    parts = s.str.extract(_SPLIT_RE)
-    scheme = parts[0].str.lower()
-    hostport = parts[1]
-    path = parts[2]
-    query = parts[3]
-
-    host = hostport.str.replace(r":[0-9]+$", "", regex=True).str.lower()
-    host = host.str.replace(r"^www\.", "", regex=True).str.rstrip(".")
-    port = hostport.str.extract(r":([0-9]+)$", expand=False)
-    default_port = pd.Series(
-        ((scheme == "http") & (port == "80")) | ((scheme == "https") & (port == "443")),
-        index=s.index,
-    )
-    port_part = port.where(~default_port & port.notna(), None)
-    port_sfx = (":" + port_part).fillna("")
-
-    path = path.replace("", "/")
-    slashes = path.str.contains("//", regex=False)
-    if slashes.any():
-        path.loc[slashes] = path.loc[slashes].str.replace(r"//+", "/", regex=True)
-    dots = path.str.contains("/.", regex=False)
-    if dots.any():
-        sub = path.loc[dots]
-        for _ in range(16):
-            before = sub
-            for pat, rep in _DOT_PASSES:
-                sub = sub.str.replace(pat, rep, regex=True)
-            if before.equals(sub):
-                break
-        path.loc[dots] = sub
-    trail = (path.str.len() > 1) & path.str.endswith("/")
-    if trail.any():
-        path.loc[trail] = path.loc[trail].str.rstrip("/")
-    path = path.mask(path == "", "/")
-
-    q = _canon_query(query)
-
-    out = scheme.fillna("http") + "://" + host + port_sfx + path + q
-    return out.where(host.str.len() > 0, s)
-
-
 def _canon_query(query: pd.Series) -> pd.Series:
     has_q = query.notna() & (query.str.len() > 0)
     if not has_q.any():
@@ -328,29 +251,9 @@ def _canon_query(query: pd.Series) -> pd.Series:
 
 def url_host(urls: pd.Series) -> pd.Series:
     """Host component of (already canonical) URLs."""
-    if _HAS_PA:
-        try:
-            s = urls if urls.dtype == object else urls.astype(object)
-            arr = pc.fill_null(
-                pa.array(s.to_numpy(dtype=object, copy=False), type=pa.large_string(),
-                         from_pandas=True),
-                "",
-            )
-            h = pc.struct_field(pc.extract_regex(arr, _HOST_RE_PA), "h")
-            return pd.Series(  # .to_numpy, not .to_pandas: see canon_urls
-                pc.fill_null(h, "").to_numpy(zero_copy_only=False),
-                index=urls.index, dtype=object,
-            )
-        except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError):
-            pass
-    return (
-        urls.fillna("")
-        .astype(str)
-        .str.replace(r"^[A-Za-z][A-Za-z0-9+.-]*://", "", regex=True)
-        .str.replace(r"[/:?#].*$", "", regex=True)
+    arr = pc.fill_null(_to_arrow(urls), "")
+    h = pc.struct_field(pc.extract_regex(arr, _HOST_RE_PA), "h")
+    return pd.Series(  # .to_numpy, not .to_pandas: see canon_urls
+        pc.fill_null(h, "").to_numpy(zero_copy_only=False),
+        index=urls.index, dtype=object,
     )
-
-
-def url_hash(urls: pd.Series) -> pd.Series:
-    """Canonical 64-bit URL hash (fnv64 over the canonical form)."""
-    return pd.Series(fnv64(urls), index=urls.index)

@@ -20440,6 +20440,10 @@ def q_mmr_diversification(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _mmr_oracle() -> str:
+    # Each round reads every earlier round, so an inlined CTE chain grows
+    # exponentially in the planner (DuckDB 1.0 inlines by default and
+    # spends minutes in EXPLAIN alone); MATERIALIZED plans each round and
+    # the pair similarities once. The result is the same.
     lam = _MMR_LAMBDA_E1 / 10.0
     rounds = ""
     for r in range(1, _MMR_ROUNDS + 1):
@@ -20460,7 +20464,7 @@ ms{r} AS (
   FROM cand c
   WHERE c.doc_id NOT IN (SELECT doc_id FROM picked{r})
 ),
-p{r} AS (
+p{r} AS MATERIALIZED (
   SELECT {r}::BIGINT AS round, doc_id, rel, max_sim,
          {lam} * rel_norm - {1 - lam} * max_sim AS mmr
   FROM ms{r}
@@ -20518,7 +20522,7 @@ big AS (
        LATERAL (SELECT unnest(range(1, len(arr))) AS i) s
 ),
 bsz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM big GROUP BY 1),
-sims AS (
+sims AS MATERIALIZED (
   SELECT x.doc_id AS a, y.doc_id AS b,
          CAST(count(*) AS DOUBLE)
            / CAST(sa.n + sb.n - count(*) AS DOUBLE) AS sim
@@ -21039,16 +21043,23 @@ QUERIES: dict[str, tuple] = {
 
 
 # The driver's CORRECTNESS gate value-compares exactly the FIRST 50 entries
-# of queries() against oracle_sql() at sf0.01 (observed cap, rounds 1-4:
-# 36/44/50/50 rows). This list curates that window deliberately (VERDICT r4
-# item #2): the image-dedup family (phash_near_dups / phash_clusters /
+# of queries() against oracle_sql() at sf0.01, pairing oracles by name.
+# Evidence, in the repo root: CORRECTNESS_r01.json .. CORRECTNESS_r04.json
+# hold 36/44/50/50 entries, each the leading entries of queries() at the
+# time; CORRECTNESS_r05.json holds exactly this list, in this order, and
+# its rows-only entries (image_decode_stats, phash_near_dups, ...) appear
+# with err "no_oracle" — so the driver slices queries(), not oracle_sql().
+# This list curates that window deliberately (VERDICT r4 item #2): the
+# image-dedup family (phash_near_dups / phash_clusters /
 # image_embed_near_dups / image_decode_stats) is IN — image_decode_stats is
 # rows-only by design (binary inputs have no DuckDB oracle) — displacing four
 # scalar-function rows (customer_strings, events_tz, event_durations,
 # order_month_dates) whose F-family ops are already proven by other green
 # rows. Everything outside the window is replica-verified by
 # tests/test_queries_oracle.py (same row-canon + order-insensitive compare)
-# at sf0.001 + sf0.01 — see QUERIES.md for the per-entry evidence label.
+# at sf0.001 in the default suite. The sf0.01 replica run is manual:
+# ``SPARK_GRAFT_TEST_SF=<sf0.01 tables dir> pytest tests/test_queries_oracle.py``.
+# See QUERIES.md for the per-entry evidence label.
 DRIVER_WINDOW: list[str] = [
     "pricing_summary",
     "orders_flatten",

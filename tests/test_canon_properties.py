@@ -1,17 +1,19 @@
 """Property-based tests for URL canonicalization (Hypothesis).
 
-The pandas kernel must agree with a per-row urllib-based model on
-generated URLs, and must be idempotent / order-insensitive over batches.
+The Arrow kernel must agree with a per-row urllib-based model and with
+the pandas oracle (tests/canon_oracle.py) on generated URLs, and must be
+idempotent / order-insensitive over batches.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+from canon_oracle import canon_urls_pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from urllib.parse import urlsplit
 
-from crawlers_spark.functions.urls import canon_urls
+from crawlers_spark.functions.urls import canon_urls, url_host
 
 host_label = st.from_regex(r"[a-z]([a-z0-9-]{0,8}[a-z0-9])?", fullmatch=True)
 hosts = st.builds(lambda a, b: f"{a}.{b}", host_label, st.sampled_from(["com", "test", "org"]))
@@ -71,6 +73,7 @@ def test_matches_urllib_model(scheme, www, host, port, path, q, frag):
     url += frag
     got = canon_urls(pd.Series([url]))[0]
     assert got == model_canon(url), url
+    assert got == canon_urls_pd(pd.Series([url]))[0], url
 
 
 def model_pct(url: str) -> str:
@@ -105,6 +108,23 @@ def test_pct_matches_urllib_model(host, seg, tail):
     url = f"http://{host}/{seg}{tail}"
     got = canon_urls(pd.Series([url]))[0]
     assert got == model_canon(model_pct(url)), url
+    assert got == canon_urls_pd(pd.Series([url]))[0], url
+
+
+# messy spellings the model does not cover: no scheme, empty hosts,
+# stray delimiters, whitespace, repeated slashes, dot segments, escapes
+url_chars = st.sampled_from(
+    list("aZ09.-_~:/?#&=%@+ \t") + ["//", "/./", "/../", "www.", "http://",
+                                    "HTTPS://", ":80", ":443", "utm_x=1", "%7e", "%2F"]
+)
+messy_urls = st.lists(url_chars, max_size=12).map("".join)
+
+
+@given(st.lists(messy_urls, min_size=1, max_size=8))
+@settings(max_examples=300, deadline=None)
+def test_arrow_matches_pandas_oracle(urls):
+    s = pd.Series(urls, dtype=object)
+    assert list(canon_urls(s)) == list(canon_urls_pd(s)), urls
 
 
 def test_pct_unit_cases():
@@ -145,8 +165,6 @@ def test_non_default_index_preserved_not_aligned():
     filtered/reordered indexes; results must be positional, never
     label-aligned (a reindex silently returns NaN or other rows'
     values)."""
-    from crawlers_spark.functions.urls import canon_with_host, url_host
-
     urls = ["http://A.test/x/../y", "http://B.test:80/p", "http://C.test/?b=2&a=1"]
     want = list(canon_urls(pd.Series(urls)))
 
@@ -160,9 +178,23 @@ def test_non_default_index_preserved_not_aligned():
     perm = pd.Series(urls, index=[2, 1, 0])
     assert list(canon_urls(perm)) == want
 
-    c, h = canon_with_host(shifted)
-    assert list(c) == want
-    assert list(h) == ["a.test", "b.test", "c.test"]
     assert list(url_host(pd.Series(want, index=[9, 4, 7]))) == [
         "a.test", "b.test", "c.test"
+    ]
+
+
+def test_mixed_type_columns_render_as_strings():
+    """Object columns holding non-strings: nulls and NaN canonicalize to
+    "", other objects to the canonical form of their ``str`` (bytes
+    decoded), in both ``canon_urls`` and ``url_host``."""
+    mixed = pd.Series(
+        ["HTTP://WWW.Ex.com:80/a/../b?utm_x=1&z=2&a=1#f", None, 42,
+         b"http://x.com/", float("nan")],
+        dtype=object,
+    )
+    assert list(canon_urls(mixed)) == [
+        "http://ex.com/b?a=1&z=2", "", "http://42/", "http://x.com/", "",
+    ]
+    assert list(url_host(pd.Series(["http://a.com/x", None, 3]))) == [
+        "a.com", "", "3",
     ]

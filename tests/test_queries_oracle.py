@@ -214,10 +214,10 @@ def test_politeness_audit_single_fetch_host_edge(spark, tmp_path):
 
 SWEEP_SKIP_PREFIXES = ("crawl", "image", "phash", "video", "audio")
 
-# The six whole-registry pathology sweeps each re-run all ~255 oracle
-# queries in both engines (~40 min combined under load). The DEFAULT suite
-# skips them so `pytest tests/` stays inside ~15-20 min (VERDICT r4 item
-# #7); run the full sweeps before each commit batch with
+# The six whole-registry pathology sweeps each re-run every oracle query
+# (about 250) in both engines. The DEFAULT suite skips them so
+# `pytest tests/` stays inside its timeout (VERDICT r4 item #7); run the
+# full sweeps before each commit batch with
 # ``SPARK_GRAFT_SWEEPS=1 python -m pytest tests/test_queries_oracle.py``.
 full_sweep = pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_SWEEPS", "0") != "1",

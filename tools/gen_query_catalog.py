@@ -29,7 +29,8 @@ def main() -> None:
         "- `replica-oracle` — OUTSIDE the window: the driver has never run it.",
         "  Verified by the in-repo replica of the driver gate",
         "  (`tests/test_queries_oracle.py`, same row-canon + order-insensitive",
-        "  value hash) at sf0.001 and sf0.01.",
+        "  value hash) at sf0.001 in the default suite, and at sf0.01 when run",
+        "  by hand with `SPARK_GRAFT_TEST_SF`.",
         "- `replica-rows-only` — outside the window, not SQL-expressible;",
         "  pytest-verified only.",
         "",
