@@ -1,4 +1,4 @@
-"""Vectorized 64-bit hashing kernels (numpy only, no per-row Python).
+"""Vectorized 64-bit hashing kernels (numpy and Arrow, no per-row Python).
 
 ``fnv64`` is the engine's canonical URL hash: a column-vectorized FNV-1a
 over a padded byte matrix, finalized with a splitmix64 mix of the length
@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 _U64 = np.uint64
 _FNV_OFFSET = _U64(0xCBF29CE484222325)
@@ -36,15 +38,7 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
     return x
 
 
-try:
-    import pyarrow as pa
-
-    _HAS_PA = True
-except ImportError:  # pragma: no cover
-    _HAS_PA = False
-
-
-def _flat_utf8(arr: "pa.Array", n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def _flat_utf8(arr: pa.Array, n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(flat bytes, starts, lens) views over a large_string Arrow array."""
     off_buf, data_buf = arr.buffers()[1], arr.buffers()[2]
     offsets = np.frombuffer(off_buf, np.int64, n + 1, arr.offset * 8)
@@ -63,20 +57,17 @@ def _byte_matrix(values) -> tuple[np.ndarray, np.ndarray]:
     buffer + offsets (no per-row bytes objects, no driver-side join);
     the padded matrix is then one fancy-index scatter. An Arrow array
     input skips the conversion entirely (the applyInArrow kernels hand
-    columns straight through). The pure-pandas fallback produces
-    identical bytes (UTF-8 both ways).
+    columns straight through). Mixed-type input that Arrow rejects takes
+    the pandas fallback, which produces identical bytes (UTF-8 both ways).
     """
     n = len(values)
     if n == 0:
         return np.zeros((0, 0), np.uint8), np.zeros(0, np.int64)
-    flat = lens = None
-    if _HAS_PA and isinstance(values, (pa.Array, pa.ChunkedArray)):
-        import pyarrow.compute as pc
-
+    if isinstance(values, (pa.Array, pa.ChunkedArray)):
         arr = values.combine_chunks() if isinstance(values, pa.ChunkedArray) else values
         arr = pc.cast(pc.fill_null(arr, ""), pa.large_string())
         flat, starts, lens = _flat_utf8(arr, n)
-    elif _HAS_PA:
+    else:
         try:
             s = values if values.dtype == object else values.astype(object)
             arr = pa.array(
@@ -84,8 +75,6 @@ def _byte_matrix(values) -> tuple[np.ndarray, np.ndarray]:
                 type=pa.large_string(), from_pandas=True,
             )
             if arr.null_count:
-                import pyarrow.compute as pc
-
                 arr = pc.fill_null(arr, "")
             flat, starts, lens = _flat_utf8(arr, n)
         except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError):

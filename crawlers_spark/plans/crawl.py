@@ -80,23 +80,11 @@ class CrawlConfig:
     # exhausted (reference analog: reconnect-and-retry,
     # /root/reference/worldcup/db/connect_mysql.py:21,50)
     max_retries: int = 0
-    # mega-host skew escape hatch for the frontier step: >1 salts the
-    # cogroup key with pmod(url_hash, n_salts), bounding any single
-    # Python task at ~1/n_salts of a host's candidates (two-phase exact
-    # politeness; see operators/fused_schedule.py docstring). 1 = off.
-    n_salts: int = 1
-    # auto_salt watches the per-bucket candidate counters the loop already
-    # aggregates each generation (zero extra jobs) and raises the salt
-    # count for the NEXT generation when one bucket dominates — the
-    # one-site-per-crawler shape of the reference (SURVEY.md §4.2) at
-    # scale. Salting never changes results (two-phase exact top-k), only
-    # the physical task bound, so auto-raising is always safe.
-    auto_salt: bool = True
     # scope spark.sql.shuffle.partitions to n_host_buckets and disable
     # AQE for the duration of run() (restored on exit): every exchange
     # in the loop is hand-sized, so the generic shuffle width only adds
-    # empty tasks and AQE's stage barrier is pure latency (the crawl
-    # bench documents the same protocol). False = leave session as-is.
+    # empty tasks and AQE's stage barrier is pure latency. False = leave
+    # the session as-is.
     scope_session_conf: bool = True
 
 
@@ -106,7 +94,7 @@ class CrawlResult:
     metrics: DataFrame
     crawl_log: DataFrame  # every scheduled fetch: (generation, priority, url, ok)
     frontier_final: DataFrame
-    seen_exact: DataFrame  # (url_hash, bloom_bucket) — final seen-set membership
+    seen_exact: DataFrame  # (url_hash, host_bucket) — final seen-set membership
     generations: int
     total_fetched: int
     total_scheduled: int
@@ -299,13 +287,12 @@ class CrawlPlan:
         # Every exchange in the loop is hand-sized to n_host_buckets (the
         # cogroup, the rank, the checkpoint layout), so (a) the session's
         # generic shuffle width only adds empty reduce tasks, and (b)
-        # AQE's query-stage materialization barrier is pure latency on
-        # this fixed-size workload — the same finding the crawl BENCH
-        # documents and configures (BENCH/BASELINE.md, AQE paragraph).
-        # Scope both confs to the loop and restore on exit; partition
-        # count never changes results (whole-registry
-        # parallelism-determinism sweep) and results returned lazily in
-        # CrawlResult re-plan under the caller's own confs.
+        # AQE has nothing to coalesce or split, and its query-stage
+        # materialization barrier is pure latency. Scope both confs to the
+        # loop and restore on exit; partition count never changes results
+        # (whole-registry parallelism-determinism sweep) and results
+        # returned lazily in CrawlResult re-plan under the caller's own
+        # confs.
         conf = self.spark.conf
         saved = {k: conf.get(k) for k in (
             "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")}
@@ -328,7 +315,6 @@ class CrawlPlan:
             self.spark, frontier.withColumn("is_new", F.lit(False)), None,
             self.robots, cfg.scheduler,
             total_budget_per_host=cfg.total_budget_per_host,
-            n_salts=cfg.n_salts,
             state=self._robots_state_df(),
             emit_strings="frontier",
         )
@@ -397,7 +383,7 @@ class CrawlPlan:
 
         gen_stats: dict[int, tuple[dict, int]] = {}
         prev_tbl: str | None = None
-        cur_salts = cfg.n_salts
+        cur_salts = 1  # unsalted until a generation's counters show skew
         generations = g0
         for g in range(g0, g0 + cfg.max_generations):
             gen_t0 = time.monotonic()
@@ -548,13 +534,13 @@ class CrawlPlan:
             n_frontier = sum(
                 v for (_b, s), v in st.items() if s in next_statuses
             )
-            if cfg.auto_salt:
-                by_bucket: dict[int, int] = {}
-                for (b, _s), v in st.items():
-                    by_bucket[b] = by_bucket.get(b, 0) + v
-                cur_salts = auto_salts(
-                    by_bucket, cfg.n_host_buckets, base=cfg.n_salts
-                )
+            # salting never changes results (two-phase exact top-k), only
+            # the physical task bound, so raising it from the counters
+            # this generation already collected is always safe
+            by_bucket: dict[int, int] = {}
+            for (b, _s), v in st.items():
+                by_bucket[b] = by_bucket.get(b, 0) + v
+            cur_salts = auto_salts(by_bucket, cfg.n_host_buckets)
 
             if cfg.checkpoint_dir:
                 fm = fetched.groupBy("ok").agg(F.count("*").alias("n")).collect()

@@ -18,7 +18,7 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "crawlers-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -34,8 +34,6 @@ def get_spark(
         if not SparkConf().contains("spark.master"):
             cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
             master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     b = SparkSession.builder.appName(app_name)
     if master is not None:
@@ -47,23 +45,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.io.compression.codec", os.environ.get("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.io.compression.codec", "lz4")
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    # RAM-backed shuffle/spill dir is opt-in (SPARK_GRAFT_LOCAL_DIR): on
-    # the bench box the disk is the one resource that does NOT grow with
-    # core count, so bench.py points this at /dev/shm after probing free
-    # space. It is NOT a library default — tmpfs is tiny on common
-    # deployments (Docker's /dev/shm defaults to 64 MB) and RAM-backed
-    # spill competes with executor memory.
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir:
-        b = b.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -22,17 +22,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..functions.hashing import fnv64, splitmix64
 from ..functions.images import QUANT_STEP, encode_image, phash64, quantize, synth_image
-
-try:
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    _HAS_PA = True
-except ImportError:  # pragma: no cover
-    _HAS_PA = False
 
 _U64 = np.uint64
 
@@ -68,7 +62,7 @@ def host_name(idx: np.ndarray | int) -> np.ndarray | str:
     # Arrow path: cast→lpad→join over contiguous buffers (utf8_lpad pads
     # the sign too, unlike zfill, so negatives take the pandas path —
     # only parse-failure rows ever carry -1)
-    if _HAS_PA and len(a) and a.min() >= 0:
+    if len(a) and a.min() >= 0:
         s = pc.utf8_lpad(pc.cast(pa.array(a), pa.string()), 4, "0")
         return pc.binary_join_element_wise("host", s, ".test", "").to_numpy(
             zero_copy_only=False
@@ -91,16 +85,12 @@ def page_urls(cfg: SynthWebConfig, host_idx: np.ndarray, page_idx: np.ndarray) -
     """Canonical URL of page (host_idx, page_idx); /private for a subset."""
     seeds = _page_seed(cfg, host_idx, page_idx)
     private = (seeds % _U64(cfg.private_mod)) == 0
-    hosts = host_name(host_idx)
-    if _HAS_PA and isinstance(hosts, np.ndarray):
-        pages = pc.cast(pa.array(np.asarray(page_idx, np.int64)), pa.string())
-        prefix = pc.if_else(pa.array(private), "/private/p/", "/p/")
-        return pc.binary_join_element_wise(
-            "http://", pa.array(hosts, pa.string()), prefix, pages, ""
-        ).to_numpy(zero_copy_only=False)
-    pages = pd.Series(np.asarray(page_idx, np.int64)).astype(str)
-    prefix = pd.Series(np.where(private, "/private/p/", "/p/"))
-    return ("http://" + pd.Series(hosts) + prefix + pages).to_numpy()
+    hosts = pa.array(host_name(host_idx), pa.string())
+    pages = pc.cast(pa.array(np.asarray(page_idx, np.int64)), pa.string())
+    prefix = pc.if_else(pa.array(private), "/private/p/", "/p/")
+    return pc.binary_join_element_wise(
+        "http://", hosts, prefix, pages, ""
+    ).to_numpy(zero_copy_only=False)
 
 
 def parse_page_urls(urls: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -253,12 +243,30 @@ def fetch_pages_pdf(
     return out
 
 
-def _seed_urls_pa(cfg: SynthWebConfig, rank, host_idx, page_idx, variant) -> "pa.Array":
-    """Messy spelling variants as ONE Arrow string array.
+def _seed_idx(cfg: SynthWebConfig, rank: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(host_idx, page_idx) of the page that seed ``rank`` points at."""
+    ppl = cfg.pages_per_host()
+    host_idx = (splitmix64(rank.view(_U64) ^ _U64(cfg.seed * 31)) % _U64(cfg.n_hosts)).astype(
+        np.int64
+    )
+    page_idx = (
+        splitmix64(rank.view(_U64) ^ _U64(cfg.seed * 131)) % ppl[host_idx].view(_U64)
+    ).astype(np.int64)
+    return host_idx, page_idx
+
+
+def seed_urls_arr(cfg: SynthWebConfig, rank: np.ndarray) -> pa.Array:
+    """Messy URL spellings (variant ``rank % 5``) for a rank array as ONE
+    Arrow string array, without ever minting Python string objects. Used
+    by the mapInArrow candidate generator.
 
     Builds variants from the known components (no regex re-extract);
-    bit-identical to the pandas construction in :func:`seed_urls_pdf`.
+    ``tests/seed_url_oracle.py`` keeps the pandas construction it must
+    match bit for bit.
     """
+    rank = np.asarray(rank, np.int64)
+    host_idx, page_idx = _seed_idx(cfg, rank)
+    variant = rank % 5
     seeds = _page_seed(cfg, host_idx, page_idx)
     private = pa.array((seeds % _U64(cfg.private_mod)) == 0)
     hosts = pa.array(host_name(host_idx), pa.string())
@@ -284,21 +292,6 @@ def _seed_urls_pa(cfg: SynthWebConfig, rank, host_idx, page_idx, variant) -> "pa
     )
 
 
-def seed_urls_arr(cfg: SynthWebConfig, rank: np.ndarray) -> "pa.Array":
-    """Arrow-native twin of :func:`seed_urls_pdf`: messy URL spellings for
-    a rank array, without ever minting Python string objects. Used by the
-    mapInArrow candidate generator."""
-    rank = np.asarray(rank, np.int64)
-    ppl = cfg.pages_per_host()
-    host_idx = (splitmix64(rank.view(_U64) ^ _U64(cfg.seed * 31)) % _U64(cfg.n_hosts)).astype(
-        np.int64
-    )
-    page_idx = (
-        splitmix64(rank.view(_U64) ^ _U64(cfg.seed * 131)) % ppl[host_idx].view(_U64)
-    ).astype(np.int64)
-    return _seed_urls_pa(cfg, rank, host_idx, page_idx, rank % 5)
-
-
 def make_seed_urls(cfg: SynthWebConfig, n_seeds: int) -> pd.DataFrame:
     """Messy seed list exercising canonicalization (5 spelling variants)."""
     return seed_urls_pdf(cfg, np.arange(n_seeds, dtype=np.int64))
@@ -311,28 +304,8 @@ def seed_urls_pdf(cfg: SynthWebConfig, rank: np.ndarray) -> pd.DataFrame:
     URL of the synthetic web.
     """
     rank = np.asarray(rank, np.int64)
-    ppl = cfg.pages_per_host()
-    host_idx = (splitmix64(rank.view(_U64) ^ _U64(cfg.seed * 31)) % _U64(cfg.n_hosts)).astype(
-        np.int64
-    )
-    page_idx = (
-        splitmix64(rank.view(_U64) ^ _U64(cfg.seed * 131)) % ppl[host_idx].view(_U64)
-    ).astype(np.int64)
-    variant = rank % 5
-    if _HAS_PA and len(rank):
-        messy = _seed_urls_pa(cfg, rank, host_idx, page_idx, variant)
-        return pd.DataFrame(
-            {"url": messy.to_numpy(zero_copy_only=False), "seed_rank": rank}
-        )
-    canon = pd.Series(page_urls(cfg, host_idx, page_idx))
-    hostpart = canon.str.extract(r"^http://([^/]+)(/.*)$")
-    host, path = hostpart[0], hostpart[1]
-    messy = canon.copy()
-    messy = messy.mask(variant == 1, "HTTP://WWW." + host.str.upper() + ":80" + path)
-    messy = messy.mask(variant == 2, canon + "#section-2")
-    messy = messy.mask(variant == 3, canon + "?utm_source=feed&utm_medium=x&utm_campaign=1")
-    messy = messy.mask(variant == 4, "http://" + host + "/x/../" + path.str.lstrip("/"))
-    return pd.DataFrame({"url": messy, "seed_rank": rank})
+    messy = seed_urls_arr(cfg, rank)
+    return pd.DataFrame({"url": messy.to_numpy(zero_copy_only=False), "seed_rank": rank})
 
 
 def distributed_seed_urls(spark, cfg: SynthWebConfig, n: int, start: int = 0,
@@ -364,9 +337,7 @@ def distributed_candidates(spark, cfg: SynthWebConfig, n: int, n_host_buckets: i
 
     The stage runs as ``mapInArrow``: URL strings live as Arrow arrays
     end-to-end (generation → canon → fnv64 all operate on the contiguous
-    UTF-8 buffer), so no Python str objects are ever minted — at high
-    parallelism the per-worker CPU saved is what keeps 4N-core scaling
-    honest (BASELINE.md oversubscription pair).
+    UTF-8 buffer), so no Python str objects are ever minted.
     """
     from ..functions.hashing import fnv64, pmod_bucket
     from ..functions.urls import canon_arr

@@ -243,6 +243,42 @@ def test_fused_inmemory_storage_flat(spark):
     assert after - before <= 4 * res.generations + 6, (before, after)
 
 
+def test_run_restores_caller_session_conf(spark, monkeypatch):
+    """run() scopes the shuffle width and AQE to the loop; the caller gets
+    its own values back after a normal return and after a raise from
+    inside the loop."""
+    import crawlers_spark.plans.crawl as crawl_mod
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    web = SynthWebConfig(n_hosts=6, base_pages=20)
+    cfg = CrawlConfig(web=web, n_host_buckets=5, max_generations=3)
+    seeds = spark.createDataFrame(make_seed_urls(web, 10))
+    try:
+        spark.conf.set(keys[0], "11")
+        spark.conf.set(keys[1], "true")
+        caller = {k: spark.conf.get(k) for k in keys}
+        assert CrawlPlan(spark, cfg).run(seeds).generations > 1
+        assert {k: spark.conf.get(k) for k in keys} == caller
+
+        real_fetch, in_loop = crawl_mod.fetch_scheduled, []
+
+        def fail_second_generation(sched, web_cfg):
+            in_loop.append({k: spark.conf.get(k) for k in keys})
+            if len(in_loop) == 2:
+                raise RuntimeError("fetch failed")
+            return real_fetch(sched, web_cfg)
+
+        monkeypatch.setattr(crawl_mod, "fetch_scheduled", fail_second_generation)
+        with pytest.raises(RuntimeError, match="fetch failed"):
+            CrawlPlan(spark, cfg).run(seeds)
+        assert in_loop[-1] == {keys[0]: "5", keys[1]: "false"}
+        assert {k: spark.conf.get(k) for k in keys} == caller
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
 def test_auto_salts_decision():
     from crawlers_spark.plans.crawl import auto_salts
 

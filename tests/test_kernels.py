@@ -14,7 +14,9 @@ from crawlers_spark.operators.seen_set import (
 )
 from crawlers_spark.sources.synthweb import (
     SynthWebConfig, fetch_pages_pdf, make_seed_urls, page_specs, parse_page_urls,
+    seed_urls_arr, seed_urls_pdf,
 )
+from seed_url_oracle import seed_urls_pd
 
 
 class TestHashing:
@@ -127,6 +129,21 @@ class TestSynthWeb:
         canon = canon_urls(seeds["url"])
         hi, _ = parse_page_urls(canon)
         assert (hi >= 0).all()
+
+    def test_seed_urls_match_pandas_oracle(self):
+        cfg = SynthWebConfig(n_hosts=37, base_pages=90, seed=7)
+        # sparse, unsorted and huge ranks reach every variant and host
+        rank = np.concatenate([
+            np.arange(200), np.arange(10**12, 10**12 + 55)[::-1], [2**62, 0, 3],
+        ]).astype(np.int64)
+        want = seed_urls_pd(cfg, rank)
+        got = seed_urls_pdf(cfg, rank)
+        assert got["url"].tolist() == want["url"].tolist()
+        assert (got["seed_rank"].to_numpy() == rank).all()
+        assert seed_urls_arr(cfg, rank).to_pylist() == want["url"].tolist()
+        assert set(rank % 5) == set(range(5))
+        empty = seed_urls_pdf(cfg, rank[:0])
+        assert list(empty.columns) == ["url", "seed_rank"] and len(empty) == 0
 
     def test_fetch_deterministic(self):
         cfg = SynthWebConfig()
