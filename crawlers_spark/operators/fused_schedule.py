@@ -1,8 +1,9 @@
 """Fused bucket-local frontier step: dedup + seen-filter + politeness
 schedule in ONE exchange.
 
-This is the crawl engine's only frontier step (plans/crawl.py runs it
-once per generation, streaming/micro_batch.py once per micro-batch).
+This is the crawl engine's only frontier step (``CrawlPlan.step`` in
+plans/crawl.py runs it once per generation, for the batch loop and for
+each micro-batch of streaming/micro_batch.py).
 Expressed as Catalyst operators it would be a dedup
 ``groupBy(url_hash)``, a seen-set ``left_anti`` join and ranking
 windows — one shuffle of the candidate set each. But every one of those
@@ -246,20 +247,10 @@ def fused_filter_schedule(
       seen-set BY HASH downstream (plans/crawl.py), so nulling their
       strings is loop-safe, and at real frontier scale the dropped
       majority's string bytes vanish from the worker→JVM hop.
-    - ``"scheduled"``: strings only on this generation's fetch set
-      (scheduled + pending); the caller must resolve deferred rows'
-      strings itself (e.g. a url_hash-keyed store) before requeueing
-      them as candidates.
     """
-    if emit_strings not in ("all", "frontier", "scheduled"):
-        raise ValueError(f"emit_strings must be all|frontier|scheduled, got {emit_strings!r}")
-    # statuses whose rows keep their strings ("pending" is the salted
-    # phase-1 stand-in for scheduled; phase 2 needs its strings either way)
-    keep_statuses = {
-        "all": None,
-        "frontier": ("scheduled", "pending", "deferred"),
-        "scheduled": ("scheduled", "pending"),
-    }[emit_strings]
+    if emit_strings not in ("all", "frontier"):
+        raise ValueError(f"emit_strings must be all|frontier, got {emit_strings!r}")
+    trim = emit_strings == "frontier"
     if "is_new" not in candidates.columns:
         candidates = candidates.withColumn("is_new", F.lit(True))
     if "retry_count" not in candidates.columns:
@@ -472,20 +463,12 @@ def fused_filter_schedule(
         if not salted:
             host_rank[:n_a] = rank.astype(np.int32)
             offset[:n_a] = np.where(within, (rank - 1) * delay, 0)
-        take = pa.array(final_idx)
-        if keep_statuses is None:
-            str_take = take
-        else:
-            # hash-only rows outside the keep set: strings ride the
-            # Arrow hop only where a consumer can still read them
-            # (segment layout: [:n_a] = scheduled/pending|deferred,
-            # then disallowed, dup, seen — see `codes` above)
-            keep = np.zeros(len(final_idx), bool)
-            if "deferred" in keep_statuses:
-                keep[:n_a] = True
-            else:
-                keep[:n_a] = within
-            str_take = pa.array(final_idx, mask=~keep)
+        # trimmed: disallowed, dup and seen rows go hash-only; strings
+        # ride the Arrow hop only on the allowed segment [:n_a]
+        # (scheduled/pending|deferred — see `codes` above)
+        str_take = pa.array(
+            final_idx, mask=np.arange(len(final_idx)) >= n_a if trim else None
+        )
         cols = {
             "url_hash": pa.array(url_hash_np[final_idx]),
             "url_canon": pc.cast(pc.take(canon, str_take), pa.string()),

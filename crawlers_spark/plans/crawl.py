@@ -7,6 +7,15 @@ politeness offsets; in-memory dedup lists become the partitioned Bloom +
 exact seen-set; the per-seed cursor loop becomes the self-feeding
 frontier (discovered links are generation g+1's candidates).
 
+One generation is two methods, shared by the batch loop (``run``) and
+the micro-batch stream (streaming/micro_batch.py):
+
+- ``CrawlPlan.step`` runs the fused frontier step over new candidates
+  and carried rows, collects the counters, mints priorities for the new
+  survivors and folds them into the seen-set;
+- ``CrawlPlan.commit`` writes the generation's pages, crawl log, next
+  frontier and state, then the manifest.
+
 Determinism under parallelism (north_rule "matching the reference's
 crawl ordering"): every URL carries an explicit scalar ``priority``
 minted by a deterministic global rank over
@@ -22,15 +31,17 @@ bucketed on ``host_bucket``) and, when a lifetime quota is set,
 ``manifest_gen=<g>.json`` (generation, next_priority, totals,
 frontier_count) commits the generation — the Parquet+manifest stand-in
 for Iceberg snapshots (the layout is swap-compatible, see
-sources/tables.py). Resume reads exactly this set.
+sources/tables.py). ``CrawlPlan.load`` reads exactly this set back.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from contextlib import contextmanager
+from dataclasses import dataclass, field, replace
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -56,8 +67,19 @@ FRONTIER_COLS = ["url_canon", "url_hash", "host", "host_bucket", "priority"]
 # min as one long; requires max_links < MAX_LINK_SLOTS
 MAX_LINK_SLOTS = 16
 PAGES_COLS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
+PAGE_OUT_COLS = [*PAGES_COLS, "generation", "host_bucket", "priority", "url_canon"]
+PAGES_SCHEMA = (
+    "image_id string, bytes binary, w int, h int, fmt string, caption string, "
+    "phash long, generation int, host_bucket int, priority long, url_canon string"
+)
+LOG_COLS = ["generation", "priority", "url_canon", "host", "host_bucket", "ok",
+            "fetch_offset_ms"]
+LOG_SCHEMA = (
+    "generation int, priority long, url_canon string, host string, "
+    "host_bucket int, ok boolean, fetch_offset_ms long"
+)
 METRICS_SCHEMA = (
-    "generation int, host_bucket int, filter_epoch int, scheduled long, deduped long, "
+    "generation int, host_bucket int, scheduled long, deduped long, "
     "fetched long, failed long, wall_ms long"
 )
 
@@ -219,6 +241,25 @@ def _atomic_write_json(path: str, payload: dict) -> None:
     os.replace(tmp, path)
 
 
+@dataclass
+class CrawlState:
+    """What one generation hands the next. The checkpoint holds the same
+    fields (manifest + ``gen=<g>/``), so ``CrawlPlan.load`` rebuilds it
+    after a restart."""
+
+    exact: DataFrame  # seen-set (url_hash, host_bucket)
+    next_priority: int  # the next priority the rank mint hands out
+    totals: dict = field(default_factory=lambda: {"fetched": 0, "scheduled": 0})
+    # per-host lifetime spend: a SMALL (host, host_bucket, spent)
+    # DataFrame, never a driver dict, so a 10^7-host crawl keeps its
+    # quota ledger sharded
+    host_spent: DataFrame | None = None
+    table: DataFrame | None = None  # bucketed tagged state snapshot of `exact`
+    generation: int | None = None  # last committed generation
+    n_frontier: int = 0  # rows the step handed on (scheduled+deferred+disallowed)
+    salts: int = 1  # unsalted until a generation's counters show skew
+
+
 class CrawlPlan:
     """Drives the generation loop; supports checkpoint/resume."""
 
@@ -264,26 +305,48 @@ class CrawlPlan:
         assert self.cfg.checkpoint_dir
         return os.path.join(self.cfg.checkpoint_dir, *parts)
 
+    def _table(self, g: int) -> str:
+        digest = hashlib.md5(os.path.abspath(self.cfg.checkpoint_dir).encode()).hexdigest()
+        return f"crawl_seen_{digest[:8]}_{g:05d}"
+
     def latest_manifest(self) -> dict | None:
         if not self.cfg.checkpoint_dir or not os.path.isdir(self.cfg.checkpoint_dir):
             return None
+        # not the ".json.tmp" of a manifest still being written
         manifests = sorted(
-            f for f in os.listdir(self.cfg.checkpoint_dir) if f.startswith("manifest_gen=")
+            f for f in os.listdir(self.cfg.checkpoint_dir)
+            if f.startswith("manifest_gen=") and f.endswith(".json")
         )
         if not manifests:
             return None
         with open(self._ckpt(manifests[-1])) as f:
             return json.load(f)
 
-    # ---------- main loop ----------
-    def run(self, seeds: DataFrame, resume: bool = False) -> CrawlResult:
-        assert self.cfg.web.max_links < MAX_LINK_SLOTS, (
-            f"max_links={self.cfg.web.max_links} must stay below "
-            f"MAX_LINK_SLOTS={MAX_LINK_SLOTS}: the candidate agg packs "
-            "(parent_priority, slot) into one long lexicographically"
+    def load(self) -> tuple[CrawlState, DataFrame] | None:
+        """The state and ``frontier_sched`` rows of the latest committed
+        generation, or None before the first commit."""
+        manifest = self.latest_manifest()
+        if manifest is None:
+            return None
+        spark = self.spark
+        d = self._ckpt(f"gen={manifest['generation']:05d}")
+        exact = (
+            spark.read.parquet(os.path.join(d, "seen_exact"))
+            .filter("tag = 's'").select("url_hash", "host_bucket")
         )
-        if not self.cfg.scope_session_conf:
-            return self._run_fused(seeds, resume)
+        host_spent = None
+        if os.path.isdir(os.path.join(d, "host_spent")):
+            host_spent = spark.read.parquet(os.path.join(d, "host_spent"))
+        st = CrawlState(
+            exact=exact, next_priority=manifest["next_priority"],
+            totals=dict(manifest["totals"]), host_spent=host_spent,
+            generation=manifest["generation"], n_frontier=manifest["frontier_count"],
+        )
+        return st, spark.read.parquet(os.path.join(d, "frontier_sched"))
+
+    # ---------- main loop ----------
+    @contextmanager
+    def _session_conf(self):
         # Every exchange in the loop is hand-sized to n_host_buckets (the
         # cogroup, the rank, the checkpoint layout), so (a) the session's
         # generic shuffle width only adds empty reduce tasks, and (b)
@@ -293,6 +356,9 @@ class CrawlPlan:
         # (whole-registry parallelism-determinism sweep) and results
         # returned lazily in CrawlResult re-plan under the caller's own
         # confs.
+        if not self.cfg.scope_session_conf:
+            yield
+            return
         conf = self.spark.conf
         saved = {k: conf.get(k) for k in (
             "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")}
@@ -300,18 +366,28 @@ class CrawlPlan:
             conf.set("spark.sql.shuffle.partitions",
                      str(self.cfg.n_host_buckets))
             conf.set("spark.sql.adaptive.enabled", "false")
-            return self._run_fused(seeds, resume)
+            yield
         finally:
             for k, v in saved.items():
                 conf.set(k, v)
 
-    def _bootstrap_schedule(self, frontier: DataFrame) -> DataFrame:
+    def _bootstrap(self, seeds: DataFrame) -> tuple[CrawlState, DataFrame | None]:
         """Schedule the seed frontier through the same fused step as every
         later generation, with all rows flagged ``is_new = false`` (already
         deduped and in the seen-set): only robots and politeness apply, and
         the lifetime-quota cap (when configured) binds from generation 0."""
         cfg = self.cfg
-        return fused_filter_schedule(
+        frontier = prepare_frontier(seeds, cfg.n_host_buckets).persist()
+        first = frontier.agg(
+            F.max("priority").alias("p"), F.count("*").alias("n")
+        ).first()
+        st = CrawlState(
+            exact=frontier.select("url_hash", "host_bucket"),
+            next_priority=(first["p"] or 0) + 1, n_frontier=first["n"],
+        )
+        if not st.n_frontier:
+            return st, None
+        return st, fused_filter_schedule(
             self.spark, frontier.withColumn("is_new", F.lit(False)), None,
             self.robots, cfg.scheduler,
             total_budget_per_host=cfg.total_budget_per_host,
@@ -319,368 +395,337 @@ class CrawlPlan:
             emit_strings="frontier",
         )
 
-    # ---------- fused loop ----------
-    def _run_fused(self, seeds: DataFrame, resume: bool = False) -> CrawlResult:
-        """One heavy exchange per generation: the fused bucket-local
-        cogroup (operators/fused_schedule.py) runs dedup + exact
-        seen-filter + robots + politeness for generation g+1 at the END of
-        generation g, then global_rank mints priorities for the surviving
-        new rows. Per-host order inside the cogroup uses
-        ``(is_new, priority, url_hash)`` where new rows carry the packed
-        ``(parent_priority, slot)`` key — exactly the order their minted
-        priorities will have — so crawl order, seen membership, and
-        metrics match the serial oracle (tests/test_crawl_engine.py).
+    def run(self, seeds: DataFrame, resume: bool = False) -> CrawlResult:
+        """fetch → link candidates ∪ deferred ∪ requeue → ``step`` →
+        ``commit``, once per generation, from the seeds or (``resume``)
+        from the latest manifest."""
+        assert self.cfg.web.max_links < MAX_LINK_SLOTS, (
+            f"max_links={self.cfg.web.max_links} must stay below "
+            f"MAX_LINK_SLOTS={MAX_LINK_SLOTS}: the candidate agg packs "
+            "(parent_priority, slot) into one long lexicographically"
+        )
+        with self._session_conf():
+            cfg = self.cfg
+            t0 = time.monotonic()
+            loaded = self.load() if resume else None
+            if loaded is not None:
+                st, sched = loaded
+                g0 = st.generation + 1
+            else:
+                g0 = 0
+                st, sched = self._bootstrap(seeds)
+            st = replace(st, exact=st.exact.localCheckpoint(eager=True))
+            scheduled, deferred = _split_next(sched) if sched is not None else (None, None)
 
-        Seen-set state is the exact table hash-partitioned by
-        ``host_bucket``, re-read (co-located, never re-shuffled when the
-        partitioning matches) by each generation's cogroup like a stateful
-        stream-stream join; at 10^10 rows it stays sharded across
-        executors and no blob or shard ever converges on the driver.
-        """
+            pages_parts: list[DataFrame] = []
+            log_parts: list[DataFrame] = []
+            gen_stats: dict[int, tuple[dict, int]] = {}
+            generations = g0
+            for g in range(g0, g0 + cfg.max_generations):
+                gen_t0 = time.monotonic()
+                if not st.n_frontier or scheduled is None:
+                    break
+                fetched = fetch_scheduled(
+                    scheduled.withColumn("generation", F.lit(g)), cfg.web
+                ).persist()
+                links = canonize(
+                    fetched.select(
+                        F.col("priority").alias("parent_priority"),
+                        F.posexplode_outer("links").alias("slot", "url"),
+                    ).filter(F.col("url").isNotNull()),
+                    cfg.n_host_buckets,
+                    keep_host=False,  # fused step re-derives host per bucket
+                ).withColumn(
+                    "priority",
+                    (F.col("parent_priority") * MAX_LINK_SLOTS + F.col("slot")).cast("long"),
+                )
+                carried = deferred
+                if cfg.max_retries > 0:
+                    # bounded requeue: failed fetches re-enter the next
+                    # generation as bypass rows (already in the seen-set),
+                    # keeping their minted priority
+                    carried = carried.unionByName(fetched.filter(
+                        ~F.col("ok") & (F.col("retry_count") < cfg.max_retries)
+                    ).select(*FRONTIER_COLS, (F.col("retry_count") + 1).alias("retry_count")))
+                if cfg.total_budget_per_host is not None:
+                    # charge this generation's scheduled fetches, then expose
+                    # the remaining lifetime quota to the next schedule — as a
+                    # small aggregated DataFrame, never a driver dict
+                    delta = fetched.groupBy("host", "host_bucket").agg(
+                        F.count("*").alias("spent")
+                    )
+                    st = replace(st, host_spent=(
+                        delta
+                        if st.host_spent is None
+                        else st.host_spent.unionByName(delta)
+                        .groupBy("host", "host_bucket")
+                        .agg(F.sum("spent").alias("spent"))
+                    ).localCheckpoint(eager=True))
+                # every parent was minted below next_priority, so the packed
+                # keys stay below next_priority * MAX_LINK_SLOTS
+                nxt, counts, st = self.step(
+                    links, carried, st, st.next_priority * MAX_LINK_SLOTS
+                )
+                gen_stats[g] = (counts, int((time.monotonic() - gen_t0) * 1000))
+                pages_g, log_g, nxt, st = self.commit(g, fetched, nxt, st)
+                pages_parts.append(pages_g)
+                log_parts.append(log_g)
+                fetched.unpersist()
+                scheduled, deferred = _split_next(nxt)
+                generations = g + 1
+            return self._result(
+                st, pages_parts, log_parts, gen_stats, scheduled, deferred,
+                generations, t0,
+            )
+
+    def step(
+        self, new: DataFrame, carried: DataFrame | None, st: CrawlState, key_hi: int
+    ) -> tuple[DataFrame, dict, CrawlState]:
+        """The frontier step of one generation: the fused cogroup (dedup +
+        exact seen-filter + robots + politeness in ONE heavy exchange,
+        operators/fused_schedule.py) over the new candidates and the
+        carried rows, one counter collect, then the rank mint for the new
+        survivors.
+
+        ``new``: (url_hash, url_canon, host_bucket, priority) rows whose
+        ``priority`` is an order key in ``[0, key_hi)`` — the loop's packed
+        ``(parent_priority, slot)``, a stream's ``seed_rank``. ``carried``:
+        already-minted rows (deferred, requeued) that bypass dedup and the
+        seen-set but compete for politeness budget first. The cogroup ranks
+        each host by ``(is_new, priority, url_hash)``, the order the minted
+        priorities will have, so crawl order and the seen-set match the
+        serial oracle. Returns ``nxt`` (scheduled + deferred rows, minted),
+        the ``(host_bucket, status)`` counters and the advanced state."""
         spark, cfg = self.spark, self.cfg
-        t0 = time.monotonic()
-        pages_parts: list[DataFrame] = []
-        log_parts: list[DataFrame] = []
-        metrics_rows: list[tuple] = []
-        totals = {"fetched": 0, "scheduled": 0}
         next_statuses = ("scheduled", "deferred", "disallowed")
+        cand = new.select(
+            "url_hash", "url_canon", "host_bucket", "priority",
+            F.lit(True).alias("is_new"), F.lit(0).alias("retry_count"),
+        )
+        if carried is not None:
+            cand = cand.unionByName(carried.select(
+                "url_hash", "url_canon", "host_bucket", "priority",
+                F.lit(False).alias("is_new"), "retry_count",
+            ))
+        state = (
+            st.table
+            if st.table is not None and cfg.total_budget_per_host is None
+            else self._state_for(st.exact, st.host_spent)
+        )
+        # emit_strings="frontier": dup/seen/disallowed rows come back
+        # hash-only — they are only counted or folded into the seen-set
+        # by url_hash, so the dropped majority's string bytes never ride
+        # the worker→JVM hop.
+        # lazy localCheckpoint: the counter collect right below is the
+        # FIRST action on fused_out and scans every partition, so it both
+        # materializes the checkpoint and cuts the lineage in the same
+        # job — one fewer driver job per generation than an eager cut
+        # followed by the collect
+        fused_out = fused_filter_schedule(
+            spark, cand, None, self.robots, cfg.scheduler, emit_dropped=True,
+            total_budget_per_host=cfg.total_budget_per_host,
+            n_salts=st.salts,
+            state=state,
+            emit_strings="frontier",
+        ).localCheckpoint(eager=False)
 
-        manifest = self.latest_manifest() if resume else None
-        scheduled: DataFrame | None = None
-        deferred: DataFrame | None = None
-        # per-host lifetime spend: a SMALL (host, host_bucket, spent)
-        # DataFrame updated per generation — never a driver dict, so a
-        # 10^7-host crawl keeps its quota ledger sharded
-        host_spent: DataFrame | None = None
-        ckpt_state: DataFrame | None = None  # bucketed tagged state table
-        if manifest is not None:
-            g0 = manifest["generation"] + 1
-            next_priority = manifest["next_priority"]
-            d = self._ckpt(f"gen={manifest['generation']:05d}")
-            exact = (
-                spark.read.parquet(os.path.join(d, "seen_exact"))
-                .filter("tag = 's'").select("url_hash", "host_bucket")
+        # One small agg over the fused output drives every counter (and
+        # materializes the fetch and fused_out). Fetch ok/failed per bucket
+        # is NOT collected here: crawl_log is 1:1 with scheduled rows, so
+        # a single end-of-run agg over the logs recovers (scheduled,
+        # fetched, failed) for every (generation, bucket). The SAME agg
+        # also carries global_rank's per-bucket counts (grouped by the
+        # ranker's own bucket expression), so the mint below runs with
+        # zero internal jobs — one collect per step drives counters,
+        # auto-salt AND the rank offsets.
+        rank_bounds = (0, key_hi)
+        counts: dict[tuple[int, str], int] = {}
+        rank_counts: dict[int, int] = {}
+        for r in (
+            fused_out.groupBy(
+                "host_bucket", "status", "is_new",
+                rank_bucket_expr(
+                    "priority", cfg.n_host_buckets, rank_bounds
+                ).alias("__b"),
             )
-            totals = dict(manifest["totals"])
-            n_frontier = manifest["frontier_count"]
-            if os.path.isdir(os.path.join(d, "host_spent")):
-                host_spent = spark.read.parquet(os.path.join(d, "host_spent"))
-            scheduled, deferred = _split_next(
-                spark.read.parquet(os.path.join(d, "frontier_sched"))
-            )
-        else:
-            g0 = 0
-            frontier = prepare_frontier(seeds, cfg.n_host_buckets).persist()
-            first = frontier.agg(
-                F.max("priority").alias("p"), F.count("*").alias("n")
-            ).first()
-            next_priority = (first["p"] or 0) + 1
-            n_frontier = first["n"]
-            exact = frontier.select("url_hash", "host_bucket")
-            if n_frontier:
-                scheduled, deferred = _split_next(self._bootstrap_schedule(frontier))
-        exact = exact.localCheckpoint(eager=True)
+            .agg(F.count("*").alias("n")).collect()
+        ):
+            k = (r["host_bucket"], r["status"])
+            counts[k] = counts.get(k, 0) + r["n"]
+            if r["is_new"] and r["status"] in next_statuses:
+                rank_counts[r["__b"]] = rank_counts.get(r["__b"], 0) + r["n"]
 
-        gen_stats: dict[int, tuple[dict, int]] = {}
-        prev_tbl: str | None = None
-        cur_salts = 1  # unsalted until a generation's counters show skew
-        generations = g0
-        for g in range(g0, g0 + cfg.max_generations):
-            gen_t0 = time.monotonic()
-            if not n_frontier or scheduled is None:
-                break
-            sched_g = scheduled.withColumn("generation", F.lit(g))
-            fetched = fetch_scheduled(sched_g, cfg.web).persist()
-            pages_g = fetched.filter("ok").select(
-                *PAGES_COLS, "generation", "host_bucket", "priority", "url_canon"
-            )
-            log_g = fetched.select(
-                "generation", "priority", "url_canon", "host", "host_bucket", "ok",
-                "fetch_offset_ms",
-            )
-
-            links = canonize(
-                fetched.select(
-                    F.col("priority").alias("parent_priority"),
-                    F.posexplode_outer("links").alias("slot", "url"),
-                ).filter(F.col("url").isNotNull()),
-                cfg.n_host_buckets,
-                keep_host=False,  # fused step re-derives host per bucket
-            )
-            cand = links.select(
-                "url_hash", "url_canon", "host_bucket",
-                (F.col("parent_priority") * MAX_LINK_SLOTS + F.col("slot"))
-                .cast("long").alias("priority"),
-                F.lit(True).alias("is_new"),
-                F.lit(0).alias("retry_count"),
-            )
-            if deferred is not None:
-                cand = cand.unionByName(
-                    deferred.drop("host").withColumn("is_new", F.lit(False))
-                )
-            if cfg.max_retries > 0:
-                # bounded requeue: failed fetches re-enter the next
-                # generation as bypass rows (already in the seen-set),
-                # keeping their minted priority
-                requeue = fetched.filter(
-                    ~F.col("ok") & (F.col("retry_count") < cfg.max_retries)
-                ).select(
-                    "url_canon", "url_hash", "host_bucket", "priority",
-                    F.lit(False).alias("is_new"),
-                    (F.col("retry_count") + 1).alias("retry_count"),
-                )
-                cand = cand.unionByName(requeue)
-            if cfg.total_budget_per_host is not None:
-                # charge this generation's scheduled fetches, then expose
-                # the remaining lifetime quota to the next schedule — as a
-                # small aggregated DataFrame, never a driver dict
-                delta = fetched.groupBy("host", "host_bucket").agg(
-                    F.count("*").alias("spent")
-                )
-                host_spent = (
-                    delta
-                    if host_spent is None
-                    else host_spent.unionByName(delta)
-                    .groupBy("host", "host_bucket")
-                    .agg(F.sum("spent").alias("spent"))
-                ).localCheckpoint(eager=True)
-            # eager localCheckpoint (not persist): the loop-carried
-            # scheduled/deferred both re-reference this frame, so without a
-            # lineage cut the logical plan tree grows multiplicatively per
-            # generation (plan-string OOM by gen ~5)
-            state = (
-                ckpt_state
-                if ckpt_state is not None and cfg.total_budget_per_host is None
-                else self._state_for(exact, host_spent)
-            )
-            # emit_strings="frontier": dup/seen/disallowed rows come back
-            # hash-only — this loop only counts them / folds them into
-            # the seen-set by url_hash, so the dropped majority's string
-            # bytes never ride the worker→JVM hop
-            # lazy localCheckpoint: the counter collect right below is the
-            # FIRST action on fused_out and scans every partition, so it
-            # both materializes the checkpoint and cuts the lineage in the
-            # same job — one fewer driver job per generation than an eager
-            # cut followed by the collect
-            fused_out = fused_filter_schedule(
-                spark, cand, None, self.robots, cfg.scheduler, emit_dropped=True,
-                total_budget_per_host=cfg.total_budget_per_host,
-                n_salts=cur_salts,
-                state=state,
-                emit_strings="frontier",
+        new_rows = fused_out.filter(
+            F.col("is_new") & F.col("status").isin(*next_statuses)
+        )
+        # the key range is known without sampling, so global_rank takes
+        # the cheaper bucket-offset JVM path (no Python worker), and with
+        # the counts pre-folded into the agg above it runs ZERO jobs of
+        # its own: lazy localCheckpoint defers the materialization (and
+        # the lineage cut) to the next action that consumes new_ranked
+        new_ranked, n_new = global_rank(
+            new_rows, ["priority", "url_hash"], "__minted",
+            start=st.next_priority, with_count=True,
+            num_partitions=cfg.n_host_buckets, eager=False,
+            bounds=rank_bounds, bucket_counts=rank_counts,
+        )
+        new_ranked = new_ranked.localCheckpoint(eager=False)
+        new_ranked = new_ranked.withColumn("priority", F.col("__minted")).drop("__minted")
+        exact = st.exact
+        if n_new:
+            exact = exact.unionByName(
+                new_ranked.select("url_hash", "host_bucket")
             ).localCheckpoint(eager=False)
 
-            # One small agg over the fused output drives every loop counter
-            # (and materializes fetched + fused_out). Fetch ok/failed per
-            # bucket is NOT collected per generation: crawl_log is 1:1 with
-            # scheduled rows, so a single end-of-run agg over the cached
-            # logs recovers (scheduled, fetched, failed) for every
-            # (generation, bucket) in one job instead of one per loop.
-            # The SAME agg also carries global_rank's per-bucket counts
-            # (group by the ranker's own bucket expression) so the mint
-            # below runs with zero internal jobs — one collect per
-            # generation drives counters, auto-salt AND the rank offsets.
-            rank_bounds = (0, next_priority * MAX_LINK_SLOTS)
-            st: dict[tuple[int, str], int] = {}
-            rank_counts: dict[int, int] = {}
-            for r in (
-                fused_out.groupBy(
-                    "host_bucket", "status", "is_new",
-                    rank_bucket_expr(
-                        "priority", cfg.n_host_buckets, rank_bounds
-                    ).alias("__b"),
-                )
-                .agg(F.count("*").alias("n")).collect()
-            ):
-                k = (r["host_bucket"], r["status"])
-                st[k] = st.get(k, 0) + r["n"]
-                if r["is_new"] and r["status"] in next_statuses:
-                    rank_counts[r["__b"]] = rank_counts.get(r["__b"], 0) + r["n"]
-
-            new_rows = fused_out.filter(
-                F.col("is_new") & F.col("status").isin(*next_statuses)
-            )
-            # the packed key is parent_priority * MAX_LINK_SLOTS + slot and
-            # every parent was minted below next_priority, so the key range
-            # is known without sampling — global_rank takes the cheaper
-            # bucket-offset JVM path (no Python worker in the ranking), and
-            # with the counts pre-folded into the loop agg above it runs
-            # ZERO jobs of its own: lazy localCheckpoint defers the
-            # materialization (and the lineage cut) to the next
-            # generation's fused-output checkpoint, which consumes
-            # new_ranked on both its state and candidate sides in ONE
-            # action — two fewer driver jobs per generation
-            new_ranked, n_new = global_rank(
-                new_rows, ["priority", "url_hash"], "__minted",
-                start=next_priority, with_count=True,
-                num_partitions=cfg.n_host_buckets, eager=False,
-                bounds=rank_bounds, bucket_counts=rank_counts,
-            )
-            new_ranked = new_ranked.localCheckpoint(eager=False)
-            new_ranked = new_ranked.withColumn("priority", F.col("__minted")).drop("__minted")
-            next_priority += n_new
-            if n_new:
-                exact = exact.unionByName(
-                    new_ranked.select("url_hash", "host_bucket")
-                ).localCheckpoint(eager=False)
-
-            nxt = fused_out.filter(
-                ~F.col("is_new") & F.col("status").isin("scheduled", "deferred")
-            ).unionByName(
-                new_ranked.filter(F.col("status").isin("scheduled", "deferred"))
-            )
-
-            gen_stats[g] = (st, int((time.monotonic() - gen_t0) * 1000))
-            n_frontier = sum(
-                v for (_b, s), v in st.items() if s in next_statuses
-            )
-            # salting never changes results (two-phase exact top-k), only
-            # the physical task bound, so raising it from the counters
-            # this generation already collected is always safe
-            by_bucket: dict[int, int] = {}
-            for (b, _s), v in st.items():
-                by_bucket[b] = by_bucket.get(b, 0) + v
-            cur_salts = auto_salts(by_bucket, cfg.n_host_buckets)
-
-            if cfg.checkpoint_dir:
-                fm = fetched.groupBy("ok").agg(F.count("*").alias("n")).collect()
-                totals["scheduled"] += sum(r["n"] for r in fm)
-                totals["fetched"] += sum(r["n"] for r in fm if r["ok"])
-                dgen = self._ckpt(f"gen={g:05d}")
-                pages_g.write.mode("overwrite").parquet(os.path.join(dgen, "pages"))
-                pages_parts.append(spark.read.parquet(os.path.join(dgen, "pages")))
-                log_g.write.mode("overwrite").parquet(os.path.join(dgen, "crawl_log"))
-                log_parts.append(spark.read.parquet(os.path.join(dgen, "crawl_log")))
-                nxt.write.mode("overwrite").parquet(os.path.join(dgen, "frontier_sched"))
-                nxt = spark.read.parquet(os.path.join(dgen, "frontier_sched"))
-                # snapshot the TAGGED STATE (seen rows + robots dimension
-                # + quota spend) as ONE bucketed external table on
-                # host_bucket: the next generation's cogroup then reads
-                # its whole state side co-located and elides that exchange
-                # entirely (plan-asserted in tests/test_plan_quality.py;
-                # elision requires n_host_buckets ==
-                # spark.sql.shuffle.partitions, else Spark re-shuffles one
-                # side to align) — at 10^10 seen rows that exchange
-                # dominates the loop. A union of separate seen/robots
-                # tables would NOT preserve the partitioning, which is why
-                # the dimension rows live in the same table. The files
-                # stay plain parquet under the checkpoint dir (resume via
-                # spark.read.parquet + tag filter still works; bucketing
-                # metadata lives in the catalog entry only).
-                import hashlib
-
-                tbl = "crawl_seen_{}_{:05d}".format(
-                    hashlib.md5(os.path.abspath(cfg.checkpoint_dir).encode())
-                    .hexdigest()[:8], g,
-                )
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                state_out = self._state_for(exact, host_spent).withColumn(
-                    "bloom_bucket",
-                    F.when(
-                        F.col("tag") == "s",
-                        F.pmod(F.col("url_hash"), F.lit(cfg.bloom.n_buckets)),
-                    ).cast("int"),
-                )
-                (
-                    state_out
-                    .write.mode("overwrite").format("parquet")
-                    .bucketBy(cfg.n_host_buckets, "host_bucket")
-                    .sortBy("url_hash")
-                    .option("path", os.path.join(dgen, "seen_exact"))
-                    .saveAsTable(tbl)
-                )
-                ckpt_state = spark.table(tbl).select(*STATE_COLS)
-                exact = (
-                    spark.table(tbl).filter("tag = 's'")
-                    .select("url_hash", "host_bucket")
-                )
-                if prev_tbl is not None:
-                    spark.sql(f"DROP TABLE IF EXISTS {prev_tbl}")
-                prev_tbl = tbl
-                if host_spent is not None:
-                    host_spent.write.mode("overwrite").parquet(
-                        os.path.join(dgen, "host_spent")
-                    )
-                    host_spent = spark.read.parquet(os.path.join(dgen, "host_spent"))
-                _atomic_write_json(
-                    self._ckpt(f"manifest_gen={g:05d}.json"),
-                    {
-                        "generation": g,
-                        "next_priority": next_priority,
-                        "filter_epoch": 0,
-                        "totals": totals,
-                        "frontier_count": n_frontier,
-                        "lineage": {"host_buckets": cfg.n_host_buckets,
-                                    "bloom_buckets": cfg.bloom.n_buckets},
-                    },
-                )
-            else:
-                # eager localCheckpoint holds only the output columns, so
-                # the full fetched frame (links arrays + working columns)
-                # can be released below — executor storage stays flat at
-                # output size instead of growing by one fetch cache per
-                # generation. ONE combined checkpoint (not one each for
-                # pages/log) saves a driver-latency job per generation;
-                # pages/log are lazy projections of it.
-                combined = fetched.select(
-                    *PAGES_COLS, "generation", "host_bucket", "priority",
-                    "url_canon", "host", "ok", "fetch_offset_ms",
-                ).localCheckpoint(eager=True)
-                pages_parts.append(
-                    combined.filter("ok").select(
-                        *PAGES_COLS, "generation", "host_bucket", "priority",
-                        "url_canon",
-                    )
-                )
-                log_parts.append(
-                    combined.select(
-                        "generation", "priority", "url_canon", "host",
-                        "host_bucket", "ok", "fetch_offset_ms",
-                    )
-                )
-            fetched.unpersist()
-            scheduled, deferred = _split_next(nxt)
-            generations = g + 1
-
-        empty_pages = spark.createDataFrame(
-            [], schema="image_id string, bytes binary, w int, h int, fmt string, "
-            "caption string, phash long, generation int, host_bucket int, "
-            "priority long, url_canon string",
+        nxt = fused_out.filter(
+            ~F.col("is_new") & F.col("status").isin("scheduled", "deferred")
+        ).unionByName(
+            new_ranked.filter(F.col("status").isin("scheduled", "deferred"))
         )
-        pages = empty_pages
+        # salting never changes results (two-phase exact top-k), only
+        # the physical task bound, so raising it from the counters this
+        # step already collected is always safe
+        by_bucket: dict[int, int] = {}
+        for (b, _s), v in counts.items():
+            by_bucket[b] = by_bucket.get(b, 0) + v
+        return nxt, counts, replace(
+            st, exact=exact, table=None, next_priority=st.next_priority + n_new,
+            n_frontier=sum(v for (_b, s), v in counts.items() if s in next_statuses),
+            salts=auto_salts(by_bucket, cfg.n_host_buckets),
+        )
+
+    def commit(
+        self, g: int, fetched: DataFrame, nxt: DataFrame, st: CrawlState
+    ) -> tuple[DataFrame, DataFrame, DataFrame, CrawlState]:
+        """Persist generation ``g``: its fetch results, the next frontier
+        ``nxt`` and the state. Returns (pages, crawl_log, nxt, state), each
+        re-read from what was written.
+
+        With ``checkpoint_dir`` this writes ``gen=<g>/`` and then the
+        manifest, which commits the generation; without it, one eager
+        ``localCheckpoint`` of the fetch's output columns (no manifest)."""
+        spark, cfg = self.spark, self.cfg
+        if not cfg.checkpoint_dir:
+            # eager localCheckpoint holds only the output columns, so the
+            # full fetched frame (links arrays + working columns) can be
+            # released — executor storage stays flat at output size instead
+            # of growing by one fetch cache per generation. ONE combined
+            # checkpoint (not one each for pages/log) saves a
+            # driver-latency job per generation; pages/log are lazy
+            # projections of it.
+            combined = fetched.select(
+                *PAGES_COLS, "generation", "host_bucket", "priority",
+                "url_canon", "host", "ok", "fetch_offset_ms",
+            ).localCheckpoint(eager=True)
+            return (
+                combined.filter("ok").select(*PAGE_OUT_COLS),
+                combined.select(*LOG_COLS), nxt, replace(st, generation=g),
+            )
+
+        fm = fetched.groupBy("ok").agg(F.count("*").alias("n")).collect()
+        totals = {
+            "scheduled": st.totals["scheduled"] + sum(r["n"] for r in fm),
+            "fetched": st.totals["fetched"] + sum(r["n"] for r in fm if r["ok"]),
+        }
+        dgen = self._ckpt(f"gen={g:05d}")
+
+        def write(df: DataFrame, name: str) -> DataFrame:
+            df.write.mode("overwrite").parquet(os.path.join(dgen, name))
+            return spark.read.parquet(os.path.join(dgen, name))
+
+        pages = write(fetched.filter("ok").select(*PAGE_OUT_COLS), "pages")
+        log = write(fetched.select(*LOG_COLS), "crawl_log")
+        nxt = write(nxt, "frontier_sched")
+        # snapshot the TAGGED STATE (seen rows + robots dimension + quota
+        # spend) as ONE bucketed external table on host_bucket: the next
+        # generation's cogroup then reads its whole state side co-located
+        # and elides that exchange entirely (plan-asserted in
+        # tests/test_plan_quality.py; elision requires n_host_buckets ==
+        # spark.sql.shuffle.partitions, else Spark re-shuffles one side
+        # to align) — at 10^10 seen rows that exchange dominates the loop.
+        # A union of separate seen/robots tables would NOT preserve the
+        # partitioning, which is why the dimension rows live in the same
+        # table. The files stay plain parquet under the checkpoint dir
+        # (resume via spark.read.parquet + tag filter still works;
+        # bucketing metadata lives in the catalog entry only).
+        tbl = self._table(g)
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        state_out = self._state_for(st.exact, st.host_spent).withColumn(
+            "bloom_bucket",
+            F.when(
+                F.col("tag") == "s",
+                F.pmod(F.col("url_hash"), F.lit(cfg.bloom.n_buckets)),
+            ).cast("int"),
+        )
+        (
+            state_out
+            .write.mode("overwrite").format("parquet")
+            .bucketBy(cfg.n_host_buckets, "host_bucket")
+            .sortBy("url_hash")
+            .option("path", os.path.join(dgen, "seen_exact"))
+            .saveAsTable(tbl)
+        )
+        if st.generation is not None and st.generation != g:
+            # the catalog entry only; the files are the previous checkpoint
+            spark.sql(f"DROP TABLE IF EXISTS {self._table(st.generation)}")
+        host_spent = st.host_spent
+        if host_spent is not None:
+            host_spent = write(host_spent, "host_spent")
+        _atomic_write_json(
+            self._ckpt(f"manifest_gen={g:05d}.json"),
+            {
+                "generation": g,
+                "next_priority": st.next_priority,
+                "totals": totals,
+                "frontier_count": st.n_frontier,
+                "lineage": {"host_buckets": cfg.n_host_buckets,
+                            "bloom_buckets": cfg.bloom.n_buckets},
+            },
+        )
+        return pages, log, nxt, replace(
+            st, totals=totals, host_spent=host_spent, generation=g,
+            table=spark.table(tbl).select(*STATE_COLS),
+            exact=spark.table(tbl).filter("tag = 's'").select("url_hash", "host_bucket"),
+        )
+
+    def _result(
+        self, st: CrawlState, pages_parts: list[DataFrame], log_parts: list[DataFrame],
+        gen_stats: dict[int, tuple[dict, int]], scheduled: DataFrame | None,
+        deferred: DataFrame | None, generations: int, t0: float,
+    ) -> CrawlResult:
+        spark = self.spark
+        pages = spark.createDataFrame([], schema=PAGES_SCHEMA)
         for p in pages_parts:
             pages = pages.unionByName(p)
-        empty_log = spark.createDataFrame(
-            [], schema="generation int, priority long, url_canon string, host string, "
-            "host_bucket int, ok boolean, fetch_offset_ms long",
-        )
-        crawl_log = empty_log
+        crawl_log = spark.createDataFrame([], schema=LOG_SCHEMA)
         for p in log_parts:
             crawl_log = crawl_log.unionByName(p)
 
-        # one end-of-run agg over the cached logs recovers per-(generation,
+        # one end-of-run agg over the logs recovers per-(generation,
         # bucket) scheduled/fetched/failed for every generation at once
         # (crawl_log is 1:1 with scheduled rows)
+        totals = dict(st.totals)
+        metrics_rows: list[tuple] = []
         if gen_stats:
             fl = crawl_log.groupBy("generation", "host_bucket", "ok").agg(
                 F.count("*").alias("n")
             ).collect()
             ok_n = {(r["generation"], r["host_bucket"]): r["n"] for r in fl if r["ok"]}
             fail_n = {(r["generation"], r["host_bucket"]): r["n"] for r in fl if not r["ok"]}
-            for g, (st, wall_ms) in sorted(gen_stats.items()):
+            for g, (counts, wall_ms) in sorted(gen_stats.items()):
                 buckets = (
-                    {b for b, _s in st}
+                    {b for b, _s in counts}
                     | {b for gg, b in ok_n if gg == g}
                     | {b for gg, b in fail_n if gg == g}
                 )
                 for b in sorted(buckets):
                     metrics_rows.append((
-                        g, b, 0,
+                        g, b,
                         ok_n.get((g, b), 0) + fail_n.get((g, b), 0),
-                        st.get((b, "dup"), 0) + st.get((b, "seen"), 0),
+                        counts.get((b, "dup"), 0) + counts.get((b, "seen"), 0),
                         ok_n.get((g, b), 0), fail_n.get((g, b), 0), wall_ms,
                     ))
-            if not cfg.checkpoint_dir:  # checkpoint mode accumulates per gen
+            if not self.cfg.checkpoint_dir:  # checkpoint mode accumulates per gen
                 totals["scheduled"] += sum(ok_n.values()) + sum(fail_n.values())
                 totals["fetched"] += sum(ok_n.values())
         metrics = spark.createDataFrame(metrics_rows, schema=METRICS_SCHEMA)
@@ -697,7 +742,7 @@ class CrawlPlan:
             pages=pages,
             metrics=metrics,
             crawl_log=crawl_log,
-            seen_exact=exact,
+            seen_exact=st.exact,
             frontier_final=frontier_final,
             generations=generations,
             total_fetched=totals["fetched"],

@@ -14,11 +14,14 @@ that is Structured Streaming:
   late-data tolerance: re-crawl keeps updating until "end",
   /root/reference/worldcup/applications.py:39-40).
 * ``stream_crawl`` — ``foreachBatch`` crawl: each arriving seed-batch
-  file becomes one frontier generation driven through the same fused
-  frontier step as the batch engine (operators/fused_schedule.py), with
-  the exact seen-set and the budget-deferred frontier carried across
-  micro-batches (the idempotent-upsert
-  analog of /root/reference/worldcup/db/deal_mysql_info.py:44-57).
+  file becomes one generation of the batch engine's own ``CrawlPlan``
+  (``step`` + ``commit``, plans/crawl.py), which writes a ``CrawlPlan``
+  checkpoint directory. The seen-set and the budget-deferred frontier
+  are carried in that checkpoint, not in driver memory: every batch
+  resumes from the latest manifest, and a replayed batch whose
+  generation is already committed is skipped, so pages are written once
+  (the idempotent-upsert analog of the reference's
+  worldcup/db/deal_mysql_info.py:44-57).
 
 At cluster scale the same code runs with ``trigger(processingTime=...)``
 against a landing bucket; tests use ``availableNow`` for determinism.
@@ -26,16 +29,14 @@ against a landing bucket; tests use ``availableNow`` for determinism.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.fused_schedule import fused_filter_schedule, robots_state, seen_state
-from ..operators.scheduler import SchedulerConfig
-from ..plans.crawl import _split_next, canonize
+from ..plans.crawl import CrawlConfig, CrawlPlan, CrawlState, canonize
 from ..sources.fetcher import fetch_scheduled
-from ..sources.synthweb import SynthWebConfig, robots_pdf
+from ..sources.synthweb import SynthWebConfig
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -142,17 +143,6 @@ def stream_view_purchase_join(
     )
 
 
-@dataclass
-class StreamCrawlState:
-    """Cross-batch crawl state: the exact seen-set (url_hash,
-    host_bucket), the budget-deferred frontier and the generation counter."""
-
-    seen: DataFrame | None = None
-    deferred: DataFrame | None = None
-    generation: int = 0
-    scheduled_total: int = 0
-
-
 def stream_crawl(
     spark: SparkSession,
     seeds_dir: str,
@@ -163,58 +153,61 @@ def stream_crawl(
     trigger: dict | None = None,
 ):
     """Micro-batch crawl: each seed parquet file that lands in
-    ``seeds_dir`` is one generation (``maxFilesPerTrigger`` = 1). Returns
-    (query, state).
+    ``seeds_dir`` is one generation (``maxFilesPerTrigger`` = 1), run
+    through ``CrawlPlan.step`` and ``CrawlPlan.commit``. Returns
+    (query, plan).
 
     Seed schema: (url string, seed_rank long). Each batch's seeds are new
-    candidates (priority = seed_rank) for the fused frontier step, next to
-    the rows the previous batch deferred for politeness budget, which
-    compete first (``is_new = false``, exactly as in the batch loop) —
-    a URL marked seen is never dropped unfetched. Pages land under
-    ``out_dir`` partitioned by generation; the seen-set and deferred
-    frontier live in driver+executor state across batches.
+    candidates ordered by seed_rank, next to the rows earlier batches
+    deferred for politeness budget, which compete first (``is_new =
+    false``, exactly as in the batch loop) — a URL marked seen is never
+    dropped unfetched. There is no link fan-out: a batch fetches what
+    its step schedules.
+
+    ``out_dir`` is the plan's checkpoint directory: batch ``b`` commits
+    generation ``b`` as ``gen=<b>/`` (pages, crawl_log, frontier_sched =
+    the deferred rows, seen_exact) plus ``manifest_gen=<b>.json``. Every
+    batch reads its state from the latest manifest, so a restarted
+    stream resumes exactly where the last committed batch left off, and
+    a batch whose manifest already exists (``foreachBatch`` replays the
+    last uncommitted batch after a crash) is skipped instead of written
+    twice. ``checkpoint_dir`` is Spark's own stream checkpoint.
 
     ``trigger`` passes through to ``writeStream.trigger`` — default
     ``{"availableNow": True}`` (drain-and-stop, deterministic tests);
     a long-lived deployment passes ``{"processingTime": "..."}`` and the
     query keeps polling ``seeds_dir`` for newly landed seed files.
     """
-    web = web or SynthWebConfig()
-    robots = robots_state(spark, robots_pdf(web), n_host_buckets)
-    state = StreamCrawlState()
+    plan = CrawlPlan(spark, CrawlConfig(
+        web=web or SynthWebConfig(), n_host_buckets=n_host_buckets,
+        checkpoint_dir=out_dir,
+    ))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        if os.path.exists(os.path.join(out_dir, f"manifest_gen={batch_id:05d}.json")):
+            return  # a replayed batch: its generation is already committed
+        b = batch_df.agg(F.max("seed_rank").alias("hi"), F.count("*").alias("n")).first()
+        if not b["n"]:
             return
-        g = state.generation
-        cand = canonize(batch_df, n_host_buckets).select(
-            "url_hash", "url_canon", "host", "host_bucket",
-            F.col("seed_rank").cast("long").alias("priority"),
-            F.lit(True).alias("is_new"), F.lit(0).alias("retry_count"),
+        loaded = plan.load()
+        if loaded is None:
+            st = CrawlState(
+                exact=spark.createDataFrame([], "url_hash long, host_bucket int"),
+                next_priority=0,
+            )
+            deferred = None
+        else:
+            st, deferred = loaded
+        new = canonize(batch_df, n_host_buckets, keep_host=False).withColumn(
+            "priority", F.col("seed_rank").cast("long")
         )
-        st = robots
-        if state.seen is not None:
-            st = seen_state(state.seen).unionByName(robots)
-        if state.deferred is not None:
-            cand = cand.unionByName(state.deferred.withColumn("is_new", F.lit(False)))
-        out = fused_filter_schedule(
-            spark, cand, None, None, SchedulerConfig(), state=st,
-        ).localCheckpoint(eager=True)
-        # every surviving new row (scheduled, deferred or disallowed) joins
-        # the seen-set; deferred rows ride into the next batch
-        delta = out.filter("is_new").select("url_hash", "host_bucket")
-        if state.seen is not None:
-            delta = state.seen.unionByName(delta)
-        state.seen = delta.localCheckpoint(eager=True)
-        scheduled, state.deferred = _split_next(out)
-        fetched = fetch_scheduled(scheduled.withColumn("generation", F.lit(g)), web)
-        pages = fetched.filter("ok").select(
-            "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-            "generation", "url_canon",
-        )
-        pages.write.mode("append").parquet(f"{out_dir}/generation={g}")
-        state.scheduled_total += scheduled.count()
-        state.generation += 1
+        nxt, _counts, st = plan.step(new, deferred, st, b["hi"] + 1)
+        fetched = fetch_scheduled(
+            nxt.filter("status = 'scheduled'").withColumn("generation", F.lit(batch_id)),
+            plan.cfg.web,
+        ).persist()
+        plan.commit(batch_id, fetched, nxt.filter("status = 'deferred'"), st)
+        fetched.unpersist()
 
     query = (
         spark.readStream.schema("url string, seed_rank long")
@@ -225,7 +218,7 @@ def stream_crawl(
         .trigger(**(trigger or {"availableNow": True}))
         .start()
     )
-    return query, state
+    return query, plan
 
 
 def stream_politeness_schedule(

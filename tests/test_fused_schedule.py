@@ -225,7 +225,6 @@ def test_arrow_kernel_matches_pandas_kernel(spark, setup, n_salts):
 @pytest.mark.parametrize("n_salts", [1, 4])
 @pytest.mark.parametrize("mode,kept", [
     ("frontier", {"scheduled", "deferred"}),
-    ("scheduled", {"scheduled"}),
 ])
 def test_emit_strings_modes(spark, setup, mode, kept, n_salts):
     """emit_strings trims url_canon/host to the keep set and changes
@@ -258,12 +257,6 @@ def test_emit_strings_modes(spark, setup, mode, kept, n_salts):
         if f["status"] in kept:
             assert (t["url_canon"], t["host"]) == (f["url_canon"], f["host"])
             n_kept += 1
-        elif f["status"] == "deferred" and "deferred" not in kept and n_salts > 1:
-            # salted "scheduled" mode: phase-2 losers (ranked from
-            # pending) keep strings, phase-1 deferred rows don't —
-            # either is within the mode's contract (no consumer reads
-            # deferred strings in this mode)
-            pass
         else:
             assert t["url_canon"] is None and t["host"] is None
     assert n_kept > 0 and n_kept < len(full)

@@ -367,51 +367,6 @@ def test_dataset_split_subset_stable(spark):
     assert all(full[k] == v for k, v in half.items())
 
 
-# -------------------------------------------------------------- salted_join
-
-
-def test_salted_join_equals_plain_join(spark):
-    """90%-one-key skew: salted output == plain join output, and the
-    salted shuffle splits the hot key across multiple partitions."""
-    from crawlers_spark.operators.skew import salted_join
-
-    left = spark.createDataFrame(
-        [(0 if i % 10 else i, i, f"p{i}") for i in range(2000)],
-        "k long, seq long, payload string",
-    )  # key 0 carries ~90% of rows
-    right = spark.createDataFrame(
-        [(i, f"dim{i}") for i in range(0, 2000, 7)], "k long, dim string"
-    )
-    want = sorted(
-        (r["k"], r["seq"], r["dim"])
-        for r in left.join(right, "k").collect()
-    )
-    got = sorted(
-        (r["k"], r["seq"], r["dim"])
-        for r in salted_join(left, right, "k", n_salt=8).collect()
-    )
-    assert got == want and len(got) > 0
-    # left flavor keeps unmatched left rows exactly once
-    want_l = sorted(
-        (r["k"], r["seq"], r["dim"])
-        for r in left.join(right, "k", "left").collect()
-    )
-    got_l = sorted(
-        (r["k"], r["seq"], r["dim"])
-        for r in salted_join(left, right, "k", n_salt=8, how="left").collect()
-    )
-    assert got_l == want_l
-    # the hot key's rows really do land in >1 salt bucket
-    from pyspark.sql import functions as F
-    from crawlers_spark.operators.skew import salted_join as _sj  # noqa: F401
-
-    l_s = left.withColumn(
-        "__salt", F.pmod(F.xxhash64("seq", "payload"), F.lit(8)).cast("int")
-    )
-    n_buckets = l_s.filter(F.col("k") == 0).select("__salt").distinct().count()
-    assert n_buckets > 1
-
-
 def test_approx_percentile_scale_path_close_to_exact(spark):
     """The documented 100-TB path for length_quantiles: approx_percentile
     lands within 2% of the exact rank-selected p50/p90 on the test

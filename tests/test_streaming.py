@@ -43,29 +43,66 @@ def test_stream_events_daily_matches_batch(spark, tmp_path):
     assert got == batch
 
 
+def _gen_pages(out_dir, g: int) -> set[str]:
+    return set(pd.read_parquet(os.path.join(out_dir, f"gen={g:05d}", "pages"))["url_canon"])
+
+
+# fail_mod past every page hash: each scheduled URL lands in pages
+DEFER_WEB = SynthWebConfig(n_hosts=3, base_pages=40, fail_mod=2**62)
+
+
+def _land_fixture_batches(seeds_dir, batches=(0, 1)) -> None:
+    """Batch 0: 100 seeds; batch 1: 5 of them again (already seen), with
+    a later mtime so the file source orders it second."""
+    seeds_dir.mkdir(parents=True, exist_ok=True)
+    seeds = make_seed_urls(DEFER_WEB, 100)
+    if 0 in batches:
+        seeds.to_parquet(seeds_dir / "batch0.parquet")
+    if 1 in batches:
+        seeds.iloc[:5].to_parquet(seeds_dir / "batch1.parquet")
+        t = os.path.getmtime(seeds_dir / "batch0.parquet")
+        os.utime(seeds_dir / "batch1.parquet", (t + 10, t + 10))
+
+
+def _run_stream(spark, root):
+    query, plan = stream_crawl(
+        spark, str(root / "seeds"), out_dir=str(root / "out"),
+        checkpoint_dir=str(root / "ckpt"), web=DEFER_WEB, n_host_buckets=8,
+    )
+    query.awaitTermination(180)
+    assert query.exception() is None
+    return plan
+
+
+def _crawl_log(root) -> list[tuple]:
+    log = pd.concat(pd.read_parquet(d / "crawl_log") for d in (root / "out").glob("gen=*"))
+    return sorted(
+        log[["generation", "priority", "url_canon", "ok"]].itertuples(index=False, name=None)
+    )
+
+
 def test_stream_crawl_two_generations(spark, tmp_path):
     web = SynthWebConfig(n_hosts=6, base_pages=30)
     seeds_dir = str(tmp_path / "seeds")
+    out_dir = str(tmp_path / "out")
     os.makedirs(seeds_dir)
     # two seed files -> two micro-batch generations
     make_seed_urls(web, 10).to_parquet(os.path.join(seeds_dir, "batch0.parquet"))
     s2 = make_seed_urls(web, 20)
     s2[s2.seed_rank >= 10].to_parquet(os.path.join(seeds_dir, "batch1.parquet"))
 
-    query, state = stream_crawl(
+    query, plan = stream_crawl(
         spark,
         seeds_dir,
-        out_dir=str(tmp_path / "pages"),
+        out_dir=out_dir,
         checkpoint_dir=str(tmp_path / "ckpt"),
         web=web,
     )
     query.awaitTermination(180)
-    assert state.generation == 2  # one generation per landed seed file
-    assert state.scheduled_total > 0
-    pages = spark.read.option("basePath", str(tmp_path / "pages")).parquet(
-        str(tmp_path / "pages") + "/generation=*"
-    )
-    rows = pages.collect()
+    manifest = plan.latest_manifest()
+    assert manifest["generation"] == 1  # one generation per landed seed file
+    assert manifest["totals"]["scheduled"] > 0
+    rows = spark.read.parquet(os.path.join(out_dir, "gen=*", "pages")).collect()
     assert len(rows) > 0
     assert all(r["bytes"] is not None for r in rows)
 
@@ -81,15 +118,9 @@ def test_stream_crawl_carries_deferred_rows(spark, tmp_path):
     from crawlers_spark.operators.scheduler import SchedulerConfig
     from crawlers_spark.plans.crawl import canonize
 
-    # fail_mod past every page hash: each scheduled URL lands in pages
-    web = SynthWebConfig(n_hosts=3, base_pages=40, fail_mod=2**62)
-    seeds_dir = tmp_path / "seeds"
-    seeds_dir.mkdir()
+    web = DEFER_WEB
+    _land_fixture_batches(tmp_path / "seeds")
     seeds = make_seed_urls(web, 100)
-    seeds.to_parquet(seeds_dir / "batch0.parquet")
-    seeds.iloc[:5].to_parquet(seeds_dir / "batch1.parquet")
-    t = os.path.getmtime(seeds_dir / "batch0.parquet")
-    os.utime(seeds_dir / "batch1.parquet", (t + 10, t + 10))
 
     # batch 0's expected split, from the same step on the same candidates
     b0 = fused_filter_schedule(
@@ -105,18 +136,60 @@ def test_stream_crawl_carries_deferred_rows(spark, tmp_path):
     assert deferred0, "nothing deferred; weak fixture"
     assert all(n <= budget[h] for h, n in per_host.items()), "batch 1 cannot drain"
 
-    query, state = stream_crawl(
-        spark, str(seeds_dir), out_dir=str(tmp_path / "pages"),
-        checkpoint_dir=str(tmp_path / "ckpt"), web=web, n_host_buckets=8,
-    )
-    query.awaitTermination(180)
-    assert state.generation == 2
-    def pages(g):
-        return set(pd.read_parquet(tmp_path / "pages" / f"generation={g}")["url_canon"])
+    plan = _run_stream(spark, tmp_path)
+    out_dir = tmp_path / "out"
+    assert plan.latest_manifest()["generation"] == 1
+    assert _gen_pages(out_dir, 0) == sched0
+    assert _gen_pages(out_dir, 1) == deferred0
+    assert spark.read.parquet(str(out_dir / "gen=00001" / "frontier_sched")).count() == 0
 
-    assert pages(0) == sched0
-    assert pages(1) == deferred0
-    assert state.deferred.count() == 0
+
+def test_stream_crawl_restart_resumes_exactly(spark, tmp_path):
+    """A stream stopped after batch 0 and restarted (a fresh stream_crawl
+    call on the same directories) for batch 1 crawls exactly what one
+    uninterrupted stream crawls: the seen-set and the deferred rows come
+    back from the checkpoint, not from driver memory."""
+    full, part = tmp_path / "full", tmp_path / "part"
+    _land_fixture_batches(full / "seeds")
+    _run_stream(spark, full)
+
+    _land_fixture_batches(part / "seeds", batches=(0,))
+    _run_stream(spark, part)
+    _land_fixture_batches(part / "seeds", batches=(1,))
+    plan = _run_stream(spark, part)
+
+    assert plan.latest_manifest()["generation"] == 1
+    for g in (0, 1):
+        assert _gen_pages(part / "out", g) == _gen_pages(full / "out", g), g
+    assert _gen_pages(part / "out", 1), "batch 1 fetched nothing; weak fixture"
+    log = _crawl_log(part)
+    assert log == _crawl_log(full)
+    urls = [url for _g, _p, url, _ok in log]
+    assert len(urls) == len(set(urls)), "a URL was fetched twice"
+
+
+def test_stream_crawl_replayed_batch_writes_once(spark, tmp_path):
+    """foreachBatch is at-least-once: after a crash between the batch's
+    writes and Spark's commit, the restarted query runs the batch again.
+    Its generation is already committed, so the replay writes nothing."""
+    _land_fixture_batches(tmp_path / "seeds")
+    manifest = _run_stream(spark, tmp_path).latest_manifest()
+
+    def files():
+        return {
+            str(p.relative_to(tmp_path / "out")): (p.stat().st_size, p.stat().st_mtime_ns)
+            for p in (tmp_path / "out").rglob("*") if p.is_file()
+        }
+
+    before = files()
+    commits = tmp_path / "ckpt" / "commits"
+    for f in (commits / "1", commits / ".1.crc"):
+        if f.exists():
+            f.unlink()
+    plan = _run_stream(spark, tmp_path)
+    assert (commits / "1").exists(), "Spark did not re-run batch 1"
+    assert plan.latest_manifest() == manifest
+    assert files() == before
 
 
 def test_stateful_quota_across_restarts(spark, tmp_path):
@@ -167,7 +240,7 @@ def test_stream_crawl_processing_time_long_lived(spark, tmp_path):
     becomes the next micro-batch generation (availableNow would have
     drained and stopped). Backs the claim at micro_batch.py module
     docstring; state (seen-set, generation counter) carries across the
-    wall-clock-triggered batches."""
+    wall-clock-triggered batches in the plan's checkpoint."""
     import time
 
     web = SynthWebConfig(n_hosts=6, base_pages=30)
@@ -175,23 +248,29 @@ def test_stream_crawl_processing_time_long_lived(spark, tmp_path):
     seeds_dir.mkdir()
     make_seed_urls(web, 10).to_parquet(seeds_dir / "batch0.parquet")
 
-    query, state = stream_crawl(
+    out_dir = str(tmp_path / "out")
+    query, plan = stream_crawl(
         spark,
         str(seeds_dir),
-        out_dir=str(tmp_path / "pages"),
+        out_dir=out_dir,
         checkpoint_dir=str(tmp_path / "ckpt"),
         web=web,
         trigger={"processingTime": "1 second"},
     )
+
+    def generations() -> int:
+        manifest = plan.latest_manifest()
+        return 0 if manifest is None else manifest["generation"] + 1
+
     try:
 
         def wait_for(gen: int, timeout: float = 90.0) -> None:
             t0 = time.monotonic()
-            while state.generation < gen:
+            while generations() < gen:
                 assert query.isActive, query.exception()
                 assert time.monotonic() - t0 < timeout, (
                     f"generation {gen} not reached in {timeout}s "
-                    f"(at {state.generation})"
+                    f"(at {generations()})"
                 )
                 time.sleep(0.5)
 
@@ -202,12 +281,9 @@ def test_stream_crawl_processing_time_long_lived(spark, tmp_path):
         wait_for(2)
     finally:
         query.stop()
-    assert state.generation >= 2
-    assert state.scheduled_total > 0
-    pages = spark.read.option("basePath", str(tmp_path / "pages")).parquet(
-        str(tmp_path / "pages") + "/generation=*"
-    )
-    assert pages.count() > 0
+    assert generations() >= 2
+    assert plan.latest_manifest()["totals"]["scheduled"] > 0
+    assert spark.read.parquet(os.path.join(out_dir, "gen=*", "pages")).count() > 0
 
 
 def test_stream_dedup_exact_across_restarts(spark, tmp_path):
