@@ -6,9 +6,9 @@ DataFrame + vectorized pandas/Arrow-UDF pipeline:
 
 * ``functions``  — vectorized kernels: URL canonicalization + 64-bit
   hashing, numpy image codecs (PNG/PPM), perceptual hash, PSNR,
-  text-analysis functions (lang-id, quality, tokens, fingerprints).
-* ``sources``    — table IO facade (Parquet now, Iceberg-compatible
-  layout), the deterministic synthetic web + ``mapInPandas`` fetch stage.
+  ISO-duration / month-name date parsing.
+* ``sources``    — the testdata table scan, the deterministic synthetic
+  web + ``mapInPandas`` fetch stage.
 * ``operators``  — the fused frontier step (dedup + exact seen-set +
   robots + per-host politeness schedule in one bucket-local cogroup),
   per-bucket Bloom blobs that pre-filter its seen probe, dedup family

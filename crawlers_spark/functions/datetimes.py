@@ -1,4 +1,4 @@
-"""Column-level datetime kernels for reference scalar ops F2-F5, F13.
+"""Column-level datetime kernels for reference scalar ops F5 and F13.
 
 All built-in expressions (JVM-side, codegen); no UDFs.
 """
@@ -34,9 +34,3 @@ def parse_month_name_date(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.to_date(F.regexp_replace(c, ",", ""), "MMMM d yyyy")
 
-
-def shift_utc8(ts: Column | str) -> Column:
-    """UTC→UTC+8 shift, the reference's formatGMTime semantics
-    (/root/reference/utils/tool.py:4-12)."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.from_utc_timestamp(c.cast("timestamp"), "Asia/Shanghai")

@@ -1,15 +1,12 @@
-"""Vectorized text-analysis kernels for the training-data pipeline.
+"""Shared text-analysis constants for the training-data queries.
 
-All pandas `.str` / numpy column ops; designed so the identical logic is
-expressible in ANSI SQL for the DuckDB oracle (see __spark_entry__.py):
-language-ID by stopword-hit heuristic, quality scoring from
-length/punctuation/stopword ratios, whitespace + BPE-ish token counting,
-and md5 content fingerprints for exact dedup.
+The kernels themselves are built-in Spark expressions in queries.py
+(language-ID by stopword-marker hits, quality scoring, BPE-ish token
+counts); this module holds the two constants they and their DuckDB
+oracles must agree on.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 # tiny per-language stopword marker sets (synthetic corpus scale)
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -19,56 +16,5 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "que", "de", "los"),
 }
 
+# BPE-ish token: alpha runs + digit runs + single punctuation
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def token_count_ws(text: pd.Series) -> pd.Series:
-    """Whitespace token count."""
-    t = text.fillna("").str.strip()
-    n = t.str.count(r"\s+") + 1
-    return n.where(t.str.len() > 0, 0).astype("int64")
-
-
-def token_count_bpe(text: pd.Series) -> pd.Series:
-    """BPE-ish token count: alpha runs + digit runs + single punctuation."""
-    return text.fillna("").str.count(BPE_TOKEN_RE).astype("int64")
-
-
-def punct_ratio(text: pd.Series) -> pd.Series:
-    t = text.fillna("")
-    return (t.str.count(r"[^\w\s]") / t.str.len().clip(lower=1)).astype("float64")
-
-
-def stopword_ratio(text: pd.Series, lang: str = "en") -> pd.Series:
-    words = token_count_ws(text).clip(lower=1)
-    hits = pd.Series(0, index=text.index, dtype="int64")
-    for m in LANG_MARKERS[lang]:
-        hits = hits + text.fillna("").str.count(rf"\b{m}\b")
-    return (hits / words).astype("float64")
-
-
-def quality_score(text: pd.Series) -> pd.Series:
-    """Composite [0,1] quality: length band + low punct + stopword presence."""
-    t = text.fillna("")
-    length_ok = ((t.str.len() >= 50) & (t.str.len() <= 20000)).astype("float64")
-    punct_ok = (punct_ratio(text) < 0.2).astype("float64")
-    stop_ok = (stopword_ratio(text) > 0.01).astype("float64")
-    return (0.4 * length_ok + 0.3 * punct_ok + 0.3 * stop_ok).astype("float64")
-
-
-def predict_lang(text: pd.Series) -> pd.Series:
-    """Argmax of per-language marker hits; 'unk' when all zero.
-
-    Deterministic tie-break: language key order as in LANG_MARKERS.
-    """
-    t = text.fillna("").str.lower()
-    best = pd.Series("unk", index=text.index)
-    best_hits = pd.Series(0, index=text.index, dtype="int64")
-    for lang, markers in LANG_MARKERS.items():
-        hits = pd.Series(0, index=text.index, dtype="int64")
-        for m in markers:
-            hits = hits + t.str.count(rf"\b{m}\b")
-        better = hits > best_hits
-        best = best.mask(better, lang)
-        best_hits = best_hits.mask(better, hits)
-    return best

@@ -103,10 +103,11 @@ def robots_state(
 ) -> DataFrame:
     """Per-host robots dimension -> tagged state rows (tag='r').
 
-    Accepts the driver-side pandas robots cache (tests/bench) or a Spark
-    DataFrame of any size; either way the result is hash-bucketed on the
-    same ``host_bucket`` layout as the seen shard, so the fused cogroup
-    reads it co-partitioned — never broadcast, never collected.
+    Accepts the driver-side pandas robots cache (CrawlPlan, tests, bench)
+    or a Spark DataFrame of any size; either way the result is
+    hash-bucketed on the same ``host_bucket`` layout as the seen shard, so
+    the fused cogroup reads it co-partitioned — never broadcast, never
+    collected.
     """
     if isinstance(robots, pd.DataFrame):
         rp = robots.copy()
@@ -190,7 +191,7 @@ def fused_filter_schedule(
     spark: SparkSession,
     candidates: DataFrame,
     exact: DataFrame | None,
-    robots: pd.DataFrame | DataFrame,
+    robots: pd.DataFrame | DataFrame | None,
     cfg: SchedulerConfig = SchedulerConfig(),
     blobs: dict[int, bytes] | None = None,
     params: BloomParams | None = None,
@@ -230,7 +231,8 @@ def fused_filter_schedule(
     ``n_salts > 1`` is the mega-host skew escape hatch (module
     docstring). Pass ``state`` directly (pre-built tagged table, e.g. the
     bucketed checkpoint snapshot) to skip the union assembly and keep the
-    state side's bucketed partitioning for exchange elision.
+    state side's bucketed partitioning for exchange elision; ``exact``,
+    ``robots`` and ``host_spent`` are then unused.
 
     The kernel runs under ``applyInArrow``: URL strings stay in Arrow
     buffers end-to-end and never materialize as Python objects (a pandas

@@ -36,7 +36,6 @@ def global_rank(
     start: int = 0,
     num_partitions: int | None = None,
     with_count: bool = False,
-    eager: bool = False,
     bounds: tuple[int, int] | None = None,
     bucket_counts: dict[int, int] | None = None,
 ):
@@ -45,13 +44,6 @@ def global_rank(
     With ``with_count=True`` returns ``(df, n_rows)`` — the row count is
     free here (it is the sum of the per-partition counts this operator
     already collects), saving callers a separate count job.
-
-    With ``eager=True`` the result is materialized via an eager
-    ``localCheckpoint`` and the internal sorted cache is unpersisted
-    before returning — loop callers get a lineage-cut result with no
-    leaked cache entry. (The internal persist is load-bearing: the
-    prefix-sum offsets are computed from one concrete range partitioning,
-    and a recompute could sample different boundaries.)
 
     With ``bounds=(lo, hi)`` — a caller-known value range for
     ``order_cols[0]`` (``lo <= v < hi``; looseness costs only balance,
@@ -67,8 +59,8 @@ def global_rank(
     parts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     if bounds is not None:
         return _rank_with_bounds(
-            df, order_cols, out_col, start, int(parts), with_count, eager,
-            bounds, bucket_counts,
+            df, order_cols, out_col, start, int(parts), with_count, bounds,
+            bucket_counts,
         )
     if bucket_counts is not None:
         raise ValueError("bucket_counts requires bounds (same bucket map)")
@@ -77,6 +69,8 @@ def global_rank(
         .sortWithinPartitions(*order_cols)
         .withColumn("__pid", F.spark_partition_id())
     )
+    # load-bearing: the prefix-sum offsets come from one concrete range
+    # partitioning, and a recompute could sample different boundaries
     ordered = ordered.persist()
     counts = {r["__pid"]: r["cnt"] for r in ordered.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()}
     offsets: dict[int, int] = {}
@@ -100,9 +94,6 @@ def global_rank(
             yield pdf
 
     out = ordered.mapInPandas(add_rank, schema=schema).drop("__pid")
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        ordered.unpersist()
     if with_count:
         return out, acc - start
     return out
@@ -138,7 +129,6 @@ def _rank_with_bounds(
     start: int,
     parts: int,
     with_count: bool,
-    eager: bool,
     bounds: tuple[int, int],
     bucket_counts: dict[int, int] | None = None,
 ):
@@ -186,8 +176,6 @@ def _rank_with_bounds(
         out_col,
         (omap[F.col("__b")] + F.row_number().over(w) - 1).cast("long"),
     ).drop("__b")
-    if eager:
-        out = out.localCheckpoint(eager=True)
     if with_count:
         return out, acc - start
     return out

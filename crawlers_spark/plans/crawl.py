@@ -30,8 +30,9 @@ bucketed on ``host_bucket``) and, when a lifetime quota is set,
 ``host_spent``; then an atomically-renamed JSON manifest
 ``manifest_gen=<g>.json`` (generation, next_priority, totals,
 frontier_count) commits the generation — the Parquet+manifest stand-in
-for Iceberg snapshots (the layout is swap-compatible, see
-sources/tables.py). ``CrawlPlan.load`` reads exactly this set back.
+for Iceberg snapshots (plain Parquet directories, so an Iceberg table
+per directory is a drop-in swap). ``CrawlPlan.load`` reads exactly this
+set back.
 """
 
 from __future__ import annotations
@@ -88,6 +89,8 @@ METRICS_SCHEMA = (
 class CrawlConfig:
     web: SynthWebConfig = field(default_factory=SynthWebConfig)
     scheduler: SchedulerConfig = field(default_factory=SchedulerConfig)
+    # recorded as the manifest's lineage.bloom_buckets only; the loop's
+    # seen-set probe is exact (perfbench's workloads still pass bloom=)
     bloom: BloomParams = field(default_factory=lambda: BloomParams.size_for(100_000))
     n_host_buckets: int = 32
     max_generations: int = 50
@@ -102,12 +105,6 @@ class CrawlConfig:
     # exhausted (reference analog: reconnect-and-retry,
     # /root/reference/worldcup/db/connect_mysql.py:21,50)
     max_retries: int = 0
-    # scope spark.sql.shuffle.partitions to n_host_buckets and disable
-    # AQE for the duration of run() (restored on exit): every exchange
-    # in the loop is hand-sized, so the generic shuffle width only adds
-    # empty tasks and AQE's stage barrier is pure latency. False = leave
-    # the session as-is.
-    scope_session_conf: bool = True
 
 
 @dataclass
@@ -263,37 +260,19 @@ class CrawlState:
 class CrawlPlan:
     """Drives the generation loop; supports checkpoint/resume."""
 
-    def __init__(self, spark: SparkSession, cfg: CrawlConfig, robots: DataFrame | None = None):
+    def __init__(self, spark: SparkSession, cfg: CrawlConfig):
         self.spark = spark
         self.cfg = cfg
-        if robots is None:
-            self.robots = spark.createDataFrame(robots_pdf(cfg.web))
-        else:
-            self.robots = robots
         # tagged robots state rows (tag='r'), bucketed like the seen
-        # shard; computed once and pinned — the fused path cogroups this
-        # DataFrame, it never lives on the driver as dicts
-        self._robots_state: DataFrame | None = None
-
-    def _robots_state_df(self) -> DataFrame:
-        if self._robots_state is None:
-            st = robots_state(self.spark, self.robots, self.cfg.n_host_buckets)
-            # a driver-literal robots table (the common case) is a
-            # LocalRelation — it unions into each generation's state side
-            # for free and pinning it would only add a job; anything with
-            # real lineage (a read/join) is checkpointed once so the loop
-            # never recomputes it per generation
-            try:
-                is_local = self.robots.isLocal()
-            except Exception:  # noqa: BLE001 — conservative fallback
-                is_local = False
-            self._robots_state = st if is_local else st.localCheckpoint(eager=True)
-        return self._robots_state
+        # shard and built once: host_bucket is computed in numpy on the
+        # driver, so the rows are a LocalRelation that unions into each
+        # generation's state side with no job and no Python worker
+        self._robots_state = robots_state(spark, robots_pdf(cfg.web), cfg.n_host_buckets)
 
     def _state_for(
         self, exact: DataFrame | None, host_spent: DataFrame | None
     ) -> DataFrame:
-        st = self._robots_state_df()
+        st = self._robots_state
         if exact is not None:
             st = seen_state(exact).unionByName(st)
         if host_spent is not None:
@@ -356,9 +335,6 @@ class CrawlPlan:
         # (whole-registry parallelism-determinism sweep) and results
         # returned lazily in CrawlResult re-plan under the caller's own
         # confs.
-        if not self.cfg.scope_session_conf:
-            yield
-            return
         conf = self.spark.conf
         saved = {k: conf.get(k) for k in (
             "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")}
@@ -389,9 +365,9 @@ class CrawlPlan:
             return st, None
         return st, fused_filter_schedule(
             self.spark, frontier.withColumn("is_new", F.lit(False)), None,
-            self.robots, cfg.scheduler,
+            None, cfg.scheduler,
             total_budget_per_host=cfg.total_budget_per_host,
-            state=self._robots_state_df(),
+            state=self._robots_state,
             emit_strings="frontier",
         )
 
@@ -522,7 +498,7 @@ class CrawlPlan:
         # job — one fewer driver job per generation than an eager cut
         # followed by the collect
         fused_out = fused_filter_schedule(
-            spark, cand, None, self.robots, cfg.scheduler, emit_dropped=True,
+            spark, cand, None, None, cfg.scheduler, emit_dropped=True,
             total_budget_per_host=cfg.total_budget_per_host,
             n_salts=st.salts,
             state=state,
@@ -566,7 +542,7 @@ class CrawlPlan:
         new_ranked, n_new = global_rank(
             new_rows, ["priority", "url_hash"], "__minted",
             start=st.next_priority, with_count=True,
-            num_partitions=cfg.n_host_buckets, eager=False,
+            num_partitions=cfg.n_host_buckets,
             bounds=rank_bounds, bucket_counts=rank_counts,
         )
         new_ranked = new_ranked.localCheckpoint(eager=False)
@@ -650,15 +626,8 @@ class CrawlPlan:
         # bucketing metadata lives in the catalog entry only).
         tbl = self._table(g)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        state_out = self._state_for(st.exact, st.host_spent).withColumn(
-            "bloom_bucket",
-            F.when(
-                F.col("tag") == "s",
-                F.pmod(F.col("url_hash"), F.lit(cfg.bloom.n_buckets)),
-            ).cast("int"),
-        )
         (
-            state_out
+            self._state_for(st.exact, st.host_spent)
             .write.mode("overwrite").format("parquet")
             .bucketBy(cfg.n_host_buckets, "host_bucket")
             .sortBy("url_hash")

@@ -1,11 +1,9 @@
-"""Table IO facade: Parquet today, Iceberg-compatible layout.
+"""Table scan for the driver-provided testdata tables.
 
-The sandbox has no Iceberg jars, so the engine writes plain Parquet plus
-a JSON snapshot manifest per table (see plans/crawl.py snapshots) behind this
-facade; swapping ``format='iceberg'`` in is a config change, not a code
-change. Replaces the reference's HTTP->MySQL bridge sinks
-(/root/reference/utils/call_mysql.py:13-52) and batch inserts
-(/root/reference/worldcup/db/connect_mysql.py:38-63).
+One Parquet file per table under the scale-factor directory. The crawl
+engine's own sinks (checkpoint pages, crawl log, frontier and the
+bucketed state table) are direct Parquet writes in
+``CrawlPlan.commit`` (plans/crawl.py).
 """
 
 from __future__ import annotations
@@ -14,63 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver-provided table (SURVEY.md §2 S1 seed-table scan)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Register all testdata tables as temp views for spark.sql use."""
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
-
-
-def write_table(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    fmt: str = "parquet",
-) -> None:
-    """Sink facade (S8/S9/S10): Spark writes are inherently batched;
-    mode='overwrite' is the truncate-then-reload semantics of
-    /root/reference/nft_go/get_nftgo1.1.py:47-50."""
-    w = df.write.mode(mode).format(fmt)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table: the co-located-join layout for tables that
-    are repeatedly joined on the same key (seen-set by url_hash, pages by
-    image_id). A join between two tables bucketed on the join key with
-    the same bucket count needs NO exchange at all — each task joins
-    bucket i with bucket i — which at 10^10 rows turns the dominant
-    shuffle into a local merge (asserted in tests/test_plan_quality.py).
-    Spark-native bucketing (no Hive); Iceberg's bucket partition
-    transform is the drop-in equivalent when the catalog is available.
-    """
-    w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *bucket_cols)
-    w = w.sortBy(*(sort_cols or bucket_cols))
-    w.saveAsTable(table)
-
-
-def load_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table (bucket metadata rides the catalog entry, so
-    joins on the bucket key skip the exchange)."""
-    return spark.table(table)

@@ -128,8 +128,11 @@ def test_resume_equals_uninterrupted(spark, tmp_path, engine_result):
 def test_checkpoint_layout(spark, tmp_path, quota):
     """A checkpointed generation holds exactly what resume (and the
     benchmark's resume probe) reads: pages, crawl_log, frontier_sched,
-    seen_exact, plus host_spent when a lifetime quota is set."""
+    seen_exact, plus host_spent when a lifetime quota is set. The tagged
+    state table carries exactly the fused step's state columns."""
     import os
+
+    from crawlers_spark.operators.fused_schedule import STATE_COLS
 
     web = SynthWebConfig(n_hosts=4, base_pages=20)
     ckpt = tmp_path / "ckpt"
@@ -147,6 +150,7 @@ def test_checkpoint_layout(spark, tmp_path, quota):
     ]
     for g in ("gen=00000", "gen=00001"):
         assert set(os.listdir(ckpt / g)) == want, g
+        assert spark.read.parquet(str(ckpt / g / "seen_exact")).columns == STATE_COLS, g
 
 
 def test_retry_requeue_matches_oracle(spark):

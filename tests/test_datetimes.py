@@ -1,16 +1,10 @@
-"""Unit tests for the datetime column kernels (F5, F13, F2)."""
+"""Unit tests for the datetime column kernels (F5, F13)."""
 
 from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import functions as F
-
-from crawlers_spark.functions.datetimes import (
-    parse_iso_duration,
-    parse_month_name_date,
-    shift_utc8,
-)
+from crawlers_spark.functions.datetimes import parse_iso_duration, parse_month_name_date
 
 
 def test_parse_iso_duration(spark):
@@ -36,10 +30,3 @@ def test_parse_month_name_date(spark):
     got = [r["dt"] for r in df.select(parse_month_name_date("d").alias("dt")).collect()]
     assert got == [datetime.date(2023, 3, 5), datetime.date(1999, 12, 31)]
 
-
-def test_shift_utc8(spark):
-    df = spark.createDataFrame([("2024-01-01 20:00:00",)], "t string")
-    got = df.select(
-        F.date_format(shift_utc8("t"), "yyyy-MM-dd HH:mm:ss").alias("s")
-    ).collect()[0]["s"]
-    assert got == "2024-01-02 04:00:00"

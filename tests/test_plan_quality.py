@@ -129,24 +129,21 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     # two tables bucketed on the join key with equal bucket counts join
     # with ZERO Exchange operators — the co-located layout for the
     # seen-set and pages tables at 10^10 rows
-    from crawlers_spark.sources.tables import load_bucketed, write_bucketed
-
     left = spark.range(0, 10_000).select(
         F.col("id").alias("url_hash"), (F.col("id") % 7).alias("x")
     )
     right = spark.range(0, 5_000).select(
         F.col("id").alias("url_hash"), (F.col("id") % 3).alias("y")
     )
-    write_bucketed(left, "bj_left", ["url_hash"], n_buckets=8)
-    write_bucketed(right, "bj_right", ["url_hash"], n_buckets=8)
+    for df, name in ((left, "bj_left"), (right, "bj_right")):
+        (df.write.mode("overwrite").format("parquet")
+         .bucketBy(8, "url_hash").sortBy("url_hash").saveAsTable(name))
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # disable broadcast so the join exercises the bucketed layout the
         # way a 10^10-row (non-broadcastable) join would
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = load_bucketed(spark, "bj_left").join(
-            load_bucketed(spark, "bj_right"), "url_hash"
-        )
+        j = spark.table("bj_left").join(spark.table("bj_right"), "url_hash")
         plan = _plan(j)
         assert "Exchange" not in plan, plan
         assert "SortMergeJoin" in plan

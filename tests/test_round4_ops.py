@@ -427,46 +427,6 @@ def test_sql_api_surface_matches_dataframe(spark):
     assert got == want and len(got) > 0
 
 
-# --------------------------------------------------------------------- UDTF
-
-
-def test_word_ngrams_udtf_matches_declarative(spark):
-    """The Python UDTF and the codegen'd transform+explode path emit
-    identical (doc, pos, gram) rows — so using the UDTF is an explicit
-    choice for inexpressible logic, never a semantic fork."""
-    from crawlers_spark.functions.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    df = spark.createDataFrame(
-        [(1, "The quick  brown Fox jumps"), (2, "a b"), (3, ""), (4, None)],
-        "doc_id long, text string",
-    )
-    df.createOrReplaceTempView("udtf_docs")
-    got = {
-        (r["doc_id"], r["pos"], r["gram"])
-        for r in spark.sql(
-            "SELECT doc_id, g.pos, g.gram FROM udtf_docs, "
-            "LATERAL word_ngrams(text, 3) g"
-        ).collect()
-    }
-    k = 3
-    expr = (
-        f"transform(sequence(0, size(w) - {k}), "
-        f"i -> struct(i as pos, concat_ws(' ', {', '.join(f'w[i+{j}]' for j in range(k))}) as gram))"
-    )
-    want = {
-        (r["doc_id"], r["g"]["pos"], r["g"]["gram"])
-        for r in df.selectExpr(
-            "doc_id",
-            "split(trim(regexp_replace(lower(coalesce(text, '')), '\\\\s+', ' ')), ' ') as w",
-        )
-        .where("size(w) >= 3 and w[0] != ''")
-        .selectExpr("doc_id", f"explode({expr}) as g")
-        .collect()
-    }
-    assert got == want and (1, 0, "the quick brown") in got
-
-
 # -------------------------------------------------- prefix_sum property test
 
 
