@@ -23,6 +23,20 @@ DataFrame + vectorized pandas/Arrow-UDF pipeline:
 
 Everything data-parallel is DataFrame-first; Python appears only inside
 Arrow-batched pandas UDFs (no per-row Python in any hot path).
+
+Importing the package wraps ``zipimport.zipimporter.invalidate_caches``
+(``_zipcache``). PySpark's worker calls ``importlib.invalidate_caches()``
+before every task, and on CPython 3.11 each zipimporter then re-parses
+its whole archive: about a dozen importers over ``pyspark.zip`` plus
+py4j and the shipped package zip, 80-100 ms of CPU per task. That cost
+cannot be shipped away, because Spark puts ``pyspark.zip`` on every
+worker's path, so the fix lives here: unpickling any package UDF imports
+the package, and from then on a worker re-reads an archive only when its
+stat changed.
 """
+
+from crawlers_spark import _zipcache
+
+_zipcache.install()
 
 __version__ = "0.1.0"

@@ -139,11 +139,12 @@ def canonize(
     """Append url_canon, url_hash, [host,] host_bucket in ONE Arrow pass.
 
     Chained scalar pandas UDFs (canon → hash → host → bucket) would cost
-    four ArrowEvalPython nodes, i.e. four Python round-trips per batch —
-    measured ~2.5x slower on the 4M-URL bench. A single ``mapInArrow``
-    runs all four kernels on one batch transfer, and the URL strings stay
-    in Arrow buffers throughout (pass-through columns are never converted
-    to pandas at all).
+    four ArrowEvalPython nodes, i.e. four Python round-trips per batch,
+    each of which ships every URL string to the worker and back and
+    converts it to pandas. A single ``mapInArrow`` runs all four kernels
+    on one batch transfer, and the URL strings stay in Arrow buffers
+    throughout (pass-through columns are never converted to pandas at
+    all).
 
     ``keep_host=False`` omits the host string from the output (the fused
     step re-derives it bucket-locally) — the host column would otherwise

@@ -8,6 +8,7 @@ and an explicit shuffle-partition count (callers size it to the data).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -66,24 +67,31 @@ def build_pyfiles_zip() -> str | None:
     --py-files launch) — in that case executors already received the
     archive from spark-submit and there is nothing on disk to walk."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    sources = []
+    sources = {}
     for root, _dirs, files in os.walk(pkg_dir):
         for fn in files:
             if fn.endswith(".py"):
-                sources.append(os.path.join(root, fn))
+                full = os.path.join(root, fn)
+                with open(full, "rb") as f:
+                    sources[os.path.relpath(full, pkg_dir)] = f.read()
     if not sources:  # zipimport: __file__ points inside an archive
         return None
-    zip_path = os.path.join(tempfile.gettempdir(), "crawlers_spark_pyfiles.zip")
-    # rebuild when stale: executors must never unpickle against an older
-    # package than the driver's (a cached zip from a previous session
-    # silently drops modules added since)
-    newest = max(os.path.getmtime(p) for p in sources)
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < newest:
-        with zipfile.ZipFile(zip_path + ".tmp", "w", zipfile.ZIP_DEFLATED) as zf:
-            for full in sorted(sources):
-                rel = os.path.join("crawlers_spark", os.path.relpath(full, pkg_dir))
-                zf.write(full, rel)
-        os.replace(zip_path + ".tmp", zip_path)
+    # name the zip by the sources it holds: every checkout on a host shares
+    # $TMPDIR, and executors must unpickle against exactly this checkout's
+    # package (not another checkout's, nor one with a deleted module)
+    digest = hashlib.sha256()
+    for rel in sorted(sources):
+        data = sources[rel]
+        digest.update(b"%s\0%d\0" % (rel.encode(), len(data)) + data)
+    zip_path = os.path.join(
+        tempfile.gettempdir(), f"crawlers_spark_pyfiles-{digest.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+            for rel in sorted(sources):
+                zf.writestr(os.path.join("crawlers_spark", rel), sources[rel])
+        os.replace(tmp, zip_path)
     return zip_path
 
 

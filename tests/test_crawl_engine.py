@@ -335,3 +335,153 @@ def test_spark_submit_pyfiles_launch(tmp_path):
     stats = _json.loads(line)
     assert stats["generations"] == 2 and stats["fetched"] > 0
     assert os.path.exists(out_dir / "pages")
+
+
+def test_pyfiles_zip_holds_its_own_checkout(tmp_path):
+    """Two checkouts share one $TMPDIR. The second is older (its files
+    keep older mtimes, as a ``git archive`` of an older commit does) and
+    lacks one module: each must still ship a zip of exactly its own
+    sources."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+    import zipfile
+
+    import crawlers_spark
+
+    pkg = os.path.dirname(os.path.abspath(crawlers_spark.__file__))
+    ignore = shutil.ignore_patterns("__pycache__")
+    new, old = tmp_path / "new", tmp_path / "old"
+    shutil.copytree(pkg, new / "crawlers_spark", ignore=ignore)
+    shutil.copytree(pkg, old / "crawlers_spark", ignore=ignore)
+    (old / "crawlers_spark" / "streaming" / "micro_batch.py").unlink()
+    for root, _dirs, files in os.walk(old):
+        for fn in files:
+            os.utime(os.path.join(root, fn), (1_000_000_000, 1_000_000_000))
+    shared_tmp = tmp_path / "tmp"
+    shared_tmp.mkdir()
+
+    def ship(checkout):
+        out = subprocess.run(
+            [sys.executable, "-c",
+             "from crawlers_spark.session import build_pyfiles_zip; print(build_pyfiles_zip())"],
+            cwd=checkout, env={**os.environ, "TMPDIR": str(shared_tmp), "PYTHONPATH": str(checkout)},
+            capture_output=True, text=True, timeout=120, check=True,
+        )
+        return out.stdout.strip().splitlines()[-1]
+
+    def sources(checkout):
+        return sorted(
+            os.path.relpath(os.path.join(root, fn), checkout)
+            for root, _dirs, files in os.walk(checkout) for fn in files if fn.endswith(".py")
+        )
+
+    for checkout in (new, old, new):
+        with zipfile.ZipFile(ship(checkout)) as zf:
+            assert sorted(zf.namelist()) == sources(checkout), checkout
+
+
+def _module_zip(path, *names):
+    import zipfile
+
+    with zipfile.ZipFile(path, "a") as zf:
+        for name in names:
+            zf.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+
+@pytest.fixture
+def zip_on_path(tmp_path, monkeypatch):
+    """A zip holding module ``zc_mod_a`` on sys.path, and the list of
+    archives ``zipimport._read_directory`` reads while the test runs."""
+    import sys
+    import zipimport
+
+    archive = str(tmp_path / "mods.zip")
+    _module_zip(archive, "zc_mod_a")
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda a: (reads.append(a), read_directory(a))[1]
+    )
+    sys.path.insert(0, archive)
+    yield archive, reads
+    sys.path.remove(archive)
+    sys.path_importer_cache.pop(archive, None)
+    zipimport._zip_directory_cache.pop(archive, None)
+    for name in ("zc_mod_a", "zc_mod_b"):
+        sys.modules.pop(name, None)
+
+
+def test_zip_invalidation_skips_unchanged_archive(zip_on_path):
+    """``importlib.invalidate_caches()``, which every PySpark worker calls
+    per task, does not re-read a zip archive whose stat is unchanged."""
+    import importlib
+    import zipimport
+
+    archive, reads = zip_on_path
+    assert importlib.import_module("zc_mod_a").NAME == "zc_mod_a"
+    importlib.invalidate_caches()
+    reads.clear()
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 0
+
+    from crawlers_spark import _zipcache
+
+    installed = zipimport.zipimporter.invalidate_caches
+    _zipcache.install()  # a second install keeps the one wrapper
+    assert zipimport.zipimporter.invalidate_caches is installed
+
+
+def test_zip_invalidation_sees_appended_module(zip_on_path):
+    import importlib
+
+    archive, reads = zip_on_path
+    assert importlib.import_module("zc_mod_a").NAME == "zc_mod_a"
+    importlib.invalidate_caches()
+    _module_zip(archive, "zc_mod_b")
+    reads.clear()
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 1
+    assert importlib.import_module("zc_mod_b").NAME == "zc_mod_b"
+
+
+def test_workers_run_the_stat_checked_zip_invalidation(spark):
+    """Every Python worker that unpickles a package function runs the
+    package's zip invalidation, so its per-task
+    ``importlib.invalidate_caches()`` reads no unchanged archive."""
+    import crawlers_spark
+
+    def report(batches):
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        reads = []
+        read_directory = zipimport._read_directory
+        zipimport._read_directory = lambda a: (reads.append(a), read_directory(a))[1]
+        try:
+            importlib.invalidate_caches()
+            reads.clear()
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        owner = zipimport.zipimporter.invalidate_caches.__module__
+        for _ in batches:
+            pass
+        # the closure holds the package module, pickled by name: the
+        # worker imports the package to unpickle it, as for any package UDF
+        yield pd.DataFrame({"owner": [owner], "rereads": [len(reads)],
+                            "zips": [len(zipimport._zip_directory_cache)],
+                            "package": [crawlers_spark.__name__]})
+
+    rows = (
+        spark.range(0, 16, 1, 16)
+        .mapInPandas(report, "owner string, rereads long, zips long, package string")
+        .collect()
+    )
+    assert len(rows) == 16
+    for r in rows:
+        assert r.owner == "crawlers_spark._zipcache", r
+        assert r.rereads == 0 and r.zips >= 1, r
