@@ -10,15 +10,16 @@ DataFrame + vectorized pandas/Arrow-UDF pipeline:
 * ``sources``    — the testdata table scan, the deterministic synthetic
   web + ``mapInPandas`` fetch stage.
 * ``operators``  — the fused frontier step (dedup + exact seen-set +
-  robots + per-host politeness schedule in one bucket-local cogroup),
-  per-bucket Bloom blobs that pre-filter its seen probe, dedup family
+  robots + per-host politeness schedule in one bucket-local cogroup;
+  per-bucket Bloom blobs are an optional pre-filter of its seen probe
+  that a caller passes, and the crawl loop builds none), dedup family
   (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding cosine),
   similarity search, near-dup cluster closure (connected components),
   deterministic mixture sampling + benchmark decontamination.
 * ``plans``      — the generation crawl loop with checkpoint/resume,
   per-partition lineage and metrics.
 * ``streaming``  — Structured-Streaming generation driver.
-* ``queries``    — the driver-contract registry: 272 Spark queries, 255
+* ``queries``    — the driver-contract registry: 269 Spark queries, 254
   of them with a DuckDB oracle.
 
 Everything data-parallel is DataFrame-first; Python appears only inside

@@ -63,7 +63,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import fnv64, pmod_bucket
@@ -88,41 +88,19 @@ STATE_COLS = ["tag", "url_hash", "host", "crawl_delay_ms", "max_per_generation",
               "disallow_prefixes", "spent", "host_bucket"]
 
 
-def host_bucket_col(n_host_buckets: int):
-    """pandas UDF: host string -> engine host bucket (fnv64 pmod)."""
-
-    @F.pandas_udf("int")
-    def bucket(host: pd.Series) -> pd.Series:
-        return pd.Series(pmod_bucket(fnv64(host), n_host_buckets), index=host.index)
-
-    return bucket
-
-
 def robots_state(
-    spark: SparkSession, robots: pd.DataFrame | DataFrame, n_host_buckets: int
+    spark: SparkSession, robots: pd.DataFrame, n_host_buckets: int
 ) -> DataFrame:
-    """Per-host robots dimension -> tagged state rows (tag='r').
-
-    Accepts the driver-side pandas robots cache (CrawlPlan, tests, bench)
-    or a Spark DataFrame of any size; either way the result is
-    hash-bucketed on the same ``host_bucket`` layout as the seen shard, so
-    the fused cogroup reads it co-partitioned — never broadcast, never
-    collected.
-    """
-    if isinstance(robots, pd.DataFrame):
-        rp = robots.copy()
-        rp["host_bucket"] = pmod_bucket(fnv64(rp["host"]), n_host_buckets)
-        sdf = spark.createDataFrame(rp)
-    else:
-        sdf = robots
-        if "host_bucket" not in sdf.columns:
-            sdf = sdf.withColumn(
-                "host_bucket", host_bucket_col(n_host_buckets)(F.col("host"))
-            )
+    """Per-host robots dimension (the driver-side pandas robots cache) ->
+    tagged state rows (tag='r'), hash-bucketed on the same
+    ``host_bucket`` layout as the seen shard, so the fused cogroup reads
+    it co-partitioned — never broadcast, never collected."""
+    rp = robots.copy()
+    rp["host_bucket"] = pmod_bucket(fnv64(rp["host"]), n_host_buckets)
     # url_hash uses a 0 sentinel, NOT null: a nullable long column turns
     # into float64 on the Arrow->pandas hop inside the cogroup, silently
     # rounding real 64-bit hashes past 2^53
-    return sdf.select(
+    return spark.createDataFrame(rp).select(
         F.lit("r").alias("tag"),
         F.lit(0).cast("long").alias("url_hash"),
         F.col("host"),
@@ -134,14 +112,10 @@ def robots_state(
     )
 
 
-def quota_state(host_spent: DataFrame, n_host_buckets: int) -> DataFrame:
-    """Per-host lifetime spend (host, spent) -> tagged state rows (tag='q')."""
-    sdf = host_spent
-    if "host_bucket" not in sdf.columns:
-        sdf = sdf.withColumn(
-            "host_bucket", host_bucket_col(n_host_buckets)(F.col("host"))
-        )
-    return sdf.select(
+def quota_state(host_spent: DataFrame) -> DataFrame:
+    """Per-host lifetime spend (host, host_bucket, spent) -> tagged state
+    rows (tag='q')."""
+    return host_spent.select(
         F.lit("q").alias("tag"),
         F.lit(0).cast("long").alias("url_hash"),
         F.col("host"),
@@ -191,12 +165,11 @@ def fused_filter_schedule(
     spark: SparkSession,
     candidates: DataFrame,
     exact: DataFrame | None,
-    robots: pd.DataFrame | DataFrame | None,
+    robots: pd.DataFrame | None,
     cfg: SchedulerConfig = SchedulerConfig(),
     blobs: dict[int, bytes] | None = None,
     params: BloomParams | None = None,
     emit_dropped: bool = False,
-    host_spent: DataFrame | None = None,
     total_budget_per_host: int | None = None,
     n_host_buckets: int | None = None,
     n_salts: int = 1,
@@ -220,19 +193,20 @@ def fused_filter_schedule(
     exchange's bytes — a host string per row — for a short per-bucket
     regex pass that scales with cores instead of shuffle bandwidth.
 
-    ``total_budget_per_host`` + ``host_spent`` give cumulative
-    key-retirement semantics (reference: daily API budgets,
+    ``total_budget_per_host`` gives cumulative key-retirement semantics
+    (reference: daily API budgets,
     /root/reference/youtube/get_youtube_v1.2.py:53-63,
     /root/reference/coinmarketcap/coin_market_cap_api_2.0.py:99-125):
     each host's per-generation budget is capped at
-    ``total_budget_per_host - spent`` — the spend table rides the state
-    cogroup, never the driver.
+    ``total_budget_per_host - spent``, where ``spent`` comes from the
+    ``tag='q'`` rows of a pre-built ``state`` (``quota_state``) — the
+    spend table rides the state cogroup, never the driver.
 
     ``n_salts > 1`` is the mega-host skew escape hatch (module
     docstring). Pass ``state`` directly (pre-built tagged table, e.g. the
     bucketed checkpoint snapshot) to skip the union assembly and keep the
-    state side's bucketed partitioning for exchange elision; ``exact``,
-    ``robots`` and ``host_spent`` are then unused.
+    state side's bucketed partitioning for exchange elision; ``exact``
+    and ``robots`` are then unused.
 
     The kernel runs under ``applyInArrow``: URL strings stay in Arrow
     buffers end-to-end and never materialize as Python objects (a pandas
@@ -269,8 +243,6 @@ def fused_filter_schedule(
         parts = [robots_state(spark, robots, n_host_buckets)]
         if exact is not None:
             parts.append(seen_state(exact))
-        if host_spent is not None:
-            parts.append(quota_state(host_spent, n_host_buckets))
         state = parts[0]
         for p in parts[1:]:
             state = state.unionByName(p)
@@ -518,25 +490,24 @@ def fused_filter_schedule(
         state_salted.groupBy("host_bucket", "salt")
     ).applyInArrow(run_arrow, schema=P1_SCHEMA)
 
-    def rank_host(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.lexsort((
-            pdf["url_hash"].to_numpy(), pdf["priority"].to_numpy(),
-            pdf["is_new"].to_numpy(),
-        ))
-        pdf = pdf.iloc[order]
-        rank = np.arange(1, len(pdf) + 1, dtype=np.int64)
-        budget = pdf["budget_eff"].to_numpy(np.int64)
-        delay = pdf["crawl_delay_ms"].to_numpy(np.int64)
-        within = rank <= budget
-        return pdf.assign(
-            status=np.where(within, "scheduled", "deferred"),
-            host_rank=rank.astype(np.int32),
-            fetch_offset_ms=np.where(within, (rank - 1) * delay, 0).astype(np.int64),
-        )[OUT_COLS]
-
-    pending = p1.filter(F.col("status") == "pending")
     # phase 2: ≤ n_salts·budget rows per host — bounded regardless of how
-    # skewed the candidate distribution is
-    final = pending.groupBy("host").applyInPandas(rank_host, schema=OUT_SCHEMA)
+    # skewed the candidate distribution is — re-ranked by the kernel's
+    # own (is_new, priority, url_hash) order in the JVM, with the
+    # per-host budget and delay that phase 1 emitted
+    rank = F.row_number().over(
+        Window.partitionBy("host").orderBy("is_new", "priority", "url_hash")
+    )
+    within = F.col("host_rank") <= F.col("budget_eff")
+    final = (
+        p1.filter(F.col("status") == "pending")
+        .withColumn("host_rank", rank)
+        .withColumns({
+            "status": F.when(within, "scheduled").otherwise("deferred"),
+            "fetch_offset_ms": F.when(
+                within, (F.col("host_rank") - 1) * F.col("crawl_delay_ms")
+            ).otherwise(0).cast("long"),
+        })
+        .select(*OUT_COLS)
+    )
     rest = p1.filter(F.col("status") != "pending").select(*OUT_COLS)
     return final.unionByName(rest)

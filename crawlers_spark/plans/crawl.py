@@ -3,8 +3,8 @@
 This is the engine's re-expression of the reference's whole pipeline
 shape (SURVEY.md §0): seed scan → paced fetch → flatten → image mirror →
 dedup → sink, with cron generations. Serial sleeps become computed
-politeness offsets; in-memory dedup lists become the partitioned Bloom +
-exact seen-set; the per-seed cursor loop becomes the self-feeding
+politeness offsets; in-memory dedup lists become the exact seen-set,
+sharded on ``host_bucket``; the per-seed cursor loop becomes the self-feeding
 frontier (discovered links are generation g+1's candidates).
 
 One generation is two methods, shared by the batch loop (``run``) and
@@ -25,9 +25,9 @@ minted by a deterministic global rank over
 Checkpoint/resume: each generation ``g`` writes ``gen=<g>/`` under
 ``checkpoint_dir`` with exactly ``pages``, ``crawl_log``,
 ``frontier_sched`` (the next generation's scheduled + deferred rows),
-``seen_exact`` (the tagged state table: exact seen-set + robots rows,
-bucketed on ``host_bucket``) and, when a lifetime quota is set,
-``host_spent``; then an atomically-renamed JSON manifest
+``seen_exact`` (the tagged state table, bucketed on ``host_bucket``:
+exact seen-set + robots rows, plus the per-host spend rows when a
+lifetime quota is set); then an atomically-renamed JSON manifest
 ``manifest_gen=<g>.json`` (generation, next_priority, totals,
 frontier_count) commits the generation — the Parquet+manifest stand-in
 for Iceberg snapshots (plain Parquet directories, so an Iceberg table
@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import fnv64
 from ..functions.urls import canon_urls
 from ..operators.fused_schedule import (
+    OUT_SCHEMA,
     STATE_COLS,
     fused_filter_schedule,
     quota_state,
@@ -239,6 +240,14 @@ def _atomic_write_json(path: str, payload: dict) -> None:
     os.replace(tmp, path)
 
 
+def _spent(state: DataFrame, cfg: CrawlConfig) -> DataFrame | None:
+    """The per-host spend ledger held in a tagged state table's
+    ``tag='q'`` rows, or None without a lifetime quota."""
+    if cfg.total_budget_per_host is None:
+        return None
+    return state.filter("tag = 'q'").select("host", "host_bucket", "spent")
+
+
 @dataclass
 class CrawlState:
     """What one generation hands the next. The checkpoint holds the same
@@ -277,7 +286,7 @@ class CrawlPlan:
         if exact is not None:
             st = seen_state(exact).unionByName(st)
         if host_spent is not None:
-            st = st.unionByName(quota_state(host_spent, self.cfg.n_host_buckets))
+            st = st.unionByName(quota_state(host_spent))
         return st
 
     # ---------- checkpoint plumbing ----------
@@ -310,19 +319,18 @@ class CrawlPlan:
             return None
         spark = self.spark
         d = self._ckpt(f"gen={manifest['generation']:05d}")
-        exact = (
-            spark.read.parquet(os.path.join(d, "seen_exact"))
-            .filter("tag = 's'").select("url_hash", "host_bucket")
+        # known schemas: a bare read would run a schema-inference job each
+        # (every state part has the robots rows' columns and types)
+        state = spark.read.schema(self._robots_state.schema).parquet(
+            os.path.join(d, "seen_exact")
         )
-        host_spent = None
-        if os.path.isdir(os.path.join(d, "host_spent")):
-            host_spent = spark.read.parquet(os.path.join(d, "host_spent"))
         st = CrawlState(
-            exact=exact, next_priority=manifest["next_priority"],
-            totals=dict(manifest["totals"]), host_spent=host_spent,
+            exact=state.filter("tag = 's'").select("url_hash", "host_bucket"),
+            next_priority=manifest["next_priority"],
+            totals=dict(manifest["totals"]), host_spent=_spent(state, self.cfg),
             generation=manifest["generation"], n_frontier=manifest["frontier_count"],
         )
-        return st, spark.read.parquet(os.path.join(d, "frontier_sched"))
+        return st, spark.read.schema(OUT_SCHEMA).parquet(os.path.join(d, "frontier_sched"))
 
     # ---------- main loop ----------
     @contextmanager
@@ -608,15 +616,17 @@ class CrawlPlan:
 
         def write(df: DataFrame, name: str) -> DataFrame:
             df.write.mode("overwrite").parquet(os.path.join(dgen, name))
-            return spark.read.parquet(os.path.join(dgen, name))
+            # the written schema: a bare read would re-infer it in a job
+            return spark.read.schema(df.schema).parquet(os.path.join(dgen, name))
 
         pages = write(fetched.filter("ok").select(*PAGE_OUT_COLS), "pages")
         log = write(fetched.select(*LOG_COLS), "crawl_log")
         nxt = write(nxt, "frontier_sched")
         # snapshot the TAGGED STATE (seen rows + robots dimension + quota
-        # spend) as ONE bucketed external table on host_bucket: the next
-        # generation's cogroup then reads its whole state side co-located
-        # and elides that exchange entirely (plan-asserted in
+        # spend; the checkpoint's only copy of the spend) as ONE bucketed
+        # external table on host_bucket: the next generation's cogroup
+        # then reads its whole state side co-located and elides that
+        # exchange entirely (plan-asserted in
         # tests/test_plan_quality.py; elision requires n_host_buckets ==
         # spark.sql.shuffle.partitions, else Spark re-shuffles one side
         # to align) — at 10^10 seen rows that exchange dominates the loop.
@@ -638,9 +648,6 @@ class CrawlPlan:
         if st.generation is not None and st.generation != g:
             # the catalog entry only; the files are the previous checkpoint
             spark.sql(f"DROP TABLE IF EXISTS {self._table(st.generation)}")
-        host_spent = st.host_spent
-        if host_spent is not None:
-            host_spent = write(host_spent, "host_spent")
         _atomic_write_json(
             self._ckpt(f"manifest_gen={g:05d}.json"),
             {
@@ -652,10 +659,11 @@ class CrawlPlan:
                             "bloom_buckets": cfg.bloom.n_buckets},
             },
         )
+        table = spark.table(tbl).select(*STATE_COLS)
         return pages, log, nxt, replace(
-            st, totals=totals, host_spent=host_spent, generation=g,
-            table=spark.table(tbl).select(*STATE_COLS),
-            exact=spark.table(tbl).filter("tag = 's'").select("url_hash", "host_bucket"),
+            st, totals=totals, host_spent=_spent(table, cfg), generation=g,
+            table=table,
+            exact=table.filter("tag = 's'").select("url_hash", "host_bucket"),
         )
 
     def _result(

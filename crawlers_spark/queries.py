@@ -2182,129 +2182,10 @@ FROM g WHERE h LIKE '0%' GROUP BY 1
 """
 
 
-def q_video_frame_sample(spark: SparkSession, sf: str) -> DataFrame:
-    """Multimodal video plumbing: opaque binary column → decode →
-    evenly-spaced frame sampling → per-frame phash → per-video sketch,
-    all inside one mapInPandas (functions/media.py; the decode layer is a
-    deterministic fake container — real codecs aren\'t bundled — while
-    the Spark-side schema/batching/UDF shape is real). Videos derive
-    deterministically from the documents table. Rows-only."""
-    import pandas as pd
-
-    from .functions.media import encode_video, resize_nearest, video_frame, video_frame_phashes
-
-    d = load_table(spark, sf, "documents").filter(F.col("doc_id") % 20 == 0)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                n_frames = 3 + int(doc_id) % 9
-                blob = encode_video(int(doc_id) * 2654435761 % (2**31), n_frames, 32, 32)
-                ph = video_frame_phashes(blob, k=4)
-                thumb = resize_nearest(video_frame(blob, 0), 8, 8)
-                rows.append((int(doc_id), n_frames, len(ph), len(set(ph)),
-                             int(ph[0]), float(thumb.mean())))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_frames", "n_sampled", "n_distinct", "phash0", "thumb_mean",
-            ])
-
-    frames = d.select("doc_id").mapInPandas(
-        run,
-        schema="doc_id long, n_frames int, n_sampled int, n_distinct int, "
-               "phash0 long, thumb_mean double",
-    )
-    return (
-        frames.groupBy("n_frames")
-        .agg(
-            F.count("*").alias("n_videos"),
-            F.sum("n_sampled").alias("frames_sampled"),
-            F.round(F.avg("thumb_mean"), 4).alias("avg_thumb_px"),
-        )
-    )
-
-
-def q_audio_features(spark: SparkSession, sf: str) -> DataFrame:
-    """Multimodal audio plumbing: binary clip column → decode →
-    vectorized feature extraction (RMS, zero-crossings, dominant rFFT
-    bin) in mapInPandas; clips derive deterministically from the
-    documents table (functions/media.py fake codec). Rows-only."""
-    import pandas as pd
-
-    from .functions.media import audio_features, encode_audio
-
-    d = load_table(spark, sf, "documents").filter(F.col("doc_id") % 25 == 0)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                blob = encode_audio(int(doc_id), 4000 + int(doc_id) % 4000)
-                f = audio_features(blob)
-                rows.append((int(doc_id), f["rms"], f["zcr"], f["dom_hz"]))
-            yield pd.DataFrame(rows, columns=["doc_id", "rms", "zcr", "dom_hz"])
-
-    feats = d.select("doc_id").mapInPandas(
-        run, schema="doc_id long, rms double, zcr double, dom_hz double"
-    )
-    return (
-        feats.withColumn("hz_band", (F.col("dom_hz") / 100).cast("int") * 100)
-        .groupBy("hz_band")
-        .agg(F.count("*").alias("n"), F.round(F.avg("rms"), 5).alias("avg_rms"))
-    )
-
-
 # --------------------------------------------------------------------------
-# round-4 additions: as-of join, link analysis, sketches, non-equi joins,
-# sliding windows
+# round-4 additions: link analysis, sketches, non-equi joins, sliding
+# windows
 # --------------------------------------------------------------------------
-
-
-def q_orders_last_event(spark: SparkSession, sf: str) -> DataFrame:
-    """As-of join: every order, enriched with the customer's latest event
-    at-or-before the order timestamp (operators/asof.py — union + one
-    window pass, never a range explosion; reference analog: per-key
-    latest-quote lookup inside the collection loop,
-    /root/reference/coinmarketcap/coin_market_cap_api_2.0.py:200-206,283).
-    Oracle: DuckDB's native ASOF LEFT JOIN — an independent
-    implementation of the same semantics ((user_id, ts) is unique in the
-    events table, so the latest row is well-defined)."""
-    from .operators.asof import asof_join
-
-    o = load_table(spark, sf, "orders").select(
-        F.col("o_custkey").alias("k"), "o_orderkey",
-        F.col("o_orderdate").alias("ot"),
-    )
-    e = load_table(spark, sf, "events").select(
-        F.col("user_id").alias("k"), "ts", "event_type", "event_id"
-    )
-    j = asof_join(
-        o, e, on=["k"], left_time="ot", right_time="ts",
-        right_cols=["ts", "event_type", "event_id"], right_order=["event_id"],
-    )
-    return j.select(
-        "o_orderkey",
-        F.date_format("ot", "yyyy-MM-dd").alias("order_date"),
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("last_event_ts"),
-        F.col("event_type").alias("last_event_type"),
-        F.col("event_id").alias("last_event_id"),
-    )
-
-
-ORACLE_ORDERS_LAST_EVENT = """
-SELECT o.o_orderkey,
-       strftime(o.o_orderdate, '%Y-%m-%d') AS order_date,
-       strftime(e.ts, '%Y-%m-%d %H:%M:%S.%f') AS last_event_ts,
-       e.event_type AS last_event_type,
-       e.event_id AS last_event_id
-FROM orders o
-ASOF LEFT JOIN events e
-  ON o.o_custkey = e.user_id AND e.ts <= o.o_orderdate
-"""
 
 
 def q_pagerank(spark: SparkSession, sf: str) -> DataFrame:
@@ -20730,12 +20611,9 @@ QUERIES: dict[str, tuple] = {
     "crawl_backfill": (q_crawl_backfill, None),
     "image_decode_stats": (q_image_decode_stats, None),
     "phash_recompression_drift": (q_phash_recompression_drift, None),
-    "video_frame_sample": (q_video_frame_sample, None),
-    "audio_features": (q_audio_features, None),
     "phash_near_dups": (q_phash_near_dups, None),
     "phash_clusters": (q_phash_clusters, None),
     "image_embed_near_dups": (q_image_embed_near_dups, None),
-    "orders_last_event": (q_orders_last_event, ORACLE_ORDERS_LAST_EVENT),
     "pagerank": (q_pagerank, ORACLE_PAGERANK),
     "hll_distinct": (q_hll_distinct, ORACLE_HLL_DISTINCT),
     "cms_heavy_hitters": (q_cms_heavy_hitters, ORACLE_CMS_HEAVY_HITTERS),

@@ -95,7 +95,7 @@ def pandas_fused_schedule(
     if exact is not None:
         state = state.unionByName(seen_state(exact))
     if host_spent is not None:
-        state = state.unionByName(quota_state(host_spent, n_host_buckets))
+        state = state.unionByName(quota_state(host_spent))
     blobs_bc = spark.sparkContext.broadcast(blobs) if blobs is not None else None
     default_delay, default_budget = cfg.default_delay_ms, cfg.default_budget
 

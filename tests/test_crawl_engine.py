@@ -127,9 +127,10 @@ def test_resume_equals_uninterrupted(spark, tmp_path, engine_result):
 @pytest.mark.parametrize("quota", [None, 9])
 def test_checkpoint_layout(spark, tmp_path, quota):
     """A checkpointed generation holds exactly what resume (and the
-    benchmark's resume probe) reads: pages, crawl_log, frontier_sched,
-    seen_exact, plus host_spent when a lifetime quota is set. The tagged
-    state table carries exactly the fused step's state columns."""
+    benchmark's resume probe) reads: pages, crawl_log, frontier_sched and
+    seen_exact. The tagged state table carries exactly the fused step's
+    state columns, and with a lifetime quota it is the only copy of the
+    per-host spend (its tag='q' rows)."""
     import os
 
     from crawlers_spark.operators.fused_schedule import STATE_COLS
@@ -143,14 +144,48 @@ def test_checkpoint_layout(spark, tmp_path, quota):
     res = CrawlPlan(spark, cfg).run(spark.createDataFrame(make_seed_urls(web, 10)))
     assert res.generations == 2
     want = {"pages", "crawl_log", "frontier_sched", "seen_exact"}
-    if quota is not None:
-        want.add("host_spent")
     assert sorted(os.listdir(ckpt)) == [
         "gen=00000", "gen=00001", "manifest_gen=00000.json", "manifest_gen=00001.json",
     ]
     for g in ("gen=00000", "gen=00001"):
         assert set(os.listdir(ckpt / g)) == want, g
-        assert spark.read.parquet(str(ckpt / g / "seen_exact")).columns == STATE_COLS, g
+        state = spark.read.parquet(str(ckpt / g / "seen_exact"))
+        assert state.columns == STATE_COLS, g
+        tags = {r["tag"] for r in state.select("tag").distinct().collect()}
+        assert ("q" in tags) == (quota is not None), (g, tags)
+
+
+@pytest.mark.parametrize("quota,retries", [(9, 0), (9, 2), (None, 2)])
+def test_resume_with_quota_and_retries_matches_oracle(spark, tmp_path, quota, retries):
+    """A crawl stopped after two checkpointed generations and resumed for
+    three more equals the serial oracle's five generations, with a
+    lifetime quota (its spend read back from the state table) and with
+    requeued failures (carried in frontier_sched)."""
+    web = SynthWebConfig(n_hosts=6, base_pages=80, transient_fail_mod=3)
+    seeds_pdf = make_seed_urls(web, 40)
+    ora = crawl_serial(web, seeds_pdf, max_generations=5,
+                       total_budget_per_host=quota, max_retries=retries)
+    seeds = spark.createDataFrame(seeds_pdf)
+    logs = []
+    for gens, resume in ((2, False), (3, True)):
+        cfg = CrawlConfig(
+            web=web, n_host_buckets=8, max_generations=gens,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            total_budget_per_host=quota, max_retries=retries,
+        )
+        res = CrawlPlan(spark, cfg).run(seeds, resume=resume)
+        logs.append(res.crawl_log.toPandas())
+
+    eng = pd.concat(logs).sort_values(["generation", "priority"]).reset_index(drop=True)
+    orl = ora.crawl_log.sort_values("order_rank").reset_index(drop=True)
+    assert len(eng) == len(orl), (len(eng), len(orl))
+    assert eng["url_canon"].tolist() == orl["url_canon"].tolist()
+    assert eng["generation"].tolist() == orl["generation"].tolist()
+    assert eng["ok"].tolist() == orl["ok"].tolist()
+    eng_seen = set(res.seen_exact.toPandas()["url_hash"].astype(np.int64))
+    assert eng_seen == {int(h) for h in ora.seen_hashes}
+    if quota is not None:
+        assert eng.groupby("host").size().max() == quota, "quota never binding"
 
 
 def test_retry_requeue_matches_oracle(spark):

@@ -14,9 +14,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from crawlers_spark.functions.hashing import fnv64, pmod_bucket
 from crawlers_spark.operators.fused_schedule import (
     build_host_bucket_blobs,
     fused_filter_schedule,
+    quota_state,
+    robots_state,
+    seen_state,
 )
 from crawlers_spark.operators.scheduler import SchedulerConfig
 from crawlers_spark.operators.seen_set import BloomParams
@@ -198,11 +202,20 @@ def test_arrow_kernel_matches_pandas_kernel(spark, setup, n_salts):
     _spark, _web, params, preseen, raw, robots = setup
     blobs = build_host_bucket_blobs(preseen, params)
     exact = preseen.select("url_hash", "host_bucket")
-    host_spent = spark.createDataFrame(
-        pd.DataFrame({"host": ["host0000.test", "host0001.test"], "spent": [995, 2]})
-    )
-    kw = dict(blobs=blobs, params=params, emit_dropped=True, host_spent=host_spent,
+    hosts = pd.Series(["host0000.test", "host0001.test"])
+    host_spent = spark.createDataFrame(pd.DataFrame({
+        "host": hosts, "host_bucket": pmod_bucket(fnv64(hosts), N_BUCKETS),
+        "spent": [995, 2],
+    }))
+    kw = dict(blobs=blobs, params=params, emit_dropped=True,
               total_budget_per_host=1000, n_host_buckets=N_BUCKETS)
+    # the engine takes its spend rows inside the tagged state, as CrawlPlan
+    # passes them; the oracle assembles its own state from host_spent
+    state = (
+        robots_state(spark, robots, N_BUCKETS)
+        .unionByName(seen_state(exact))
+        .unionByName(quota_state(host_spent))
+    )
 
     def rows(df):
         # host_rank of deferred rows is not globally meaningful under
@@ -214,9 +227,11 @@ def test_arrow_kernel_matches_pandas_kernel(spark, setup, n_salts):
         )
 
     a = rows(fused_filter_schedule(
-        spark, raw, exact, robots, SchedulerConfig(), n_salts=n_salts, **kw
+        spark, raw, None, None, SchedulerConfig(), n_salts=n_salts, state=state, **kw
     ))
-    p = rows(pandas_fused_schedule(spark, raw, exact, robots, SchedulerConfig(), **kw))
+    p = rows(pandas_fused_schedule(
+        spark, raw, exact, robots, SchedulerConfig(), host_spent=host_spent, **kw
+    ))
     assert a == p
     statuses = {t[7] for t in a}
     assert {"scheduled", "deferred", "dup", "seen"} <= statuses

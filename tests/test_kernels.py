@@ -332,64 +332,6 @@ class TestIvfTopk:
         assert recall >= 0.8, f"IVF recall {recall:.2f}"
 
 
-class TestMediaCodecs:
-    """Deterministic fake audio/video codecs: round-trips, sampling, and
-    the real resize kernel (functions/media.py)."""
-
-    def test_video_roundtrip_and_sampling(self):
-        import numpy as np
-
-        from crawlers_spark.functions.media import (
-            decode_video, encode_video, sample_frames, video_frame,
-            video_frame_phashes,
-        )
-
-        blob = encode_video(seed=99, n_frames=10, w=32, h=48)
-        w, h, seeds = decode_video(blob)
-        assert (w, h, len(seeds)) == (32, 48, 10)
-        assert blob == encode_video(99, 10, 32, 48)  # deterministic
-        assert sample_frames(blob, 4) == [0, 3, 6, 9]  # even, endpoints
-        assert sample_frames(blob, 1) == [0]
-        f0 = video_frame(blob, 0)
-        assert f0.shape[:2] == (48, 32)
-        ph = video_frame_phashes(blob, 4)
-        assert len(ph) == 4 and len(set(ph)) > 1  # frames differ
-
-    def test_video_foreign_container_raises(self):
-        import pytest as _pytest
-
-        from crawlers_spark.functions.media import decode_video
-
-        with _pytest.raises(ValueError):
-            decode_video(b"\x00\x00\x00\x01ftypisom....")  # mp4-ish
-
-    def test_audio_roundtrip_and_features(self):
-        import numpy as np
-
-        from crawlers_spark.functions.media import audio_features, decode_audio, encode_audio
-
-        blob = encode_audio(seed=7, n_samples=8000, sample_rate=16000)
-        rate, x = decode_audio(blob)
-        assert rate == 16000 and len(x) == 8000
-        assert np.abs(x).max() <= 1.0
-        f = audio_features(blob)
-        # dominant bin should find the seeded tone (100 + 7%900 = 107 Hz)
-        assert abs(f["dom_hz"] - 107) < 8
-        assert 0.1 < f["rms"] < 0.5 and 0 < f["zcr"] < 1
-
-    def test_resize_nearest(self):
-        import numpy as np
-
-        from crawlers_spark.functions.media import resize_nearest
-
-        px = np.arange(64, dtype=np.uint8).reshape(8, 8)
-        up = resize_nearest(px, 16, 16)
-        dn = resize_nearest(px, 4, 4)
-        assert up.shape == (16, 16) and dn.shape == (4, 4)
-        assert (up[::2, ::2] == px).all()       # upsample keeps originals
-        assert (dn == px[::2, ::2]).all()       # downsample picks nearest
-
-
 def test_fnv64_lanes_bit_identical_to_two_calls():
     from crawlers_spark.functions.hashing import fnv64, fnv64_lanes
 

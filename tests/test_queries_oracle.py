@@ -212,7 +212,7 @@ def test_politeness_audit_single_fetch_host_edge(spark, tmp_path):
     assert srows[7]["n_violations"] == 1
 
 
-SWEEP_SKIP_PREFIXES = ("crawl", "image", "phash", "video", "audio")
+SWEEP_SKIP_PREFIXES = ("crawl", "image", "phash")
 
 # The six whole-registry pathology sweeps each re-run every oracle query
 # (about 250) in both engines. The DEFAULT suite skips them so

@@ -1,4 +1,4 @@
-"""Round-4 operators: as-of join, integer PageRank, HLL sketch.
+"""Round-4 operators: integer PageRank, HLL sketch.
 
 The cross-engine value-hash check lives in test_queries_oracle.py; these
 tests pin the operator SEMANTICS on hand-built inputs (tie rules, null
@@ -11,55 +11,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from crawlers_spark.operators.asof import asof_join
 from crawlers_spark.operators.graph import pagerank_int
 from crawlers_spark.operators.sketches import M, hll_distinct
-
-
-# ---------------------------------------------------------------- as-of join
-
-
-def _asof_fixture(spark):
-    left = spark.createDataFrame(
-        [(1, 100, "o1"), (1, 200, "o2"), (2, 50, "o3"), (3, 10, "o4")],
-        "k int, lt long, oid string",
-    )
-    right = spark.createDataFrame(
-        [
-            (1, 100, 7, "a"),   # equal-time row: at-or-before includes it
-            (1, 150, 8, "b"),
-            (1, 150, 9, "c"),   # same ts as b: higher rid wins (right_order)
-            (2, 60, 10, "d"),   # after o3: must NOT match
-        ],
-        "k int, rt long, rid int, tag string",
-    )
-    return left, right
-
-
-def test_asof_join_semantics(spark):
-    left, right = _asof_fixture(spark)
-    out = asof_join(
-        left, right, on=["k"], left_time="lt", right_time="rt",
-        right_cols=["rt", "rid", "tag"], right_order=["rid"],
-    )
-    got = {r["oid"]: (r["rt"], r["rid"], r["tag"]) for r in out.collect()}
-    assert got == {
-        "o1": (100, 7, "a"),      # equal time matches
-        "o2": (150, 9, "c"),      # latest ts; rid tiebreak takes the last
-        "o3": (None, None, None),  # only future right rows for k=2
-        "o4": (None, None, None),  # key absent on the right
-    }
-    assert out.count() == left.count()  # left join: every left row survives
-
-
-def test_asof_join_parallelism_invariant(spark):
-    left, right = _asof_fixture(spark)
-    a = asof_join(left, right, ["k"], "lt", "rt", ["rid"], ["rid"])
-    b = asof_join(
-        left.repartition(7), right.repartition(3), ["k"], "lt", "rt",
-        ["rid"], ["rid"],
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 # ----------------------------------------------------------------- pagerank
