@@ -199,8 +199,10 @@ def fused_filter_schedule(
     /root/reference/coinmarketcap/coin_market_cap_api_2.0.py:99-125):
     each host's per-generation budget is capped at
     ``total_budget_per_host - spent``, where ``spent`` comes from the
-    ``tag='q'`` rows of a pre-built ``state`` (``quota_state``) — the
-    spend table rides the state cogroup, never the driver.
+    ``tag='q'`` rows of a pre-built ``state`` (``quota_state``): the
+    host's rows scheduled by earlier steps (``CrawlPlan.step`` charges a
+    row when it schedules it). The spend table rides the state cogroup,
+    never the driver.
 
     ``n_salts > 1`` is the mega-host skew escape hatch (module
     docstring). Pass ``state`` directly (pre-built tagged table, e.g. the

@@ -12,7 +12,8 @@ the micro-batch stream (streaming/micro_batch.py):
 
 - ``CrawlPlan.step`` runs the fused frontier step over new candidates
   and carried rows, collects the counters, mints priorities for the new
-  survivors and folds them into the seen-set;
+  survivors, folds them into the seen-set and, under a lifetime quota,
+  charges the rows it schedules to their host's spend;
 - ``CrawlPlan.commit`` writes the generation's pages, crawl log, next
   frontier and state, then the manifest.
 
@@ -26,8 +27,10 @@ Checkpoint/resume: each generation ``g`` writes ``gen=<g>/`` under
 ``checkpoint_dir`` with exactly ``pages``, ``crawl_log``,
 ``frontier_sched`` (the next generation's scheduled + deferred rows),
 ``seen_exact`` (the tagged state table, bucketed on ``host_bucket``:
-exact seen-set + robots rows, plus the per-host spend rows when a
-lifetime quota is set); then an atomically-renamed JSON manifest
+exact seen-set + robots rows, plus, when a lifetime quota is set, the
+per-host spend rows, which count every row scheduled so far, the
+scheduled rows of ``frontier_sched`` included); then an
+atomically-renamed JSON manifest
 ``manifest_gen=<g>.json`` (generation, next_priority, totals,
 frontier_count) commits the generation — the Parquet+manifest stand-in
 for Iceberg snapshots (plain Parquet directories, so an Iceberg table
@@ -240,28 +243,23 @@ def _atomic_write_json(path: str, payload: dict) -> None:
     os.replace(tmp, path)
 
 
-def _spent(state: DataFrame, cfg: CrawlConfig) -> DataFrame | None:
-    """The per-host spend ledger held in a tagged state table's
-    ``tag='q'`` rows, or None without a lifetime quota."""
-    if cfg.total_budget_per_host is None:
-        return None
-    return state.filter("tag = 'q'").select("host", "host_bucket", "spent")
-
-
 @dataclass
 class CrawlState:
     """What one generation hands the next. The checkpoint holds the same
     fields (manifest + ``gen=<g>/``), so ``CrawlPlan.load`` rebuilds it
-    after a restart."""
+    after a restart.
 
-    exact: DataFrame  # seen-set (url_hash, host_bucket)
+    ``state`` is the fused step's tagged state table
+    (operators/fused_schedule.py): the exact seen-set (``tag='s'``), the
+    robots dimension (``tag='r'``) and, with a lifetime quota, each
+    host's spend (``tag='q'``): the rows scheduled so far, those the last
+    step handed on included. Per-host rows stay sharded like the
+    seen-set, never a driver dict. After ``commit`` it is the bucketed
+    checkpoint table, which the next step reads as it is."""
+
+    state: DataFrame
     next_priority: int  # the next priority the rank mint hands out
     totals: dict = field(default_factory=lambda: {"fetched": 0, "scheduled": 0})
-    # per-host lifetime spend: a SMALL (host, host_bucket, spent)
-    # DataFrame, never a driver dict, so a 10^7-host crawl keeps its
-    # quota ledger sharded
-    host_spent: DataFrame | None = None
-    table: DataFrame | None = None  # bucketed tagged state snapshot of `exact`
     generation: int | None = None  # last committed generation
     n_frontier: int = 0  # rows the step handed on (scheduled+deferred+disallowed)
     salts: int = 1  # unsalted until a generation's counters show skew
@@ -275,19 +273,9 @@ class CrawlPlan:
         self.cfg = cfg
         # tagged robots state rows (tag='r'), bucketed like the seen
         # shard and built once: host_bucket is computed in numpy on the
-        # driver, so the rows are a LocalRelation that unions into each
-        # generation's state side with no job and no Python worker
-        self._robots_state = robots_state(spark, robots_pdf(cfg.web), cfg.n_host_buckets)
-
-    def _state_for(
-        self, exact: DataFrame | None, host_spent: DataFrame | None
-    ) -> DataFrame:
-        st = self._robots_state
-        if exact is not None:
-            st = seen_state(exact).unionByName(st)
-        if host_spent is not None:
-            st = st.unionByName(quota_state(host_spent))
-        return st
+        # driver, so the rows are a LocalRelation that seeds a crawl's
+        # state with no job and no Python worker
+        self.robots = robots_state(spark, robots_pdf(cfg.web), cfg.n_host_buckets)
 
     # ---------- checkpoint plumbing ----------
     def _ckpt(self, *parts: str) -> str:
@@ -321,13 +309,9 @@ class CrawlPlan:
         d = self._ckpt(f"gen={manifest['generation']:05d}")
         # known schemas: a bare read would run a schema-inference job each
         # (every state part has the robots rows' columns and types)
-        state = spark.read.schema(self._robots_state.schema).parquet(
-            os.path.join(d, "seen_exact")
-        )
         st = CrawlState(
-            exact=state.filter("tag = 's'").select("url_hash", "host_bucket"),
-            next_priority=manifest["next_priority"],
-            totals=dict(manifest["totals"]), host_spent=_spent(state, self.cfg),
+            state=spark.read.schema(self.robots.schema).parquet(os.path.join(d, "seen_exact")),
+            next_priority=manifest["next_priority"], totals=dict(manifest["totals"]),
             generation=manifest["generation"], n_frontier=manifest["frontier_count"],
         )
         return st, spark.read.schema(OUT_SCHEMA).parquet(os.path.join(d, "frontier_sched"))
@@ -356,29 +340,23 @@ class CrawlPlan:
             for k, v in saved.items():
                 conf.set(k, v)
 
-    def _bootstrap(self, seeds: DataFrame) -> tuple[CrawlState, DataFrame | None]:
-        """Schedule the seed frontier through the same fused step as every
-        later generation, with all rows flagged ``is_new = false`` (already
-        deduped and in the seen-set): only robots and politeness apply, and
-        the lifetime-quota cap (when configured) binds from generation 0."""
-        cfg = self.cfg
-        frontier = prepare_frontier(seeds, cfg.n_host_buckets).persist()
-        first = frontier.agg(
-            F.max("priority").alias("p"), F.count("*").alias("n")
-        ).first()
+    def _bootstrap(self, seeds: DataFrame) -> tuple[CrawlState, DataFrame]:
+        """Generation 0's frontier: the deduped seeds join the seen-set and
+        go through ``step`` as carried rows (``is_new = false``, priority =
+        ``seed_rank``), so only robots and politeness apply, and the
+        lifetime quota (when configured) binds and charges from
+        generation 0."""
+        frontier = prepare_frontier(seeds, self.cfg.n_host_buckets).persist()
+        hi = frontier.agg(F.max("priority")).first()[0]
         st = CrawlState(
-            exact=frontier.select("url_hash", "host_bucket"),
-            next_priority=(first["p"] or 0) + 1, n_frontier=first["n"],
+            state=seen_state(frontier).unionByName(self.robots),
+            next_priority=(hi or 0) + 1,
         )
-        if not st.n_frontier:
-            return st, None
-        return st, fused_filter_schedule(
-            self.spark, frontier.withColumn("is_new", F.lit(False)), None,
-            None, cfg.scheduler,
-            total_budget_per_host=cfg.total_budget_per_host,
-            state=self._robots_state,
-            emit_strings="frontier",
+        nxt, _counts, st = self.step(
+            frontier.limit(0), frontier.withColumn("retry_count", F.lit(0)), st,
+            st.next_priority,
         )
+        return st, nxt
 
     def run(self, seeds: DataFrame, resume: bool = False) -> CrawlResult:
         """fetch → link candidates ∪ deferred ∪ requeue → ``step`` →
@@ -399,8 +377,7 @@ class CrawlPlan:
             else:
                 g0 = 0
                 st, sched = self._bootstrap(seeds)
-            st = replace(st, exact=st.exact.localCheckpoint(eager=True))
-            scheduled, deferred = _split_next(sched) if sched is not None else (None, None)
+            scheduled, deferred = _split_next(sched)
 
             pages_parts: list[DataFrame] = []
             log_parts: list[DataFrame] = []
@@ -408,7 +385,7 @@ class CrawlPlan:
             generations = g0
             for g in range(g0, g0 + cfg.max_generations):
                 gen_t0 = time.monotonic()
-                if not st.n_frontier or scheduled is None:
+                if not st.n_frontier:
                     break
                 fetched = fetch_scheduled(
                     scheduled.withColumn("generation", F.lit(g)), cfg.web
@@ -432,20 +409,6 @@ class CrawlPlan:
                     carried = carried.unionByName(fetched.filter(
                         ~F.col("ok") & (F.col("retry_count") < cfg.max_retries)
                     ).select(*FRONTIER_COLS, (F.col("retry_count") + 1).alias("retry_count")))
-                if cfg.total_budget_per_host is not None:
-                    # charge this generation's scheduled fetches, then expose
-                    # the remaining lifetime quota to the next schedule — as a
-                    # small aggregated DataFrame, never a driver dict
-                    delta = fetched.groupBy("host", "host_bucket").agg(
-                        F.count("*").alias("spent")
-                    )
-                    st = replace(st, host_spent=(
-                        delta
-                        if st.host_spent is None
-                        else st.host_spent.unionByName(delta)
-                        .groupBy("host", "host_bucket")
-                        .agg(F.sum("spent").alias("spent"))
-                    ).localCheckpoint(eager=True))
                 # every parent was minted below next_priority, so the packed
                 # keys stay below next_priority * MAX_LINK_SLOTS
                 nxt, counts, st = self.step(
@@ -470,17 +433,21 @@ class CrawlPlan:
         exact seen-filter + robots + politeness in ONE heavy exchange,
         operators/fused_schedule.py) over the new candidates and the
         carried rows, one counter collect, then the rank mint for the new
-        survivors.
+        survivors; the next state folds them into the seen-set and, under a
+        lifetime quota, charges every row this step schedules to its
+        host's spend (as the serial oracle does).
 
         ``new``: (url_hash, url_canon, host_bucket, priority) rows whose
         ``priority`` is an order key in ``[0, key_hi)`` — the loop's packed
         ``(parent_priority, slot)``, a stream's ``seed_rank``. ``carried``:
-        already-minted rows (deferred, requeued) that bypass dedup and the
-        seen-set but compete for politeness budget first. The cogroup ranks
-        each host by ``(is_new, priority, url_hash)``, the order the minted
-        priorities will have, so crawl order and the seen-set match the
-        serial oracle. Returns ``nxt`` (scheduled + deferred rows, minted),
-        the ``(host_bucket, status)`` counters and the advanced state."""
+        already-minted rows (seeds, deferred, requeued) that bypass dedup
+        and the seen-set but compete for politeness budget first. The
+        cogroup ranks each host by ``(is_new, priority, url_hash)``, the
+        order the minted priorities will have, so crawl order and the
+        seen-set match the serial oracle. It reads ``st.state`` as it is,
+        so a committed (bucketed) state side is not shuffled again.
+        Returns ``nxt`` (scheduled + deferred rows, minted), the
+        ``(host_bucket, status)`` counters and the advanced state."""
         spark, cfg = self.spark, self.cfg
         next_statuses = ("scheduled", "deferred", "disallowed")
         cand = new.select(
@@ -492,11 +459,6 @@ class CrawlPlan:
                 "url_hash", "url_canon", "host_bucket", "priority",
                 F.lit(False).alias("is_new"), "retry_count",
             ))
-        state = (
-            st.table
-            if st.table is not None and cfg.total_budget_per_host is None
-            else self._state_for(st.exact, st.host_spent)
-        )
         # emit_strings="frontier": dup/seen/disallowed rows come back
         # hash-only — they are only counted or folded into the seen-set
         # by url_hash, so the dropped majority's string bytes never ride
@@ -510,7 +472,7 @@ class CrawlPlan:
             spark, cand, None, None, cfg.scheduler, emit_dropped=True,
             total_budget_per_host=cfg.total_budget_per_host,
             n_salts=st.salts,
-            state=state,
+            state=st.state,
             emit_strings="frontier",
         ).localCheckpoint(eager=False)
 
@@ -556,11 +518,21 @@ class CrawlPlan:
         )
         new_ranked = new_ranked.localCheckpoint(eager=False)
         new_ranked = new_ranked.withColumn("priority", F.col("__minted")).drop("__minted")
-        exact = st.exact
+        state = st.state
+        if cfg.total_budget_per_host is not None:
+            # charged at schedule time: the spend so far plus this step's
+            # scheduled rows (carried ones included), per host
+            spent = state.filter("tag = 'q'").select(
+                "host", "host_bucket", "spent"
+            ).unionByName(fused_out.filter("status = 'scheduled'").select(
+                "host", "host_bucket", F.lit(1).cast("long").alias("spent")
+            )).groupBy("host", "host_bucket").agg(F.sum("spent").alias("spent"))
+            state = state.filter("tag <> 'q'").unionByName(quota_state(spent))
         if n_new:
-            exact = exact.unionByName(
-                new_ranked.select("url_hash", "host_bucket")
-            ).localCheckpoint(eager=False)
+            state = state.unionByName(seen_state(new_ranked))
+        if state is not st.state:
+            # lazy, like fused_out: the next consumer cuts the lineage
+            state = state.localCheckpoint(eager=False)
 
         nxt = fused_out.filter(
             ~F.col("is_new") & F.col("status").isin("scheduled", "deferred")
@@ -574,7 +546,7 @@ class CrawlPlan:
         for (b, _s), v in counts.items():
             by_bucket[b] = by_bucket.get(b, 0) + v
         return nxt, counts, replace(
-            st, exact=exact, table=None, next_priority=st.next_priority + n_new,
+            st, state=state, next_priority=st.next_priority + n_new,
             n_frontier=sum(v for (_b, s), v in counts.items() if s in next_statuses),
             salts=auto_salts(by_bucket, cfg.n_host_buckets),
         )
@@ -638,8 +610,7 @@ class CrawlPlan:
         tbl = self._table(g)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         (
-            self._state_for(st.exact, st.host_spent)
-            .write.mode("overwrite").format("parquet")
+            st.state.write.mode("overwrite").format("parquet")
             .bucketBy(cfg.n_host_buckets, "host_bucket")
             .sortBy("url_hash")
             .option("path", os.path.join(dgen, "seen_exact"))
@@ -659,17 +630,15 @@ class CrawlPlan:
                             "bloom_buckets": cfg.bloom.n_buckets},
             },
         )
-        table = spark.table(tbl).select(*STATE_COLS)
         return pages, log, nxt, replace(
-            st, totals=totals, host_spent=_spent(table, cfg), generation=g,
-            table=table,
-            exact=table.filter("tag = 's'").select("url_hash", "host_bucket"),
+            st, state=spark.table(tbl).select(*STATE_COLS), totals=totals,
+            generation=g,
         )
 
     def _result(
         self, st: CrawlState, pages_parts: list[DataFrame], log_parts: list[DataFrame],
-        gen_stats: dict[int, tuple[dict, int]], scheduled: DataFrame | None,
-        deferred: DataFrame | None, generations: int, t0: float,
+        gen_stats: dict[int, tuple[dict, int]], scheduled: DataFrame,
+        deferred: DataFrame, generations: int, t0: float,
     ) -> CrawlResult:
         spark = self.spark
         pages = spark.createDataFrame([], schema=PAGES_SCHEMA)
@@ -707,21 +676,14 @@ class CrawlPlan:
                 totals["scheduled"] += sum(ok_n.values()) + sum(fail_n.values())
                 totals["fetched"] += sum(ok_n.values())
         metrics = spark.createDataFrame(metrics_rows, schema=METRICS_SCHEMA)
-        if scheduled is not None and deferred is not None:
-            frontier_final = scheduled.select(*FRONTIER_COLS).unionByName(
-                deferred.select(*FRONTIER_COLS)
-            )
-        else:
-            frontier_final = spark.createDataFrame(
-                [], schema="url_canon string, url_hash long, host string, "
-                "host_bucket int, priority long",
-            ).select(*FRONTIER_COLS)
         return CrawlResult(
             pages=pages,
             metrics=metrics,
             crawl_log=crawl_log,
-            seen_exact=st.exact,
-            frontier_final=frontier_final,
+            seen_exact=st.state.filter("tag = 's'").select("url_hash", "host_bucket"),
+            frontier_final=scheduled.select(*FRONTIER_COLS).unionByName(
+                deferred.select(*FRONTIER_COLS)
+            ),
             generations=generations,
             total_fetched=totals["fetched"],
             total_scheduled=totals["scheduled"],

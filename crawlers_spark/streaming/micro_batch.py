@@ -189,15 +189,7 @@ def stream_crawl(
         b = batch_df.agg(F.max("seed_rank").alias("hi"), F.count("*").alias("n")).first()
         if not b["n"]:
             return
-        loaded = plan.load()
-        if loaded is None:
-            st = CrawlState(
-                exact=spark.createDataFrame([], "url_hash long, host_bucket int"),
-                next_priority=0,
-            )
-            deferred = None
-        else:
-            st, deferred = loaded
+        st, deferred = plan.load() or (CrawlState(state=plan.robots, next_priority=0), None)
         new = canonize(batch_df, n_host_buckets, keep_host=False).withColumn(
             "priority", F.col("seed_rank").cast("long")
         )

@@ -43,7 +43,6 @@ def main() -> None:
     ap.add_argument("--transient-fail-mod", type=int, default=0)
     args = ap.parse_args()
 
-    from crawlers_spark.operators.seen_set import BloomParams
     from crawlers_spark.plans.crawl import CrawlConfig, CrawlPlan
     from crawlers_spark.session import get_spark
     from crawlers_spark.sources.synthweb import SynthWebConfig, make_seed_urls
@@ -55,7 +54,6 @@ def main() -> None:
     )
     cfg = CrawlConfig(
         web=web,
-        bloom=BloomParams.size_for(max(10_000, args.seeds * 100)),
         n_host_buckets=args.host_buckets,
         max_generations=args.generations,
         checkpoint_dir=args.checkpoint,

@@ -155,6 +155,37 @@ def test_checkpoint_layout(spark, tmp_path, quota):
         assert ("q" in tags) == (quota is not None), (g, tags)
 
 
+@pytest.mark.parametrize("quota", [None, 9])
+def test_checkpointed_step_reads_bucketed_state(spark, tmp_path, monkeypatch, quota):
+    """From generation 1 on, each step's fused cogroup reads the state
+    table the last generation committed, bucketed on host_bucket, as it
+    is, with or without a lifetime quota: only the candidate side
+    shuffles."""
+    import crawlers_spark.plans.crawl as crawl_mod
+
+    real_fused, plans = crawl_mod.fused_filter_schedule, []
+
+    def capture(*args, **kw):
+        out = real_fused(*args, **kw)
+        # planned here, under the loop's own shuffle width and AQE confs
+        plans.append(out._sc._jvm.PythonSQLUtils.explainString(
+            out._jdf.queryExecution(), "simple"))
+        return out
+
+    monkeypatch.setattr(crawl_mod, "fused_filter_schedule", capture)
+    web = SynthWebConfig(n_hosts=4, base_pages=20)
+    cfg = CrawlConfig(
+        web=web, n_host_buckets=4, max_generations=3,
+        checkpoint_dir=str(tmp_path / "ckpt"), total_budget_per_host=quota,
+    )
+    res = CrawlPlan(spark, cfg).run(spark.createDataFrame(make_seed_urls(web, 10)))
+    assert res.generations == 3
+    # the seed schedule, then one step per generation
+    assert len(plans) == 4
+    for g, plan in ((1, plans[2]), (2, plans[3])):
+        assert plan.count("Exchange hashpartitioning") == 1, (g, plan)
+
+
 @pytest.mark.parametrize("quota,retries", [(9, 0), (9, 2), (None, 2)])
 def test_resume_with_quota_and_retries_matches_oracle(spark, tmp_path, quota, retries):
     """A crawl stopped after two checkpointed generations and resumed for
@@ -257,6 +288,35 @@ def test_lifetime_host_quota_matches_oracle(spark):
     per_host = eng.groupby("host").size()
     assert (per_host <= 9).all()
     assert (per_host == 9).any(), "quota never binding; weak fixture"
+
+
+def test_quota_with_retries_matches_oracle(spark):
+    """Lifetime quota and requeued failures together, in memory: every
+    scheduled attempt, a requeued failure's included, is charged to its
+    host exactly once, as the serial oracle charges it."""
+    web = SynthWebConfig(n_hosts=6, base_pages=80, transient_fail_mod=3)
+    seeds_pdf = make_seed_urls(web, 40)
+    ora = crawl_serial(web, seeds_pdf, max_generations=5,
+                       total_budget_per_host=9, max_retries=2)
+    cfg = CrawlConfig(web=web, n_host_buckets=8, max_generations=5,
+                      total_budget_per_host=9, max_retries=2)
+    res = CrawlPlan(spark, cfg).run(spark.createDataFrame(seeds_pdf))
+
+    eng = (
+        res.crawl_log.toPandas()
+        .sort_values(["generation", "priority"])
+        .reset_index(drop=True)
+    )
+    orl = ora.crawl_log.sort_values("order_rank").reset_index(drop=True)
+    assert len(eng) == len(orl), (len(eng), len(orl))
+    assert eng["url_canon"].tolist() == orl["url_canon"].tolist()
+    assert eng["generation"].tolist() == orl["generation"].tolist()
+    assert eng["ok"].tolist() == orl["ok"].tolist()
+    eng_seen = set(res.seen_exact.toPandas()["url_hash"].astype(np.int64))
+    assert eng_seen == {int(h) for h in ora.seen_hashes}
+    # both mechanisms bind: some URL is fetched again, some host spends it all
+    assert eng["url_canon"].duplicated().any(), "no failure was requeued"
+    assert eng.groupby("host").size().max() == 9, "quota never binding"
 
 
 def test_fused_inmemory_storage_flat(spark):
