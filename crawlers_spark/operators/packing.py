@@ -3,19 +3,11 @@
 ``prefix_sum`` is the scan primitive a training-data pipeline needs for
 concat-and-chunk sequence packing (every doc needs the total token count
 of all docs before it in a global order). A naive ``sum() OVER (ORDER BY
-...)`` collapses to a single partition — fatal at corpus scale. This is
-the same two-phase shape as ``ranking.global_rank``'s bounds path: bin
-rows by a monotone arithmetic bucket of the leading order key, collect
-per-bucket sums (one small job: <= 4x shuffle-partitions longs), prefix-
-sum the bucket totals on the driver, and finish with a within-bucket
-window sum plus the bucket's offset. One exchange, all JVM-side, no
-sampling job, no Python worker.
-
-Determinism: bucket boundaries are a pure monotone function of the
-leading key (floor of a positive-scaled difference — IEEE multiply and
-divide by positive constants are monotone, floor preserves it), so equal
-keys always land in the same bucket and the within-bucket window sees the
-full order columns. Loose bounds cost only balance, never correctness.
+...)`` collapses to a single partition — fatal at corpus scale. It is
+``ranking.bucket_scan`` of the value column — the same scan the crawl
+loop's priority mint runs — after one tiny min/max job when the leading
+key's range is not given. Loose bounds cost only balance, never
+correctness.
 
 ``pack_sequences`` applies it to the concat-and-chunk packing used by
 LLM training pipelines: documents are concatenated in a deterministic
@@ -25,8 +17,10 @@ integer arithmetic on (offset, n_tokens).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .ranking import bucket_scan
 
 
 def prefix_sum(
@@ -47,59 +41,19 @@ def prefix_sum(
     ``bounds=(lo, hi)`` is an optional known value range for
     ``order_cols[0]`` (``lo <= v < hi``); without it one tiny min/max
     job discovers the range."""
-    spark = df.sparkSession
     parts = int(
-        num_partitions or spark.conf.get("spark.sql.shuffle.partitions")
+        num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     if bounds is None:
         row = df.agg(
             F.min(order_cols[0]).alias("lo"), F.max(order_cols[0]).alias("hi")
         ).collect()[0]
-        if row["lo"] is None:  # empty input
-            out = df.withColumn(out_col, F.lit(0).cast("long"))
-            return (out, 0) if with_total else out
-        bounds = (int(row["lo"]), int(row["hi"]) + 1)
-    lo, hi = bounds
-    nb = max(4 * parts, 16)
-    span = float(max(1, hi - lo))
-    key = F.col(order_cols[0])
-    b = F.least(
-        F.lit(nb - 1),
-        F.greatest(
-            F.lit(0),
-            F.floor((key - F.lit(lo)).cast("double") / F.lit(span) * F.lit(nb)).cast(
-                "int"
-            ),
-        ),
+        # empty input: any range scans zero rows
+        bounds = (int(row["lo"] or 0), int(row["hi"] or 0) + 1)
+    out, total = bucket_scan(
+        df, order_cols, F.col(val_col).cast("long"), out_col, 0, parts, bounds
     )
-    binned = df.withColumn("__b", b)
-    sums = {
-        r["__b"]: r["s"]
-        for r in binned.groupBy("__b")
-        .agg(F.sum(F.col(val_col).cast("long")).alias("s"))
-        .collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for bid in sorted(sums):
-        offsets[bid] = acc
-        acc += sums[bid]
-    if sums:
-        omap = F.create_map(*[F.lit(x) for bid in sums for x in (bid, offsets[bid])])
-    else:  # zero rows: any correctly-typed map (an untyped empty map is VOID)
-        omap = F.create_map(F.lit(0), F.lit(0))
-    w = (
-        Window.partitionBy("__b")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = F.coalesce(F.sum(F.col(val_col).cast("long")).over(w), F.lit(0))
-    out = binned.withColumn(
-        out_col, (omap[F.col("__b")] + local).cast("long")
-    ).drop("__b")
-    if with_total:
-        return out, acc
-    return out
+    return (out, total) if with_total else out
 
 
 def pack_sequences(

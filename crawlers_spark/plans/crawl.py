@@ -47,12 +47,10 @@ import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import fnv64
-from ..functions.urls import canon_urls
 from ..operators.fused_schedule import (
     OUT_SCHEMA,
     STATE_COLS,
@@ -92,7 +90,6 @@ METRICS_SCHEMA = (
 @dataclass
 class CrawlConfig:
     web: SynthWebConfig = field(default_factory=SynthWebConfig)
-    scheduler: SchedulerConfig = field(default_factory=SchedulerConfig)
     # recorded as the manifest's lineage.bloom_buckets only; the loop's
     # seen-set probe is exact (perfbench's workloads still pass bloom=)
     bloom: BloomParams = field(default_factory=lambda: BloomParams.size_for(100_000))
@@ -122,19 +119,6 @@ class CrawlResult:
     total_fetched: int
     total_scheduled: int
     wall_s: float
-
-
-from pyspark.sql.types import LongType, StringType  # noqa: E402
-
-
-@F.pandas_udf(StringType())
-def canon_udf(urls: pd.Series) -> pd.Series:
-    return canon_urls(urls)
-
-
-@F.pandas_udf(LongType())
-def hash_udf(strings: pd.Series) -> pd.Series:
-    return pd.Series(fnv64(strings))
 
 
 def canonize(
@@ -305,6 +289,14 @@ class CrawlPlan:
         manifest = self.latest_manifest()
         if manifest is None:
             return None
+        if manifest["lineage"]["host_buckets"] != self.cfg.n_host_buckets:
+            # seen rows carry no host, so they cannot be re-bucketed: a new
+            # candidate would miss its seen row in another bucket's cogroup
+            raise ValueError(
+                f"checkpoint has {manifest['lineage']['host_buckets']} host "
+                f"buckets, the config {self.cfg.n_host_buckets}; resume with "
+                "the checkpoint's n_host_buckets"
+            )
         spark = self.spark
         d = self._ckpt(f"gen={manifest['generation']:05d}")
         # known schemas: a bare read would run a schema-inference job each
@@ -346,7 +338,12 @@ class CrawlPlan:
         ``seed_rank``), so only robots and politeness apply, and the
         lifetime quota (when configured) binds and charges from
         generation 0."""
-        frontier = prepare_frontier(seeds, self.cfg.n_host_buckets).persist()
+        # lazy: the max agg below scans every partition, so that one job
+        # both fills and cuts the checkpoint (a cache would stay in the
+        # session's cache manager after the run)
+        frontier = prepare_frontier(seeds, self.cfg.n_host_buckets).localCheckpoint(
+            eager=False
+        )
         hi = frontier.agg(F.max("priority")).first()[0]
         st = CrawlState(
             state=seen_state(frontier).unionByName(self.robots),
@@ -414,8 +411,9 @@ class CrawlPlan:
                 nxt, counts, st = self.step(
                     links, carried, st, st.next_priority * MAX_LINK_SLOTS
                 )
-                gen_stats[g] = (counts, int((time.monotonic() - gen_t0) * 1000))
                 pages_g, log_g, nxt, st = self.commit(g, fetched, nxt, st)
+                # after commit: in a checkpointed generation most jobs run there
+                gen_stats[g] = (counts, int((time.monotonic() - gen_t0) * 1000))
                 pages_parts.append(pages_g)
                 log_parts.append(log_g)
                 fetched.unpersist()
@@ -469,7 +467,7 @@ class CrawlPlan:
         # job — one fewer driver job per generation than an eager cut
         # followed by the collect
         fused_out = fused_filter_schedule(
-            spark, cand, None, None, cfg.scheduler, emit_dropped=True,
+            spark, cand, None, None, SchedulerConfig(), emit_dropped=True,
             total_budget_per_host=cfg.total_budget_per_host,
             n_salts=st.salts,
             state=st.state,

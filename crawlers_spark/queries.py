@@ -2119,13 +2119,17 @@ def q_crawl_backfill(spark: SparkSession, sf: str) -> DataFrame:
     window = res.crawl_log.filter((F.col("generation") == 1) & F.col("ok"))
     # url_hash must be the ENGINE's hash (fnv64 of the canonical URL),
     # not a different function: a mismatched value in a column named
-    # url_hash would corrupt any later join/dedup against engine tables
-    from .plans.crawl import hash_udf
+    # url_hash would corrupt any later join/dedup against engine tables.
+    # canonize is the loop's own Arrow pass; a canonical URL is its own
+    # canonical form, and 8 is _small_crawl's n_host_buckets.
+    from .plans.crawl import canonize
 
-    redo = window.select(
-        "url_canon", hash_udf(F.col("url_canon")).alias("url_hash"),
-        "host", "host_bucket", "priority", "generation",
-        F.lit(0).alias("fetch_offset_ms"),
+    redo = canonize(
+        window.select(
+            F.col("url_canon").alias("url"), "priority", "generation",
+            F.lit(0).alias("fetch_offset_ms"),
+        ),
+        8,
     )
     refetched = fetch_scheduled(redo, _small_web()).select(
         "url_canon", F.col("phash").alias("phash_new")
@@ -5454,9 +5458,9 @@ def q_canon_urls_law(spark: SparkSession, sf: str) -> DataFrame:
     decode); the oracle does NOT parse — it independently CONSTRUCTS
     the expected canonical string from the same integers, so any
     kernel deviation on any row is a hash mismatch. The Spark side is
-    the same vectorized pandas_udf the crawl loop runs (Arrow batch
-    in, Arrow batch out; no per-row Python)."""
-    from .plans.crawl import canon_udf
+    the same Arrow pass the crawl loop runs, ``plans.crawl.canonize``
+    (Arrow batch in, Arrow batch out; no per-row Python)."""
+    from .plans.crawl import canonize
 
     e = load_table(spark, sf, "events")
     h = F.col("user_id").cast("string")
@@ -5477,10 +5481,9 @@ def q_canon_urls_law(spark: SparkSession, sf: str) -> DataFrame:
         .otherwise(F.lit("")),
         F.when(F.col("event_id") % 5 == 0, F.lit("#top")).otherwise(F.lit("")),
     )
-    return e.select(
-        "event_id",
-        canon_udf(messy).alias("url_canon"),
-    )
+    return canonize(
+        e.select("event_id", messy.alias("url")), 1, keep_host=False
+    ).select("event_id", "url_canon")
 
 
 ORACLE_CANON_URLS_LAW = """

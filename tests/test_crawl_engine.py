@@ -378,6 +378,72 @@ def test_run_restores_caller_session_conf(spark, monkeypatch):
             spark.conf.set(k, v)
 
 
+def test_run_and_range_rank_add_no_cache_entry(spark):
+    """A run and a range-path global_rank leave the session's cache
+    manager as they found it: the seed frontier and the range-partitioned
+    copy are lazy local checkpoints, not cache entries that outlive the
+    call."""
+    from crawlers_spark.operators.ranking import global_rank
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    web = SynthWebConfig(n_hosts=4, base_pages=20)
+    cfg = CrawlConfig(web=web, n_host_buckets=4, max_generations=2)
+    res = CrawlPlan(spark, cfg).run(spark.createDataFrame(make_seed_urls(web, 10)))
+    assert res.generations == 2
+    assert cache.isEmpty(), "run left a cache entry"
+    df = spark.createDataFrame([(i % 7, i) for i in range(50)], "k long, h long")
+    ranked = global_rank(df, ["k", "h"], "rk", num_partitions=3)
+    assert sorted(r["rk"] for r in ranked.collect()) == list(range(50))
+    assert cache.isEmpty(), "global_rank left a cache entry"
+
+
+def test_resume_refuses_changed_bucket_count(spark, tmp_path):
+    """Seen rows carry no host, so a checkpoint cannot be re-bucketed: a
+    resume under another n_host_buckets raises, naming both counts,
+    instead of missing seen rows that sit in other buckets."""
+    web = SynthWebConfig(n_hosts=4, base_pages=20)
+    seeds = spark.createDataFrame(make_seed_urls(web, 10))
+
+    def plan(n_host_buckets):
+        return CrawlPlan(spark, CrawlConfig(
+            web=web, n_host_buckets=n_host_buckets, max_generations=1,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        ))
+
+    assert plan(4).run(seeds).generations == 1
+    with pytest.raises(ValueError, match="has 4 host buckets, the config 8"):
+        plan(8).run(seeds, resume=True)
+
+
+def test_generation_wall_ms_covers_commit(spark, tmp_path):
+    """A generation's wall_ms includes its commit, where a checkpointed
+    generation runs most of its jobs (the page, log, frontier and state
+    writes): with a commit slower than the fetch and step of this small
+    web, every wall_ms is still at least its commit's time."""
+    import time
+
+    web = SynthWebConfig(n_hosts=4, base_pages=20)
+    cfg = CrawlConfig(web=web, n_host_buckets=4, max_generations=2,
+                      checkpoint_dir=str(tmp_path / "ckpt"))
+    plan = CrawlPlan(spark, cfg)
+    real_commit, commit_ms = plan.commit, {}
+
+    def slow_commit(g, *args):
+        t0 = time.monotonic()
+        time.sleep(3)
+        out = real_commit(g, *args)
+        commit_ms[g] = int((time.monotonic() - t0) * 1000)
+        return out
+
+    plan.commit = slow_commit
+    res = plan.run(spark.createDataFrame(make_seed_urls(web, 10)))
+    wall_ms = {r["generation"]: r["wall_ms"] for r in res.metrics.collect()}
+    assert sorted(wall_ms) == sorted(commit_ms) == [0, 1]
+    for g, ms in commit_ms.items():
+        assert wall_ms[g] >= ms, (g, wall_ms[g], ms)
+
+
 def test_auto_salts_decision():
     from crawlers_spark.plans.crawl import auto_salts
 

@@ -482,12 +482,13 @@ def test_image_caption_qc_projection_only(spark):
 
 
 def test_canon_urls_law_single_arrow_pass(spark):
-    """canon_urls_law: one vectorized Arrow UDF pass over the scan —
-    no shuffle anywhere in the plan."""
+    """canon_urls_law: one vectorized Arrow pass over the scan (the
+    crawl loop's own ``canonize`` mapInArrow) — no shuffle anywhere in
+    the plan."""
     from crawlers_spark.queries import q_canon_urls_law
 
     plan = _plan(q_canon_urls_law(spark, SF))
-    assert "ArrowEvalPython" in plan
+    assert "MapInArrow" in plan
     assert "Exchange" not in plan
 
 

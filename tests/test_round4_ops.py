@@ -174,23 +174,29 @@ def test_kmv_two_phase_bottom_k_is_exact(spark):
 def test_rank_bounds_path_matches_legacy(spark):
     from crawlers_spark.operators.ranking import global_rank
 
-    rows = [((i * 37) % 101 + 50, i * 7919) for i in range(200)]
-    df = spark.createDataFrame(rows, "priority long, url_hash long")
-    legacy = {
-        (r["priority"], r["url_hash"]): r["rk"]
-        for r in global_rank(df, ["priority", "url_hash"], "rk", start=1000).collect()
-    }
-    for bounds in [(50, 151), (0, 1000), (60, 120)]:  # tight, loose, clamping
-        fast, n = global_rank(
-            df, ["priority", "url_hash"], "rk", start=1000,
-            with_count=True, bounds=bounds,
-        )
-        got = {(r["priority"], r["url_hash"]): r["rk"] for r in fast.collect()}
-        assert got == legacy, f"bounds={bounds}"
-        assert n == 200
-    # ranks are the positions in the total order, contiguous from start
-    assert sorted(legacy.values()) == list(range(1000, 1200))
-    assert sorted(legacy) == [k for k, _v in sorted(legacy.items(), key=lambda kv: kv[1])]
+    narrow = [((i * 37) % 101 + 50, i * 7919) for i in range(200)]
+    # leading keys over -2^62..2^62: the span reaches 2^63, past a long
+    wide = [(((i * 37) % 101 - 50) * 2**62 // 50, i * 7919) for i in range(200)]
+    for rows, all_bounds in [
+        (narrow, [(50, 151), (0, 1000), (60, 120)]),  # tight, loose, clamping
+        (wide, [(-(2**62), 2**62 + 1), (-(2**63), 2**63 - 1)]),  # tight, loose
+    ]:
+        df = spark.createDataFrame(rows, "priority long, url_hash long")
+        legacy = {
+            (r["priority"], r["url_hash"]): r["rk"]
+            for r in global_rank(df, ["priority", "url_hash"], "rk", start=1000).collect()
+        }
+        for bounds in all_bounds:
+            fast, n = global_rank(
+                df, ["priority", "url_hash"], "rk", start=1000,
+                with_count=True, bounds=bounds,
+            )
+            got = {(r["priority"], r["url_hash"]): r["rk"] for r in fast.collect()}
+            assert got == legacy, f"bounds={bounds}"
+            assert n == 200
+        # ranks are the positions in the total order, contiguous from start
+        assert sorted(legacy.values()) == list(range(1000, 1200))
+        assert sorted(legacy) == [k for k, _v in sorted(legacy.items(), key=lambda kv: kv[1])]
 
 
 def test_rank_bounds_path_empty_input(spark):
@@ -393,6 +399,7 @@ def test_prefix_sum_property(spark):
 
     from crawlers_spark.operators.packing import prefix_sum
 
+    cases = []
     for seed in (1, 7, 42):
         rng = random.Random(seed)
         n = rng.randint(1, 150)
@@ -402,15 +409,23 @@ def test_prefix_sum_property(spark):
         parts = rng.choice([1, 3, 16])
         lo = rng.randint(-200, -51)
         hi = rng.randint(51, 300)
+        cases.append((rows, parts, rng.choice([None, (lo, hi)])))
+    # leading keys over about -2^62..2^62 with the span past 2^63 (a
+    # 64-bit key - lo overflows), with discovered and with given bounds
+    rng = random.Random(3)
+    wide = [(-(2**62) - 1, 0, 4), (2**62 + 1, 1, 2)] + [
+        (rng.randint(-(2**62), 2**62), i, rng.randint(-5, 9)) for i in range(2, 120)
+    ]
+    cases += [(wide, 3, None), (wide, 3, (-(2**63), 2**63 - 1))]
+    for rows, parts, bounds in cases:
         df = spark.createDataFrame(rows, "k long, tie long, v long").repartition(parts)
-        bounds = rng.choice([None, (lo, hi)])
         out = prefix_sum(df, ["k", "tie"], "v", "offset", bounds=bounds)
         got = {(r["k"], r["tie"]): r["offset"] for r in out.collect()}
         acc, want = 0, {}
         for k, tie, v in sorted(rows):
             want[(k, tie)] = acc
             acc += v
-        assert got == want, (seed, parts, bounds)
+        assert got == want, (parts, bounds)
 
 
 # ------------------------------------------------- grouped-agg pandas UDAF
