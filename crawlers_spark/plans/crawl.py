@@ -85,6 +85,12 @@ METRICS_SCHEMA = (
     "generation int, host_bucket int, scheduled long, deduped long, "
     "fetched long, failed long, wall_ms long"
 )
+# auto_salts: the cogroup stays unsalted until a step sees at least
+# SALT_MIN_TOTAL candidates with its hottest bucket over
+# SALT_TRIGGER_RATIO x the mean
+SALT_MIN_TOTAL = 50_000
+SALT_TRIGGER_RATIO = 8.0
+MAX_SALTS = 16
 
 
 @dataclass
@@ -190,23 +196,19 @@ def prepare_frontier(seeds: DataFrame, n_host_buckets: int) -> DataFrame:
     return dedup.select("url_hash", "url_canon", "host", "host_bucket", "priority")
 
 
-def auto_salts(by_bucket: dict[int, int], n_buckets: int, base: int = 1,
-               min_total: int = 50_000, trigger_ratio: float = 8.0,
-               max_salts: int = 16) -> int:
+def auto_salts(by_bucket: dict[int, int], n_buckets: int) -> int:
     """Salt count for the next generation from this generation's
-    per-bucket candidate counts: below ``min_total`` rows or below
-    ``trigger_ratio``x the mean bucket, stay at ``base``; above, split
-    the hot bucket to ~2x the mean (bounded by ``max_salts``)."""
-    if not by_bucket:
-        return base
+    per-bucket candidate counts: below ``SALT_MIN_TOTAL`` rows or below
+    ``SALT_TRIGGER_RATIO``x the mean bucket, stay unsalted (1); above,
+    split the hot bucket to ~2x the mean (bounded by ``MAX_SALTS``)."""
     total = sum(by_bucket.values())
-    if total < min_total:
-        return base
+    if total < SALT_MIN_TOTAL:
+        return 1
     mean = total / max(1, n_buckets)
     mx = max(by_bucket.values())
-    if mx < trigger_ratio * mean:
-        return base
-    return int(min(max_salts, max(base, round(mx / mean / 2))))
+    if mx < SALT_TRIGGER_RATIO * mean:
+        return 1
+    return int(min(MAX_SALTS, round(mx / mean / 2)))
 
 
 def _split_next(nxt: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -238,8 +240,9 @@ class CrawlState:
     robots dimension (``tag='r'``) and, with a lifetime quota, each
     host's spend (``tag='q'``): the rows scheduled so far, those the last
     step handed on included. Per-host rows stay sharded like the
-    seen-set, never a driver dict. After ``commit`` it is the bucketed
-    checkpoint table, which the next step reads as it is."""
+    seen-set, never a driver dict. After ``commit`` or ``load`` it is the
+    bucketed checkpoint table (``CrawlPlan._state``), which the next step
+    reads as it is."""
 
     state: DataFrame
     next_priority: int  # the next priority the rank mint hands out
@@ -297,20 +300,37 @@ class CrawlPlan:
                 f"buckets, the config {self.cfg.n_host_buckets}; resume with "
                 "the checkpoint's n_host_buckets"
             )
-        spark = self.spark
-        d = self._ckpt(f"gen={manifest['generation']:05d}")
-        # known schemas: a bare read would run a schema-inference job each
-        # (every state part has the robots rows' columns and types)
-        st = CrawlState(
-            state=spark.read.schema(self.robots.schema).parquet(os.path.join(d, "seen_exact")),
-            next_priority=manifest["next_priority"], totals=dict(manifest["totals"]),
-            generation=manifest["generation"], n_frontier=manifest["frontier_count"],
+        g = manifest["generation"]
+        d = self._ckpt(f"gen={g:05d}")
+        # re-declare the bucketed table over the files: a fresh process has
+        # no catalog entry, and a stale one (an earlier crawl of this
+        # directory) may point at other files
+        tbl, cols = self._table(g), ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in self.robots.schema.fields)
+        path = os.path.join(d, "seen_exact").replace("\\", "\\\\").replace("'", "\\'")
+        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        self.spark.sql(
+            f"CREATE TABLE {tbl} ({cols}) USING parquet CLUSTERED BY (host_bucket) "
+            f"SORTED BY (url_hash) INTO {self.cfg.n_host_buckets} BUCKETS "
+            f"LOCATION '{path}'"
         )
-        return st, spark.read.schema(OUT_SCHEMA).parquet(os.path.join(d, "frontier_sched"))
+        st = CrawlState(
+            state=self._state(g), next_priority=manifest["next_priority"],
+            totals=dict(manifest["totals"]), generation=g,
+            n_frontier=manifest["frontier_count"],
+        )
+        # a known schema: a bare read would run a schema-inference job
+        return st, self.spark.read.schema(OUT_SCHEMA).parquet(os.path.join(d, "frontier_sched"))
+
+    def _state(self, g: int) -> DataFrame:
+        """Generation ``g``'s committed state: the bucketed catalog table
+        over ``gen=<g>/seen_exact``, which the next fused step reads
+        without shuffling it again."""
+        return self.spark.table(self._table(g)).select(*STATE_COLS)
 
     # ---------- main loop ----------
     @contextmanager
-    def _session_conf(self):
+    def _session_conf(self, spark: SparkSession):
         # Every exchange in the loop is hand-sized to n_host_buckets (the
         # cogroup, the rank, the checkpoint layout), so (a) the session's
         # generic shuffle width only adds empty reduce tasks, and (b)
@@ -319,8 +339,9 @@ class CrawlPlan:
         # loop and restore on exit; partition count never changes results
         # (whole-registry parallelism-determinism sweep) and results
         # returned lazily in CrawlResult re-plan under the caller's own
-        # confs.
-        conf = self.spark.conf
+        # confs. ``spark`` is the session the loop's frames plan in: the
+        # caller's for ``run``, a stream's own clone for a micro-batch.
+        conf = spark.conf
         saved = {k: conf.get(k) for k in (
             "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")}
         try:
@@ -364,7 +385,7 @@ class CrawlPlan:
             f"MAX_LINK_SLOTS={MAX_LINK_SLOTS}: the candidate agg packs "
             "(parent_priority, slot) into one long lexicographically"
         )
-        with self._session_conf():
+        with self._session_conf(self.spark):
             cfg = self.cfg
             t0 = time.monotonic()
             loaded = self.load() if resume else None
@@ -602,9 +623,9 @@ class CrawlPlan:
         # to align) — at 10^10 seen rows that exchange dominates the loop.
         # A union of separate seen/robots tables would NOT preserve the
         # partitioning, which is why the dimension rows live in the same
-        # table. The files stay plain parquet under the checkpoint dir
-        # (resume via spark.read.parquet + tag filter still works;
-        # bucketing metadata lives in the catalog entry only).
+        # table. The files stay plain parquet under the checkpoint dir;
+        # the bucketing lives in the catalog entry only, which ``load``
+        # declares again over the files.
         tbl = self._table(g)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         (
@@ -629,8 +650,7 @@ class CrawlPlan:
             },
         )
         return pages, log, nxt, replace(
-            st, state=spark.table(tbl).select(*STATE_COLS), totals=totals,
-            generation=g,
+            st, state=self._state(g), totals=totals, generation=g
         )
 
     def _result(

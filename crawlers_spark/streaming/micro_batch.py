@@ -16,9 +16,12 @@ that is Structured Streaming:
 * ``stream_crawl`` — ``foreachBatch`` crawl: each arriving seed-batch
   file becomes one generation of the batch engine's own ``CrawlPlan``
   (``step`` + ``commit``, plans/crawl.py), which writes a ``CrawlPlan``
-  checkpoint directory. The seen-set and the budget-deferred frontier
-  are carried in that checkpoint, not in driver memory: every batch
-  resumes from the latest manifest, and a replayed batch whose
+  checkpoint directory. The seen-set, the budget-deferred frontier and,
+  with ``total_budget_per_host``, each host's lifetime quota spend (the
+  reference's API-key budgets that persist across cron runs,
+  youtube/get_youtube_v1.2.py:53-63) are carried in that checkpoint,
+  not in driver memory: every batch resumes from the latest manifest,
+  and a replayed batch whose
   generation is already committed is skipped, so pages are written once
   (the idempotent-upsert analog of the reference's
   worldcup/db/deal_mysql_info.py:44-57).
@@ -151,6 +154,7 @@ def stream_crawl(
     web: SynthWebConfig | None = None,
     n_host_buckets: int = 8,
     trigger: dict | None = None,
+    total_budget_per_host: int | None = None,
 ):
     """Micro-batch crawl: each seed parquet file that lands in
     ``seeds_dir`` is one generation (``maxFilesPerTrigger`` = 1), run
@@ -162,16 +166,22 @@ def stream_crawl(
     deferred for politeness budget, which compete first (``is_new =
     false``, exactly as in the batch loop) — a URL marked seen is never
     dropped unfetched. There is no link fan-out: a batch fetches what
-    its step schedules.
+    its step schedules. ``total_budget_per_host`` is the batch loop's
+    lifetime per-host quota (``CrawlConfig.total_budget_per_host``): the
+    spend rides the checkpointed state table, so it holds across
+    batches and restarts.
 
     ``out_dir`` is the plan's checkpoint directory: batch ``b`` commits
     generation ``b`` as ``gen=<b>/`` (pages, crawl_log, frontier_sched =
     the deferred rows, seen_exact) plus ``manifest_gen=<b>.json``. Every
-    batch reads its state from the latest manifest, so a restarted
+    batch reads its state from the latest manifest (``CrawlPlan.load``,
+    the bucketed state table, so only the seeds shuffle), so a restarted
     stream resumes exactly where the last committed batch left off, and
     a batch whose manifest already exists (``foreachBatch`` replays the
     last uncommitted batch after a crash) is skipped instead of written
-    twice. ``checkpoint_dir`` is Spark's own stream checkpoint.
+    twice. A batch plans in the stream's own session, under the loop's
+    shuffle width and AQE confs. ``checkpoint_dir`` is Spark's own
+    stream checkpoint.
 
     ``trigger`` passes through to ``writeStream.trigger`` — default
     ``{"availableNow": True}`` (drain-and-stop, deterministic tests);
@@ -180,7 +190,7 @@ def stream_crawl(
     """
     plan = CrawlPlan(spark, CrawlConfig(
         web=web or SynthWebConfig(), n_host_buckets=n_host_buckets,
-        checkpoint_dir=out_dir,
+        checkpoint_dir=out_dir, total_budget_per_host=total_budget_per_host,
     ))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -189,17 +199,18 @@ def stream_crawl(
         b = batch_df.agg(F.max("seed_rank").alias("hi"), F.count("*").alias("n")).first()
         if not b["n"]:
             return
-        st, deferred = plan.load() or (CrawlState(state=plan.robots, next_priority=0), None)
-        new = canonize(batch_df, n_host_buckets, keep_host=False).withColumn(
-            "priority", F.col("seed_rank").cast("long")
-        )
-        nxt, _counts, st = plan.step(new, deferred, st, b["hi"] + 1)
-        fetched = fetch_scheduled(
-            nxt.filter("status = 'scheduled'").withColumn("generation", F.lit(batch_id)),
-            plan.cfg.web,
-        ).persist()
-        plan.commit(batch_id, fetched, nxt.filter("status = 'deferred'"), st)
-        fetched.unpersist()
+        with plan._session_conf(batch_df.sparkSession):
+            st, deferred = plan.load() or (CrawlState(state=plan.robots, next_priority=0), None)
+            new = canonize(batch_df, n_host_buckets, keep_host=False).withColumn(
+                "priority", F.col("seed_rank").cast("long")
+            )
+            nxt, _counts, st = plan.step(new, deferred, st, b["hi"] + 1)
+            fetched = fetch_scheduled(
+                nxt.filter("status = 'scheduled'").withColumn("generation", F.lit(batch_id)),
+                plan.cfg.web,
+            ).persist()
+            plan.commit(batch_id, fetched, nxt.filter("status = 'deferred'"), st)
+            fetched.unpersist()
 
     query = (
         spark.readStream.schema("url string, seed_rank long")
@@ -211,77 +222,6 @@ def stream_crawl(
         .start()
     )
     return query, plan
-
-
-def stream_politeness_schedule(
-    spark: SparkSession,
-    seeds_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    web: SynthWebConfig | None = None,
-    n_host_buckets: int = 8,
-    total_budget_per_host: int = 50,
-):
-    """Custom stateful streaming operator: per-host lifetime quota kept in
-    Structured Streaming state (``applyInPandasWithState``, grouped by
-    host) — the streaming twin of CrawlConfig.total_budget_per_host.
-
-    Each arriving seed file is a micro-batch; every host's cumulative
-    scheduled count lives in the state store (survives restarts via the
-    checkpoint), and a batch schedules at most the remaining quota per
-    host, lowest priority first, stamping host_rank continuing from the
-    state. Reference analog: API-key daily budgets that persist across
-    cron runs (/root/reference/youtube/get_youtube_v1.2.py:53-63).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    web = web or SynthWebConfig()
-
-    src = (
-        spark.readStream.schema("url string, seed_rank long")
-        .parquet(seeds_dir)
-    )
-    frontier = canonize(src, n_host_buckets).withColumn(
-        "priority", F.col("seed_rank").cast("long")
-    )
-
-    out_schema = (
-        "host string, url_canon string, url_hash long, priority long, host_rank int"
-    )
-
-    def schedule(key, pdfs, state: GroupState):
-        (host,) = key
-        used = state.get[0] if state.exists else 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(["priority", "url_hash"], kind="stable")
-        take = max(0, total_budget_per_host - used)
-        sched = batch.iloc[:take]
-        if len(sched):
-            yield pd.DataFrame({
-                "host": sched["host"],
-                "url_canon": sched["url_canon"],
-                "url_hash": sched["url_hash"],
-                "priority": sched["priority"],
-                "host_rank": (used + pd.RangeIndex(1, len(sched) + 1)).astype("int32"),
-            })
-        state.update((used + len(sched),))
-
-    scheduled = frontier.groupBy("host").applyInPandasWithState(
-        schedule,
-        outputStructType=out_schema,
-        stateStructType="used long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    query = (
-        scheduled.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return query
 
 
 def stream_dedup_exact(

@@ -155,24 +155,31 @@ def test_checkpoint_layout(spark, tmp_path, quota):
         assert ("q" in tags) == (quota is not None), (g, tags)
 
 
-@pytest.mark.parametrize("quota", [None, 9])
-def test_checkpointed_step_reads_bucketed_state(spark, tmp_path, monkeypatch, quota):
-    """From generation 1 on, each step's fused cogroup reads the state
-    table the last generation committed, bucketed on host_bucket, as it
-    is, with or without a lifetime quota: only the candidate side
-    shuffles."""
+def _fused_step_plans(monkeypatch) -> list[str]:
+    """Capture the planned query of every fused step ``CrawlPlan.step``
+    runs from here on, planned when the step builds it: under the loop's
+    own shuffle width and AQE confs."""
     import crawlers_spark.plans.crawl as crawl_mod
 
     real_fused, plans = crawl_mod.fused_filter_schedule, []
 
     def capture(*args, **kw):
         out = real_fused(*args, **kw)
-        # planned here, under the loop's own shuffle width and AQE confs
         plans.append(out._sc._jvm.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "simple"))
         return out
 
     monkeypatch.setattr(crawl_mod, "fused_filter_schedule", capture)
+    return plans
+
+
+@pytest.mark.parametrize("quota", [None, 9])
+def test_checkpointed_step_reads_bucketed_state(spark, tmp_path, monkeypatch, quota):
+    """From generation 1 on, each step's fused cogroup reads the state
+    table the last generation committed, bucketed on host_bucket, as it
+    is, with or without a lifetime quota: only the candidate side
+    shuffles."""
+    plans = _fused_step_plans(monkeypatch)
     web = SynthWebConfig(n_hosts=4, base_pages=20)
     cfg = CrawlConfig(
         web=web, n_host_buckets=4, max_generations=3,
@@ -184,6 +191,77 @@ def test_checkpointed_step_reads_bucketed_state(spark, tmp_path, monkeypatch, qu
     assert len(plans) == 4
     for g, plan in ((1, plans[2]), (2, plans[3])):
         assert plan.count("Exchange hashpartitioning") == 1, (g, plan)
+
+
+@pytest.mark.parametrize("quota", [None, 9])
+def test_resumed_step_reads_bucketed_state(spark, tmp_path, monkeypatch, quota):
+    """A resumed run reads the committed state through the bucketed table
+    that ``load`` declares over the checkpoint files, so with no catalog
+    entry left (a fresh process) every resumed step still shuffles only
+    its candidates, and the crawl still equals the serial oracle."""
+    web = SynthWebConfig(n_hosts=4, base_pages=20, transient_fail_mod=3)
+    seeds_pdf = make_seed_urls(web, 10)
+    seeds = spark.createDataFrame(seeds_pdf)
+    # a quote in the path: the table's LOCATION literal must escape it
+    ckpt = str(tmp_path / "it's ckpt")
+
+    def plan(gens):
+        return CrawlPlan(spark, CrawlConfig(
+            web=web, n_host_buckets=4, max_generations=gens, checkpoint_dir=ckpt,
+            total_budget_per_host=quota,
+        ))
+
+    first = plan(2).run(seeds)
+    resumed = plan(3)
+    spark.sql(f"DROP TABLE IF EXISTS {resumed._table(1)}")
+    plans = _fused_step_plans(monkeypatch)
+    res = resumed.run(seeds, resume=True)
+    assert res.generations == 5
+    assert len(plans) == 3
+    for g, p in enumerate(plans, start=2):
+        assert p.count("Exchange hashpartitioning") == 1, (g, p)
+
+    ora = crawl_serial(web, seeds_pdf, max_generations=5, total_budget_per_host=quota)
+    eng = pd.concat([first.crawl_log.toPandas(), res.crawl_log.toPandas()])
+    eng = eng.sort_values(["generation", "priority"])
+    orl = ora.crawl_log.sort_values("order_rank")
+    assert eng["url_canon"].tolist() == orl["url_canon"].tolist()
+    assert eng["ok"].tolist() == orl["ok"].tolist()
+
+
+def test_stream_batch_reads_bucketed_state(spark, tmp_path, monkeypatch):
+    """Every stream_crawl batch after the first reads the state the last
+    batch committed, bucketed, as it is: the batch plans in the stream's
+    own session under the loop's confs, so only the seeds shuffle."""
+    import os
+    import re
+
+    from crawlers_spark.streaming.micro_batch import stream_crawl
+
+    web = SynthWebConfig(n_hosts=4, base_pages=20)
+    seeds_dir = tmp_path / "seeds"
+    seeds_dir.mkdir()
+    seeds = make_seed_urls(web, 30)
+    for b in range(3):
+        f = seeds_dir / f"batch{b}.parquet"
+        seeds.iloc[10 * b:10 * (b + 1)].to_parquet(f)
+        os.utime(f, (1_700_000_000 + b, 1_700_000_000 + b))  # file order = batch order
+    plans = _fused_step_plans(monkeypatch)
+    query, plan = stream_crawl(
+        spark, str(seeds_dir), str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        web=web, n_host_buckets=4,
+    )
+    query.awaitTermination(180)
+    assert query.exception() is None
+    assert plan.latest_manifest()["generation"] == 2
+    assert len(plans) == 3
+    for b, p in enumerate(plans):
+        # the loop's confs: AQE off, exchanges n_host_buckets wide (the
+        # stream's session has AQE on and the test session's width, 8)
+        assert "AdaptiveSparkPlan" not in p, (b, p)
+        assert set(re.findall(r"hashpartitioning\(host_bucket#\d+, (\d+)\)", p)) == {"4"}, (b, p)
+        if b:
+            assert p.count("Exchange hashpartitioning") == 1, (b, p)
 
 
 @pytest.mark.parametrize("quota,retries", [(9, 0), (9, 2), (None, 2)])
@@ -457,8 +535,6 @@ def test_auto_salts_decision():
     skew[7] = 200_000
     s = auto_salts(skew, 32)
     assert 4 <= s <= 16, s
-    # base > 1 is a floor
-    assert auto_salts(even, 32, base=4) == 4
 
 
 def test_spark_submit_pyfiles_launch(tmp_path):

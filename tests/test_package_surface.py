@@ -19,7 +19,6 @@ ALLOWLIST = {
     "streaming.micro_batch.stream_event_sessions": _STREAM_REASON,
     "streaming.micro_batch.stream_view_purchase_join": _STREAM_REASON,
     "streaming.micro_batch.stream_crawl": _STREAM_REASON,
-    "streaming.micro_batch.stream_politeness_schedule": _STREAM_REASON,
     "streaming.micro_batch.stream_dedup_exact": _STREAM_REASON,
     "streaming.micro_batch.stream_heavy_hitters": _STREAM_REASON,
     "streaming.micro_batch.stream_circuit_breaker": _STREAM_REASON,
